@@ -336,7 +336,9 @@ def minhash_dedup(
     # width (user-specified counts are exempt from AQE coalescing)
     # keeps the verify at full parallelism, and dropDuplicates on data
     # already hash-partitioned by its keys adds no second exchange.
-    npart = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
+    from ..session import shuffle_width
+
+    npart = shuffle_width(df.sparkSession)
     cand = (
         grouped.filter(F.size("ids") >= 2)
         .select("ids")

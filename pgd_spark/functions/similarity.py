@@ -448,7 +448,9 @@ def embedding_neardup_pairs(
     # byte-based coalescing would run the verify on a handful of
     # tasks), then dropDuplicates — already hash-partitioned on its
     # keys at that width, so it adds no second exchange
-    npart = int(items.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
+    from ..session import shuffle_width
+
+    npart = shuffle_width(items.sparkSession)
     cand = (
         grouped.filter(F.size("ids") >= 2)
         .select("ids")

@@ -41,7 +41,7 @@ def approximate_macro_counts(
     if fraction == 1.0:
         return macro_counts(g, strategy=strategy)
 
-    n, m = g.num_vertices(), g.num_edges()
+    m = g.num_edges()
     denom = 1_000_003  # prime → near-uniform buckets
     limit = int(fraction * denom)
 
@@ -63,6 +63,9 @@ def approximate_macro_counts(
     scount = sampled.count()
     if scount == 0:
         raise ValueError("sample empty — raise fraction")
+    # read after the kernel pass: the broadcast strategy records the
+    # vertex count from its driver-side edge copy (no degrees shuffle)
+    n = g.num_vertices()
 
     totals = _scaled_closure(g, sampled, n, m, scale=m / scount)
     totals["_sample_fraction"] = scount / m if m else 1.0

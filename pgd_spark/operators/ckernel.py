@@ -12,9 +12,10 @@ graphs.
 
 The shared object is compiled ONCE PER MACHINE with the system C
 compiler into a content-keyed /dev/shm (or tmpdir) path guarded by the
-same lock-dir + done-marker protocol as kernels._shared_state; every
-worker process dlopens the same file.  Hosts without a working C
-toolchain fall back to the numpy kernels transparently
+same lock-dir + done-marker protocol as kernels._shared_state, plus a
+``.failed`` marker so that after a failed compile every other process
+falls back at once; every worker process dlopens the same file.  Hosts
+without a working C toolchain fall back to the numpy kernels transparently
 (:func:`available` returns False and edge_graphlet_counts keeps its
 old impl choice).
 """
@@ -99,14 +100,21 @@ def _compiler() -> str | None:
     return None
 
 
+def _so_path() -> str:
+    """Content-keyed path of the compiled library; its lock and markers
+    share the prefix."""
+    token = hashlib.md5(_C_SOURCE.encode()).hexdigest()[:16]
+    tmp = "/dev/shm" if os.path.isdir("/dev/shm") else tempfile.gettempdir()
+    return os.path.join(tmp, f"pgd_ckernel_{token}.so")
+
+
 def _build_lib() -> ctypes.CDLL | None:
     cc = _compiler()
     if cc is None:
         return None
-    token = hashlib.md5(_C_SOURCE.encode()).hexdigest()[:16]
-    tmp = "/dev/shm" if os.path.isdir("/dev/shm") else tempfile.gettempdir()
-    so_path = os.path.join(tmp, f"pgd_ckernel_{token}.so")
+    so_path = _so_path()
     done = so_path + ".done"
+    failed = so_path + ".failed"
     if not os.path.exists(done):
         lock = so_path + ".lock"
         try:
@@ -122,6 +130,10 @@ def _build_lib() -> ctypes.CDLL | None:
                     timeout=120,
                 )
             except (subprocess.SubprocessError, OSError):
+                # the lock stays without a .done: mark the failure so
+                # every waiter gives up at once instead of after 30 s
+                with open(failed, "w") as f:
+                    f.write("failed")
                 return None
             with open(done, "w") as f:
                 f.write("ok")
@@ -129,6 +141,8 @@ def _build_lib() -> ctypes.CDLL | None:
             for _ in range(300):
                 if os.path.exists(done):
                     break
+                if os.path.exists(failed):
+                    return None
                 time.sleep(0.1)
             else:
                 return None

@@ -92,6 +92,11 @@ def _edge_counts_broadcast(
     src = edges_pdf["src"].to_numpy(dtype=np.int64)
     dst = edges_pdf["dst"].to_numpy(dtype=np.int64)
     m = len(src)
+    # the driver holds every canonical edge, so the graph sizes are
+    # free here: later num_vertices()/num_edges() calls (macro closure,
+    # CC's shuffle width) then launch no degrees shuffle or count job
+    g._m = m
+    g._n = len(np.unique(np.concatenate([src, dst])))
     if impl == "auto":
         # compiled C kernel first (measured 9x the numpy loop on the
         # dense sf0.1 co-purchase graph, 100x the vectorized kernel on
@@ -102,17 +107,20 @@ def _edge_counts_broadcast(
         if _c_available():
             impl = "c"
         else:
-            n_est = len(np.unique(np.concatenate([src, dst]))) or 1
-            impl = "vec" if 2.0 * m / n_est <= VEC_MAX_AVG_DEG else "loop"
+            impl = "vec" if 2.0 * m / max(g._n, 1) <= VEC_MAX_AVG_DEG else "loop"
     # broadcast raw edge arrays; each worker builds + caches the CSR
     # and the degree-oriented edge view locally (in parallel).  The
     # parallelized input is just a row-id range -- no edge bytes cross
     # a shuffle, so repeat passes cost only kernel time.
     bc = g.spark.sparkContext.broadcast((src, dst))
     par = g.spark.sparkContext.defaultParallelism
-    # 4 tasks per core: per-task kernel work is skewed (edges sorted by
-    # src cluster hub regions together), so finer tasks cut the tail
-    ids = g.spark.range(0, m, 1, min(4 * par, max(m, 1)))
+    # one task per core, one wave: every Python task pays a fixed
+    # worker set-up before its first row (~0.3 CPU-s measured, see
+    # tools/udf_task_overhead.py), and the hash permutation in
+    # kernels._oriented_state already gives each contiguous id slice a
+    # uniform mix of light and hub edges, so finer tasks only add
+    # set-up, not balance
+    ids = g.spark.range(0, m, 1, max(min(par, m), 1))
     out = ids.mapInPandas(
         make_range_kernel(bc, sample=sample, impl=impl),
         schema="v long, u long, deg_v long, deg_u long, tri long, cliq long, cyc long",
@@ -142,11 +150,18 @@ def _dist_plumbing(g: Graph):
     carrying the hub's full array) in ONE partition.  Beyond the
     budget: SHUFFLE_HASH (sort-merge would sort the m-row edge stream
     for no benefit).  Edge keys cost ~64 B/edge all-in."""
-    npart = int(g.spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    from pgd_spark.session import parse_size_bytes, shuffle_width
+
+    npart = shuffle_width(g.spark)
     m = g.num_edges()
     n = max(g.num_vertices(), 1)
+    # the conf may carry a size suffix ('64m') — Spark's size grammar
     bcast_bytes = max(
-        int(g.spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "67108864")), 0
+        parse_size_bytes(
+            g.spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "67108864"),
+            default=64 * 1024 * 1024,
+        ),
+        0,
     )
     small_adj = 48 * n + 16 * 2 * m <= bcast_bytes
 

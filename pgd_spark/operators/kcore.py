@@ -34,9 +34,12 @@ def kcore(
 
     Job economy (same pattern as pregel.connected_components):
     ``check_interval`` rounds chain lazily into one job, and the
-    fixpoint check is an Observation metric on the LAST chained round's
-    delta — the h-index iterate is non-increasing, so a zero last-round
-    delta proves the fixpoint no matter where in the block it landed.
+    fixpoint check is an Observation metric on the BLOCK's delta: the
+    last chained round's output joined back against the block's input.
+    The h-index iterate is non-increasing, so a zero block delta means
+    no round in the block changed anything — the block's input was
+    already the fixpoint.  A graph that converges inside a block is
+    therefore confirmed by one more block.
 
     ``checkpoint_dir`` gives kcore the same durable resume its pregel
     siblings have: each block's state lands in a (format-indirected)

@@ -80,7 +80,9 @@ def auto_npart(spark, work_rows: int, target_rows_per_part: int = 400_000) -> in
     measured 3× slower than right-sized ones on a 20k-vertex graph.
     With AQE suspended inside the loops (see :func:`suspend_aqe`) this
     static sizing replaces AQE's runtime coalescing."""
-    conf_npart = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    from pgd_spark.session import shuffle_width
+
+    conf_npart = shuffle_width(spark)
     want = max(1, -(-work_rows // max(target_rows_per_part, 1)))
     return max(1, min(conf_npart, want))
 
@@ -367,13 +369,19 @@ def connected_components(
     SoCC'14): O(log n) rounds regardless of diameter — the web-scale
     path for high-diameter graphs.
 
-    Job economy: ``check_interval`` rounds chain LAZILY into ONE Spark
-    job (forced to 1 when ``checkpoint_dir`` makes per-round durability
-    the point), and the fixpoint check rides the materializing action
-    as an ``Observation`` metric on the LAST chained round's delta —
-    zero extra jobs per round.  A fixpoint of hashmin stays fixed, so
-    "last round changed nothing" ⇔ fixpoint regardless of where inside
-    the block it was reached; the loop may run up to interval-1 no-op
+    Job economy: the first round needs no exchange — from identity
+    labels, min over N(v) ∪ {v} is ``array_min`` of v's own adjacency
+    row — so the loop starts from those round-1 labels.  Then
+    ``check_interval`` rounds chain LAZILY into ONE Spark job (forced
+    to 1 when ``checkpoint_dir`` makes per-round durability the
+    point), and the fixpoint check rides the materializing action as
+    an ``Observation`` metric on the LAST chained round's delta, taken
+    inside that round's own aggregation: the self entry of N(v) ∪ {v}
+    brings v's input label to v's reducer as ``prev``, so no join back
+    to the block input is needed.  A fixpoint of hashmin stays fixed,
+    so "last round changed nothing" ⇔ fixpoint regardless of where
+    inside the block it was reached, and a graph that converges inside
+    a block stops at that block's end — at most interval-1 no-op
     rounds past true convergence (cheap: they're chained, not jobs).
     """
     if algorithm == "two_phase":
@@ -413,9 +421,10 @@ def _cc_hashmin_loop(g, adj_plus, max_iter, checkpoint_dir, log, check_interval)
     spark = g.spark
     labels, start_it = _latest_checkpoint(spark, checkpoint_dir, "cc")
     if labels is None:
-        # derived from adj_plus so round 1's join starts co-partitioned
-        labels = adj_plus.select("v", F.col("v").alias("component"))
-        start_it = -1
+        # round 0 from identity labels is each row's own min — derived
+        # from adj_plus so round 1's join starts co-partitioned
+        labels = adj_plus.select("v", F.array_min("nbrs").alias("component"))
+        start_it = 0
 
     k = 1 if checkpoint_dir else max(check_interval, 1)
     it = start_it + 1
@@ -423,23 +432,31 @@ def _cc_hashmin_loop(g, adj_plus, max_iter, checkpoint_dir, log, check_interval)
         t0 = time.time()
         kk = min(k, max_iter - it)
         cur = labels
-        for _ in range(kk):
+        for r in range(kk):
             # SHUFFLE_HASH on the LABELS side: the n-row label
             # vector is the hash-build side; the adjacency rows
             # stream through the probe (same choice as pagerank)
-            cur = (
-                cur.select("v", "component").hint("SHUFFLE_HASH")
-                .join(adj_plus, "v")
-                .select(F.explode("nbrs").alias("v"), "component")
-                .groupBy("v")
-                .agg(F.min("component").alias("component"))
-            )
-        # last-round delta: join the block's input back (2× the
-        # chain's leaves total — NOT per round — still linear)
+            rows = cur.select("v", "component").hint("SHUFFLE_HASH").join(adj_plus, "v")
+            if r < kk - 1:
+                cur = (
+                    rows.select(F.explode("nbrs").alias("v"), "component")
+                    .groupBy("v")
+                    .agg(F.min("component").alias("component"))
+                )
+            else:
+                # last round: position 0 of N(v) ∪ {v} is v itself, so
+                # the self entry carries v's input label to its own
+                # reducer as `prev` — the delta needs no join back
+                cur = (
+                    rows.select(F.posexplode("nbrs").alias("pos", "v"), "component")
+                    .groupBy("v")
+                    .agg(
+                        F.min("component").alias("component"),
+                        F.min(F.when(F.col("pos") == 0, F.col("component"))).alias("prev"),
+                    )
+                )
         obs = Observation()
-        observed = cur.join(
-            labels.select("v", F.col("component").alias("prev")), "v"
-        ).observe(
+        observed = cur.observe(
             obs, F.sum((F.col("component") != F.col("prev")).cast("long")).alias("changed")
         ).select("v", "component")
         labels = _cut_lineage(observed, checkpoint_dir, "cc", it + kk - 1, log)

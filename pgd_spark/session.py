@@ -127,6 +127,17 @@ def parse_size_bytes(size: str | int, default: int) -> int:
         return default
 
 
+def shuffle_width(spark) -> int:
+    """``spark.sql.shuffle.partitions`` as a positive int.  A value that
+    is not an integer (e.g. ``"auto"``, which some platforms accept)
+    falls back to ``defaultParallelism`` instead of crashing the
+    operator that sizes its exchanges from it."""
+    try:
+        return max(int(spark.conf.get("spark.sql.shuffle.partitions")), 1)
+    except (TypeError, ValueError):
+        return max(spark.sparkContext.defaultParallelism, 1)
+
+
 def get_spark(
     app_name: str = "pgd_spark",
     master: str | None = None,
