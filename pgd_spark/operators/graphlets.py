@@ -96,7 +96,8 @@ def _edge_counts_broadcast(
     # free here: later num_vertices()/num_edges() calls (macro closure,
     # CC's shuffle width) then launch no degrees shuffle or count job
     g._m = m
-    g._n = len(np.unique(np.concatenate([src, dst])))
+    if g._n is None:
+        g._n = len(np.unique(np.concatenate([src, dst])))
     if impl == "auto":
         # compiled C kernel first (measured 9x the numpy loop on the
         # dense sf0.1 co-purchase graph, 100x the vectorized kernel on

@@ -369,16 +369,16 @@ def connected_components(
     SoCC'14): O(log n) rounds regardless of diameter — the web-scale
     path for high-diameter graphs.
 
-    Job economy: the first round needs no exchange — from identity
-    labels, min over N(v) ∪ {v} is ``array_min`` of v's own adjacency
-    row — so the loop starts from those round-1 labels.  Then
-    ``check_interval`` rounds chain LAZILY into ONE Spark job (forced
-    to 1 when ``checkpoint_dir`` makes per-round durability the
-    point), and the fixpoint check rides the materializing action as
-    an ``Observation`` metric on the LAST chained round's delta, taken
-    inside that round's own aggregation: the self entry of N(v) ∪ {v}
-    brings v's input label to v's reducer as ``prev``, so no join back
-    to the block input is needed.  A fixpoint of hashmin stays fixed,
+    Job economy: round 0 needs no exchange — from identity labels,
+    min over N(v) ∪ {v} is ``array_min`` of v's own adjacency row — so
+    it rides the first block on top of that block's rounds.  Each
+    block chains ``check_interval`` rounds LAZILY into ONE Spark job
+    (forced to 1 when ``checkpoint_dir`` makes per-round durability
+    the point), and the fixpoint check rides the materializing action
+    as an ``Observation`` metric on the LAST chained round's delta,
+    taken inside that round's own aggregation: the self entry of
+    N(v) ∪ {v} brings v's input label to v's reducer as ``prev``, so
+    no join back to the block input is needed.  A fixpoint of hashmin stays fixed,
     so "last round changed nothing" ⇔ fixpoint regardless of where
     inside the block it was reached, and a graph that converges inside
     a block stops at that block's end — at most interval-1 no-op
@@ -420,41 +420,40 @@ def connected_components(
 def _cc_hashmin_loop(g, adj_plus, max_iter, checkpoint_dir, log, check_interval):
     spark = g.spark
     labels, start_it = _latest_checkpoint(spark, checkpoint_dir, "cc")
-    if labels is None:
-        # round 0 from identity labels is each row's own min — derived
-        # from adj_plus so round 1's join starts co-partitioned
-        labels = adj_plus.select("v", F.array_min("nbrs").alias("component"))
-        start_it = 0
-
     k = 1 if checkpoint_dir else max(check_interval, 1)
     it = start_it + 1
     while it < max_iter:
         t0 = time.time()
+        if labels is None:
+            # round 0 from identity labels needs no exchange: min over
+            # N(v) ∪ {v} is the row's own array_min, with the identity
+            # label as `prev`.  It rides the first block on top of its
+            # k rounds (alone when max_iter=1), derived from adj_plus so
+            # the next round's join starts co-partitioned
+            cur = adj_plus.select(
+                "v", F.array_min("nbrs").alias("component"), F.col("v").alias("prev")
+            )
+            it += 1
+        else:
+            cur = labels
         kk = min(k, max_iter - it)
-        cur = labels
-        for r in range(kk):
-            # SHUFFLE_HASH on the LABELS side: the n-row label
-            # vector is the hash-build side; the adjacency rows
-            # stream through the probe (same choice as pagerank)
-            rows = cur.select("v", "component").hint("SHUFFLE_HASH").join(adj_plus, "v")
-            if r < kk - 1:
-                cur = (
-                    rows.select(F.explode("nbrs").alias("v"), "component")
-                    .groupBy("v")
-                    .agg(F.min("component").alias("component"))
+        for _ in range(kk):
+            # SHUFFLE_HASH on the LABELS side: the n-row label vector
+            # is the hash-build side; the adjacency rows stream through
+            # the probe (same choice as pagerank).  Position 0 of
+            # N(v) ∪ {v} is v itself, so the self entry carries v's
+            # input label to its own reducer as `prev` — the block's
+            # delta needs no join back to its input
+            cur = (
+                cur.select("v", "component").hint("SHUFFLE_HASH")
+                .join(adj_plus, "v")
+                .select(F.posexplode("nbrs").alias("pos", "v"), "component")
+                .groupBy("v")
+                .agg(
+                    F.min("component").alias("component"),
+                    F.min(F.when(F.col("pos") == 0, F.col("component"))).alias("prev"),
                 )
-            else:
-                # last round: position 0 of N(v) ∪ {v} is v itself, so
-                # the self entry carries v's input label to its own
-                # reducer as `prev` — the delta needs no join back
-                cur = (
-                    rows.select(F.posexplode("nbrs").alias("pos", "v"), "component")
-                    .groupBy("v")
-                    .agg(
-                        F.min("component").alias("component"),
-                        F.min(F.when(F.col("pos") == 0, F.col("component"))).alias("prev"),
-                    )
-                )
+            )
         obs = Observation()
         observed = cur.observe(
             obs, F.sum((F.col("component") != F.col("prev")).cast("long")).alias("changed")

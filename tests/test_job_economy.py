@@ -127,6 +127,23 @@ def test_cc_stops_inside_the_converging_block(spark):
     assert log.entries[0]["changed"] == 0
 
 
+def test_cc_single_round_budget_checkpoints_round_zero(spark, tmp_path):
+    from pgd_spark.operators.pregel import IterationLog, connected_components
+
+    g = make_graph(spark, [(i, i + 1) for i in range(6)])
+    ck = str(tmp_path / "ck")
+    log = IterationLog()
+    with pytest.warns(RuntimeWarning, match="did not converge"):
+        got = {r["v"]: r["component"] for r in connected_components(
+            g, checkpoint_dir=ck, max_iter=1, log=log).collect()}
+    # round 0 alone: each vertex takes the min of its closed neighbourhood
+    assert got == {v: max(v - 1, 0) for v in range(7)}
+    assert sorted(os.listdir(os.path.join(ck, "cc"))) == ["iter=00000", "metrics.jsonl"]
+    assert [(e["iter"], e["rounds"], e["changed"]) for e in log.entries] == [(0, 0, 6)]
+    resumed = {r["v"]: r["component"] for r in connected_components(g, checkpoint_dir=ck).collect()}
+    assert resumed == {v: 0 for v in range(7)}
+
+
 def test_cc_labels_match_networkx(spark):
     from pgd_spark.operators.pregel import IterationLog, connected_components
 
