@@ -23,6 +23,8 @@ than k string hashes (one rolling hash per token, k affine maps).
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import Column, DataFrame, functions as F
 
 _NORM = lambda c: F.lower(F.regexp_replace(F.trim(c), r"\s+", " "))  # noqa: E731
@@ -34,28 +36,27 @@ HASH_BASE = 1009
 
 
 def char_hash(
-    col: Column, base: int = HASH_BASE, mod: int = HASH_MOD, length: int | None = None
+    col: str, base: int = HASH_BASE, mod: int = HASH_MOD, length: int | None = None
 ) -> Column:
-    """Polynomial rolling hash of a string column into [0, mod):
-    fold(chars, acc -> (acc*base + codepoint) % mod), no Python.
+    """Polynomial rolling hash of the string column named ``col`` into
+    [0, mod): fold(chars, acc -> (acc*base + codepoint) % mod), no
+    Python.
 
     With ``length`` (the usual string length, e.g. the n of n-gram
     shingles) the fold unrolls to ``length`` nested codegen'd
     ascii(substr) expressions — measurably faster than the
     higher-order-function path, same value; strings of any other
     length fall back to the fold (a document shorter than n yields one
-    short shingle)."""
-    fold = F.aggregate(
-        F.split(col, ""),
-        F.lit(0).cast("long"),
-        lambda acc, c: (acc * base + F.ascii(c)) % mod,
-    )
-    if length is not None:
-        acc = F.lit(0).cast("long")
-        for i in range(1, length + 1):
-            acc = (acc * base + F.ascii(F.substring(col, i, 1))) % mod
-        return F.when(F.length(col) == length, acc).otherwise(fold)
-    return fold
+    short shingle).  The expression is rendered as SQL text and sent
+    to the JVM in one ``F.expr`` (see README, "Driver-side expression
+    building")."""
+    fold = f"aggregate(split({col}, ''), 0L, (acc, c) -> (acc * {base} + ascii(c)) % {mod})"
+    if length is None:
+        return F.expr(fold)
+    acc = "0L"
+    for i in range(1, length + 1):
+        acc = f"(({acc}) * {base} + ascii(substring({col}, {i}, 1))) % {mod}"
+    return F.expr(f"CASE WHEN length({col}) = {length} THEN {acc} ELSE {fold} END")
 
 
 def hash_family(k: int, seed: int = 42, mod: int = HASH_MOD) -> list[tuple[int, int]]:
@@ -99,15 +100,20 @@ def _spread(df: DataFrame) -> DataFrame:
 
 def _shingles(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
     """[id, shingle] distinct character n-grams of normalized text.
-    Generated JVM-side: sequence + transform + explode, no Python."""
+    Generated JVM-side, no Python: the text is normalized ONCE into a
+    column, then sequence + transform(substr) + explode cut it.  Inside
+    the transform lambda the normalization would re-run its regex over
+    the whole document at every shingle position (O(L²) per document);
+    the lambda reads the projected column instead, which the optimizer
+    keeps as its own projection because the plan references it twice."""
     df = _spread(df)
-    norm = _NORM(F.col(text_col))
+    normed = df.select(F.col(id_col).alias("id"), _NORM(F.col(text_col)).alias("_t"))
     grams = F.transform(
-        F.sequence(F.lit(1), F.greatest(F.length(norm) - n + 1, F.lit(1))),
-        lambda i: norm.substr(i, F.lit(n)),
+        F.sequence(F.lit(1), F.greatest(F.length("_t") - n + 1, F.lit(1))),
+        lambda i: F.col("_t").substr(i, F.lit(n)),
     )
     return (
-        df.select(F.col(id_col).alias("id"), F.explode(F.array_distinct(grams)).alias("shingle"))
+        normed.select("id", F.explode(F.array_distinct(grams)).alias("shingle"))
         .filter(F.length("shingle") > 0)
     )
 
@@ -178,16 +184,22 @@ def ngram_jaccard_pairs(
     return _materialize_and_release(out, sh)
 
 
+def _minhash_aggs(num_hashes: int, seed: int) -> list[Column]:
+    """The k affine minhash aggregations h_i = min((a_i*rh + b_i) % mod)
+    over a shingle table's ``rh`` column, each one SQL string (one
+    ``F.expr``, not a dozen Column calls)."""
+    return [
+        F.expr(f"min(({a} * rh + {b}) % {HASH_MOD}) AS h{i}")
+        for i, (a, b) in enumerate(hash_family(num_hashes, seed))
+    ]
+
+
 def _sig_from_shingles(sh: DataFrame, num_hashes: int, seed: int) -> DataFrame:
     """[id, sig] from a prepared [id, shingle, rh] table: k affine maps
     of the one rolling hash, k min-aggregations in one shuffle."""
-    fam = hash_family(num_hashes, seed)
-    mins = [
-        F.min((F.lit(a) * F.col("rh") + F.lit(b)) % HASH_MOD).alias(f"h{i}")
-        for i, (a, b) in enumerate(fam)
-    ]
-    sig = sh.groupBy("id").agg(*mins)
-    return sig.select("id", F.array(*[f"h{i}" for i in range(num_hashes)]).alias("sig"))
+    sig = sh.groupBy("id").agg(*_minhash_aggs(num_hashes, seed))
+    cols = ", ".join(f"h{i}" for i in range(num_hashes))
+    return sig.select("id", F.expr(f"array({cols}) AS sig"))
 
 
 def minhash_signatures(
@@ -201,9 +213,7 @@ def minhash_signatures(
     """[id, sig: array<long>] — k independent minhashes; ONE rolling
     hash per shingle, then k affine maps (a_i*h+b_i mod 2^31-1) — k
     aggregations in one shuffle, portable arithmetic throughout."""
-    sh = _shingles(df, id_col, text_col, n).withColumn(
-        "rh", char_hash(F.col("shingle"), length=n)
-    )
+    sh = _shingles(df, id_col, text_col, n).withColumn("rh", char_hash("shingle", length=n))
     return _sig_from_shingles(sh, num_hashes, seed)
 
 
@@ -258,36 +268,31 @@ def minhash_dedup(
     Executes eagerly and releases its caches before returning (see
     _materialize_and_release)."""
     rows = num_hashes // bands
-    sh = _shingles(df, id_col, text_col, n).withColumn(
-        "rh", char_hash(F.col("shingle"), length=n)
-    )
-    fam = hash_family(num_hashes, seed)
-    mins = [
-        F.min((F.lit(a) * F.col("rh") + F.lit(b)) % HASH_MOD).alias(f"h{i}")
-        for i, (a, b) in enumerate(fam)
-    ]
+    sh = _shingles(df, id_col, text_col, n).withColumn("rh", char_hash("shingle", length=n))
+    # largest code point among a shingle's n characters
+    cps = ", ".join(f"ascii(substring(shingle, {i}, 1))" for i in range(1, n + 1))
     # ONE pass over the shingle stream computes, per doc: the k
     # minhashes, the int verify-set, its size, AND the injectivity-
     # proof stats — the shingle table is never materialized or cached.
     per_doc = (
         sh.groupBy("id")
         .agg(
-            *mins,
+            *_minhash_aggs(num_hashes, seed),
             F.collect_list("rh").alias("shs"),
             F.count(F.lit(1)).alias("sz"),
             F.sum((F.length("shingle") != n).cast("long")).alias("_bad"),
-            F.max(
-                F.greatest(*[F.ascii(F.substring("shingle", i + 1, 1)) for i in range(n)])
-            ).alias("_mcp"),
+            F.expr(f"max(greatest({cps})) AS _mcp"),
         )
         .cache()
     )
-    # materialize BEFORE the final job: three of its subtrees (the
-    # banded candidate side and both verify broadcast builds) read
-    # per_doc concurrently, and racing an unpopulated cache recomputes
-    # the whole 128-min aggregation once per subtree.  The count is
-    # also the doc count the broadcast sizing below needs.
-    n_docs = per_doc.count()
+    # ONE stats job fills the cache before the final job: three of its
+    # subtrees (the banded candidate side and both verify broadcast
+    # builds) read per_doc concurrently, and racing an unpopulated cache
+    # recomputes the whole k-min aggregation once per subtree.  A global
+    # aggregate scans every partition, so this job caches all of
+    # per_doc while it reads the doc count (for the broadcast sizing
+    # below) and the injectivity stats.
+    #
     # int-verify proof: when every shingle has length n, every code
     # point is < HASH_BASE, and HASH_BASE**n < HASH_MOD, the rolling
     # hash is a base-HASH_BASE positional encoding with no modular wrap
@@ -295,30 +300,23 @@ def minhash_dedup(
     # over the strings.  Otherwise fall back to the corpus-wide
     # distinct-count equality check (exact; one extra shingle pass),
     # and failing that re-aggregate STRING verify sets (the r6 plan).
-    n_rows, bad_len, max_cp = per_doc.agg(
-        F.sum("sz"), F.sum("_bad"), F.max("_mcp")
+    n_docs, n_rows, bad_len, max_cp = per_doc.agg(
+        F.count(F.lit(1)), F.sum("sz"), F.sum("_bad"), F.max("_mcp")
     ).first()
     n_rows = n_rows or 0  # empty corpus → null sums
     use_int = (bad_len or 0) == 0 and (max_cp or 0) < HASH_BASE and HASH_BASE**n < HASH_MOD
     if not use_int:
         d_sh, d_rh = sh.agg(F.countDistinct("shingle"), F.countDistinct("rh")).first()
         use_int = d_sh == d_rh
-    banded = per_doc.select(
-        "id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(bi).alias("band"),
-                        F.array(
-                            *[F.col(f"h{bi * rows + r}") for r in range(rows)]
-                        ).alias("bucket"),
-                    )
-                    for bi in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select("id", "bb.band", "bb.bucket")
+    bands_sql = ", ".join(
+        "named_struct('band', {}, 'bucket', array({}))".format(
+            bi, ", ".join(f"h{bi * rows + r}" for r in range(rows))
+        )
+        for bi in range(bands)
+    )
+    banded = per_doc.select("id", F.expr(f"explode(array({bands_sql})) AS bb")).select(
+        "id", "bb.band", "bb.bucket"
+    )
     grouped = banded.groupBy("band", "bucket").agg(
         F.array_sort(F.collect_list("id")).alias("ids")
     )
@@ -405,25 +403,27 @@ def simhash_signatures(
     entirely JVM-side: one rolling hash per token, bit b's indicator is
     the parity of the b-th affine map of it ((a_b*h+c_b mod 2^31-1)
     mod 2, 64 independent-parity bits), each token contributes ±1 per
-    bit, sign of the bit-sum sets the signature bit."""
-    fam = hash_family(64, seed)
+    bit, sign of the bit-sum sets the signature bit.  The 64 bit sums
+    and the signature go to the JVM as SQL text, one ``F.expr`` each."""
     df = _spread(df)
     toks = df.select(
         F.col(id_col).alias("id"),
         F.explode(F.split(_NORM(F.col(text_col)), " ")).alias("tok"),
-    ).filter(F.length("tok") > 0).withColumn("rh", char_hash(F.col("tok")))
+    ).filter(F.length("tok") > 0).withColumn("rh", char_hash("tok"))
     sums = toks.groupBy("id").agg(
         *[
-            F.sum(
-                F.when(((F.lit(a) * F.col("rh") + F.lit(b_)) % HASH_MOD) % 2 == 1, 1).otherwise(-1)
-            ).alias(f"b{b}")
-            for b, (a, b_) in enumerate(fam)
+            F.expr(
+                f"sum(CASE WHEN (({a} * rh + {c}) % {HASH_MOD}) % 2 = 1 THEN 1 ELSE -1 END) AS b{b}"
+            )
+            for b, (a, c) in enumerate(hash_family(64, seed))
         ]
     )
-    sig = F.lit(0).cast("long")
-    for b in range(64):
-        sig = sig + F.when(F.col(f"b{b}") > 0, F.lit(1).cast("long") * (2**b if b < 63 else -(2**63))).otherwise(0)
-    return sums.select("id", sig.alias("simhash"))
+    # bit 63 carries the sign: its weight is -2^63 in a signed long
+    sig = " + ".join(
+        ["0L"]
+        + [f"CASE WHEN b{b} > 0 THEN 1L * {2**b if b < 63 else -(2**63)} ELSE 0 END" for b in range(64)]
+    )
+    return sums.select("id", F.expr(f"{sig} AS simhash"))
 
 
 def simhash_dedup(
@@ -515,8 +515,10 @@ def dup_clusters(
     Doc ids must be integral (int64 vertex ids — the link-graph
     contract).  Non-integral ids would silently cast to null, drop
     every edge, and report keep=1 for all docs (ADVICE r5), so the id
-    columns are schema-checked up front; map string ids through a
-    vertex map (sources.transcripts.vertex_map pattern) first.
+    columns are schema-checked up front: integer types and
+    ``decimal(p,0)`` with p <= 18 pass, anything else (wider decimals
+    included) raises TypeError; map string ids through a vertex map
+    (sources.transcripts.vertex_map pattern) first.
     """
     from ..graph import Graph
     from ..operators.pregel import connected_components
@@ -526,13 +528,16 @@ def dup_clusters(
         ((docs, id_col, "docs"),) if docs is not None else ()
     ):
         # Spark resolves column names case-insensitively — match that
-        # here, and accept decimal(p,0) ids (they cast to long cleanly);
-        # a truly absent column gets its own error (ADVICE r6)
+        # here; a truly absent column gets its own error (ADVICE r6).
+        # decimal(p,0) ids cast to long cleanly only while p <= 18: a
+        # wider decimal can hold values past the int64 range, which the
+        # cast would silently drop
         dtypes = {k.lower(): v for k, v in frame.dtypes}
         dt = dtypes.get(col.lower())
         if dt is None:
             raise TypeError(f"dup_clusters: column {col!r} not found in {what}")
-        if dt not in integral and not (dt.startswith("decimal(") and dt.endswith(",0)")):
+        dec = re.fullmatch(r"decimal\((\d+),0\)", dt)
+        if dt not in integral and not (dec and int(dec.group(1)) <= 18):
             raise TypeError(
                 f"dup_clusters requires integral (int64) doc ids; {what}.{col} "
                 f"is {dt!r} — map ids to int64 first (e.g. a vertex map)"

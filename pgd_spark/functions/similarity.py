@@ -26,7 +26,7 @@
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import Column, DataFrame, Window, functions as F
 
 
 def _infer_dim(items: DataFrame, vec_col: str) -> int:
@@ -63,6 +63,10 @@ def _norm(a):
 # call) dwarfs the interpreted-fold evaluation it saves at any batch
 # size this operator sees; the interpreted HOF cost is ~10 CPU-s at
 # sf0.1 and the real wins were structural (see embedding_neardup_pairs).
+# The sign-LSH bucket (_bucket_expr) is rendered as SQL text, not built
+# Column by Column, only to cross the py4j gateway once per expression:
+# the text parses to the SAME zip_with + aggregate tree over the same
+# double literals, so this note still holds for it.
 
 
 def _cosine(ivec, qvec, inorm, qnorm):
@@ -110,12 +114,38 @@ def _hyperplanes(dim: int, bits: int, table: int, seed: int = 42) -> list[list[f
     return rng.standard_normal((bits, dim)).tolist()
 
 
-def _bucket_expr(vec_col, planes: list[list[float]]):
-    bucket = F.lit(0).cast("long")
+def _double_sql(x: float) -> str:
+    """A double as SQL literal text that parses back to the same bits
+    (repr is the shortest round-tripping decimal; D makes it DOUBLE)."""
+    return repr(float(x)) + "D"
+
+
+def _bucket_expr(vec: str, planes: list[list[float]]) -> str:
+    """SQL text of one table's sign-bit bucket over the array column
+    named ``vec``: bit i is set iff dot(vec, planes[i]) > 0, the dot
+    being _dot's zip_with + aggregate fold.  One 64-value plane costs
+    ~260 gateway commands as F.array(F.lit(...)) Columns and none as
+    text."""
+    terms = ["0L"]
     for i, p in enumerate(planes):
-        arr = F.array(*[F.lit(float(x)) for x in p])
-        bucket = bucket + F.when(_dot(vec_col, arr) > 0, F.lit(2**i).cast("long")).otherwise(0)
-    return bucket
+        coef = ", ".join(map(_double_sql, p))
+        dot = (
+            f"aggregate(zip_with({vec}, array({coef}), "
+            "(x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), 0.0D, (acc, x) -> acc + x)"
+        )
+        terms.append(f"CASE WHEN {dot} > 0 THEN {2**i}L ELSE 0 END")
+    return " + ".join(terms)
+
+
+def _explode_buckets(vec: str, dim: int, bits: int, tables: int, seed: int) -> Column:
+    """One row per LSH table: explode(array(struct(t, b))) with b the
+    sign-bit bucket of the array column ``vec`` in table t.  The whole
+    expression goes to the JVM as one SQL string."""
+    structs = ", ".join(
+        f"named_struct('t', {t}, 'b', {_bucket_expr(vec, _hyperplanes(dim, bits, t, seed))})"
+        for t in range(tables)
+    )
+    return F.expr(f"explode(array({structs})) AS bk")
 
 
 def lsh_cosine_topk(
@@ -138,24 +168,17 @@ def lsh_cosine_topk(
     the None fallback runs a driver-side first() just to measure it."""
     if dim is None:
         dim = _infer_dim(items, vec_col)
-    buckets_i = []
-    buckets_q = []
-    for t in range(tables):
-        planes = _hyperplanes(dim, bits, t, seed)
-        buckets_i.append(F.struct(F.lit(t).alias("t"), _bucket_expr(F.col(vec_col), planes).alias("b")))
-        buckets_q.append(F.struct(F.lit(t).alias("t"), _bucket_expr(F.col("qvec"), planes).alias("b")))
     it = items.select(
-        F.col(id_col),
-        F.col(vec_col).alias("ivec"),
-        _norm(F.col(vec_col)).alias("inorm"),
-        F.explode(F.array(*buckets_i)).alias("bk"),
+        F.col(id_col), F.col(vec_col).alias("ivec"), _norm(F.col(vec_col)).alias("inorm")
+    ).select(
+        id_col, "ivec", "inorm", _explode_buckets("ivec", dim, bits, tables, seed)
     ).select(id_col, "ivec", "inorm", "bk.t", "bk.b")
     qs = queries.select(
         F.col(query_id_col),
         F.col(vec_col).alias("qvec"),
         _norm(F.col(vec_col)).alias("qnorm"),
     ).select(
-        query_id_col, "qvec", "qnorm", F.explode(F.array(*buckets_q)).alias("bk")
+        query_id_col, "qvec", "qnorm", _explode_buckets("qvec", dim, bits, tables, seed)
     ).select(query_id_col, "qvec", "qnorm", "bk.t", "bk.b")
     cand = (
         it.join(F.broadcast(qs), ["t", "b"])
@@ -417,17 +440,9 @@ def embedding_neardup_pairs(
 
     if dim is None:
         dim = _infer_dim(items, vec_col)
-    bucket_structs = []
-    for t in range(tables):
-        planes = _hyperplanes(dim, bits, t, seed)
-        bucket_structs.append(
-            F.struct(F.lit(t).alias("t"), _bucket_expr(F.col(vec_col), planes).alias("b"))
-        )
     hashed = (
-        items.select(
-            F.col(id_col).alias("id"),
-            F.explode(F.array(*bucket_structs)).alias("bk"),
-        )
+        items.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
+        .select("id", _explode_buckets("v", dim, bits, tables, seed))
         .select(F.col("bk.t").alias("t"), F.col("bk.b").alias("b"), "id")
         .cache()
     )
