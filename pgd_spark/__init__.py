@@ -11,8 +11,9 @@ not ship but a 100 TB deployment needs.
 
 Design: DataFrame-first.  Catalyst plans everything relational; the
 counting kernels are either pure JVM array expressions (distributed
-path) or Arrow-batched numpy kernels over a broadcast CSR (small-graph
-path), mirroring PGD's own CSR-vs-dense-adjacency strategy split
+path) or a compiled C mark-array kernel on driver threads over a
+driver-side CSR (small-graph path, PGD's own shared-memory loop),
+mirroring PGD's own CSR-vs-dense-adjacency strategy split
 (graphlet_core.cpp:602-611).
 """
 

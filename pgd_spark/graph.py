@@ -50,6 +50,9 @@ class Graph:
         self._oriented: DataFrame | None = None
         self._n: int | None = None
         self._m: int | None = None
+        # driver-side census state (kernels._oriented_state), built by
+        # the broadcast census on first use and reused by later ones
+        self._census_state: tuple | None = None
         # file-order lineage, set by readers with track_lineage=True:
         # lineage = [src, dst, first_row]; fa_map = [orig, id] (the
         # reference's first-appearance dense ids, cpp:393-403)
@@ -235,3 +238,4 @@ class Graph:
         for df in (self._degrees, self._adjacency, self._oriented):
             if df is not None:
                 df.unpersist()
+        self._census_state = None

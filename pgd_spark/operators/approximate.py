@@ -21,6 +21,7 @@ from __future__ import annotations
 
 import math
 
+import numpy as np
 from pyspark.sql import functions as F
 
 from pgd_spark.graph import Graph
@@ -29,6 +30,18 @@ from pgd_spark.graph import Graph
 SAMPLE_MOD = 2_147_483_647
 SAMPLE_A1 = 1_103_515_245
 SAMPLE_A2 = 2_654_435_761
+
+
+def sample_mask(v: np.ndarray, u: np.ndarray, denom: int, limit: int, seed: int) -> np.ndarray:
+    """numpy twin of the Column filter in approximate_macro_counts (the
+    broadcast census applies it on the driver): keep edge iff
+    h(min, max) % denom < limit.  All products stay < 2^63, so the int64
+    arithmetic needs no wraparound semantics."""
+    M = np.int64(SAMPLE_MOD)
+    a = np.minimum(v, u).astype(np.int64) % M
+    b = np.maximum(v, u).astype(np.int64) % M
+    h = (a * np.int64(SAMPLE_A1) % M + b * np.int64(SAMPLE_A2) % M + np.int64(seed)) % M
+    return (h % np.int64(denom)) < np.int64(limit)
 
 
 def approximate_macro_counts(

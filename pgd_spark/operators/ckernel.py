@@ -5,19 +5,18 @@ time in per-edge Python/numpy call overhead and the rest in multi-pass
 array temporaries; the same mark-array algorithm as a single C loop
 runs the measured ~136 us/edge of the sf0.1 co-purchase graph at
 ~5-10 us/edge (guide §4.2: do the heavy lifting in native code inside
-the batch function).  Semantics are identical to the numpy kernels —
+the batch function).  Semantics are identical to the numpy kernel —
 exact integer counting, no floating point — so outputs are equal by
-construction; tests/test_kernels_vec.py asserts parity on random
-graphs.
+construction; tests/test_kernels.py asserts parity on random graphs.
 
-The shared object is compiled ONCE PER MACHINE with the system C
-compiler into a content-keyed /dev/shm (or tmpdir) path guarded by the
-same lock-dir + done-marker protocol as kernels._shared_state, plus a
-``.failed`` marker so that after a failed compile every other process
-falls back at once; every worker process dlopens the same file.  Hosts
-without a working C toolchain fall back to the numpy kernels transparently
-(:func:`available` returns False and edge_graphlet_counts keeps its
-old impl choice).
+The shared object is compiled ONCE PER MACHINE AND USER with the system
+C compiler into a content- and uid-keyed /dev/shm (or tmpdir) path.  A
+lock dir (mode 0700) makes one process compile while the others wait
+for a ``.done`` marker; a ``.failed`` marker makes every other process
+fall back at once after a failed compile.  The library is loaded only
+when this user owns it and nobody else can write it.  Hosts without a
+working C toolchain fall back to the numpy loop (:func:`get_lib`
+returns None and warns once per process).
 """
 
 from __future__ import annotations
@@ -28,6 +27,7 @@ import os
 import subprocess
 import tempfile
 import time
+import warnings
 
 import numpy as np
 
@@ -101,11 +101,21 @@ def _compiler() -> str | None:
 
 
 def _so_path() -> str:
-    """Content-keyed path of the compiled library; its lock and markers
-    share the prefix."""
+    """Content- and uid-keyed path of the compiled library; its lock and
+    markers share the prefix."""
     token = hashlib.md5(_C_SOURCE.encode()).hexdigest()[:16]
     tmp = "/dev/shm" if os.path.isdir("/dev/shm") else tempfile.gettempdir()
-    return os.path.join(tmp, f"pgd_ckernel_{token}.so")
+    return os.path.join(tmp, f"pgd_ckernel_{token}_u{os.getuid()}.so")
+
+
+def _owned_by_me(path: str) -> bool:
+    """True when this user owns ``path`` and no group or other user can
+    write it: only such a library is safe to load from a shared dir."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return False
+    return st.st_uid == os.getuid() and st.st_mode & 0o022 == 0
 
 
 def _build_lib() -> ctypes.CDLL | None:
@@ -118,7 +128,7 @@ def _build_lib() -> ctypes.CDLL | None:
     if not os.path.exists(done):
         lock = so_path + ".lock"
         try:
-            os.mkdir(lock)  # atomic: first process compiles
+            os.mkdir(lock, 0o700)  # atomic: first process compiles
             src_path = so_path + ".c"
             with open(src_path, "w") as f:
                 f.write(_C_SOURCE)
@@ -129,6 +139,7 @@ def _build_lib() -> ctypes.CDLL | None:
                     capture_output=True,
                     timeout=120,
                 )
+                os.chmod(so_path, 0o700)
             except (subprocess.SubprocessError, OSError):
                 # the lock stays without a .done: mark the failure so
                 # every waiter gives up at once instead of after 30 s
@@ -148,6 +159,8 @@ def _build_lib() -> ctypes.CDLL | None:
                 return None
         except OSError:
             return None
+    if not _owned_by_me(so_path):
+        return None
     try:
         lib = ctypes.CDLL(so_path)
     except OSError:
@@ -163,7 +176,9 @@ def _build_lib() -> ctypes.CDLL | None:
 
 def get_lib() -> ctypes.CDLL | None:
     """The compiled kernel library, or None when no toolchain works.
-    Compile result is cached per process; the .so per machine."""
+    Compile result is cached per process; the .so per machine and user.
+    The first None warns: the census then runs the much slower numpy
+    loop."""
     global _LIB, _TRIED
     if not _TRIED:
         _TRIED = True
@@ -171,11 +186,13 @@ def get_lib() -> ctypes.CDLL | None:
             _LIB = None
         else:
             _LIB = _build_lib()
+        if _LIB is None:
+            warnings.warn(
+                "no C toolchain: the census runs the numpy loop kernel on one driver thread",
+                RuntimeWarning,
+                stacklevel=2,
+            )
     return _LIB
-
-
-def available() -> bool:
-    return get_lib() is not None
 
 
 def edge_counts_batch_c(
@@ -199,9 +216,9 @@ def edge_counts_batch_c(
     cyc = np.zeros(k, dtype=np.int64)
     if ind is None:
         ind = np.zeros(n, dtype=np.int8)
+    # the census passes contiguous int64 arrays: these are no-copy checks
     v_arr = np.ascontiguousarray(v_arr, dtype=np.int64)
     u_arr = np.ascontiguousarray(u_arr, dtype=np.int64)
-    # mmap'd CSR state arrives C-contiguous; these are no-copy checks
     indptr = np.ascontiguousarray(indptr, dtype=np.int64)
     indices = np.ascontiguousarray(indices, dtype=np.int64)
     lib.pgd_edge_counts(k, v_arr, u_arr, indptr, indices, ind, tri, cliq, cyc)

@@ -15,9 +15,12 @@ Semantics match the reference macro/micro loops exactly
 Two physical strategies (like the reference's dense-adjacency vs CSR
 split at cpp:602-611):
 
-* ``broadcast``   — graph fits comfortably in one executor: broadcast
-  CSR arrays once, run an Arrow-batched numpy kernel per edge
-  partition.  No shuffles beyond the initial degree/orientation pass.
+* ``broadcast``   — graph fits comfortably in the driver: collect the
+  canonical edges once per Graph, build the degree-oriented CSR there,
+  and run the compiled mark-array kernel (the numpy loop without a C
+  toolchain) on driver threads, PGD's own shared-memory loop.  The
+  per-edge rows go to Spark as one local DataFrame: no Python worker,
+  no shuffle.
 * ``distributed`` — pure Catalyst plan: adjacency-array joins +
   ``array_intersect`` for triangles; explode-and-join second hops for
   cliques and cycles.  Everything stays JVM-side (no Python), shuffles
@@ -42,31 +45,23 @@ def edge_graphlet_counts(
     strategy: str = "auto",
     broadcast_max_edges: int = 5_000_000,
     edge_predicate=None,
-    kernel_impl: str = "auto",
     distributed_hot_threshold: int | None = None,
     max_exact_degree: int = 20_000_000,
 ) -> DataFrame:
     """Per-edge raw kernel counts [v,u,deg_v,deg_u,tri,cliq,cyc].
 
-    ``auto`` picks broadcast when the graph is small enough to ship to
-    every executor (the common case for anything that fits PGD itself),
-    else the fully distributed Catalyst plan.
+    ``auto`` picks broadcast when the graph has at most
+    ``broadcast_max_edges`` edges (the common case for anything that
+    fits PGD itself), else the fully distributed Catalyst plan.
 
     ``edge_predicate`` (Column over v/u/deg_v/deg_u) restricts which
     edges get kernel passes — counts stay relative to the FULL graph
     (used by the edge-sampled approximate census).
-
-    ``kernel_impl`` (broadcast strategy only): "auto" picks the
-    compiled C mark kernel when a toolchain is available (ckernel.py;
-    measured 9x the numpy loop on dense, 100x the vectorized path on
-    sparse), else the whole-batch vectorized numpy kernel when avg
-    degree ≤ kernels.VEC_MAX_AVG_DEG (measured 5-13x faster there) and
-    the per-edge mark kernel above it; "c"/"vec"/"loop" force one.
     """
     if strategy == "auto":
         strategy = "broadcast" if g.num_edges() <= broadcast_max_edges else "distributed"
     if strategy == "broadcast":
-        return _edge_counts_broadcast(g, edge_predicate, impl=kernel_impl)
+        return _edge_counts_broadcast(g, edge_predicate)
     if strategy == "distributed":
         return _edge_counts_distributed(
             g,
@@ -82,50 +77,43 @@ def _edge_counts_broadcast(
     g: Graph,
     edge_predicate=None,
     sample: tuple[int, int, int] | None = None,
-    impl: str = "auto",
 ) -> DataFrame:
+    """Driver placement: collect the canonical edges once per Graph, run
+    the C kernel on driver threads, hand the per-edge rows to Spark.
+
+    ``sample`` = (denom, limit, seed) keeps only the edges the
+    approximate census's portable hash selects (approximate.sample_mask)
+    before any kernel work."""
     import numpy as np
+    import pyarrow as pa
 
-    from pgd_spark.operators.kernels import VEC_MAX_AVG_DEG, make_range_kernel
+    from pgd_spark.operators.kernels import _oriented_state, count_edges
 
-    edges_pdf = g.edges.toPandas()
-    src = edges_pdf["src"].to_numpy(dtype=np.int64)
-    dst = edges_pdf["dst"].to_numpy(dtype=np.int64)
-    m = len(src)
-    # the driver holds every canonical edge, so the graph sizes are
-    # free here: later num_vertices()/num_edges() calls (macro closure,
-    # CC's shuffle width) then launch no degrees shuffle or count job
-    g._m = m
-    if g._n is None:
-        g._n = len(np.unique(np.concatenate([src, dst])))
-    if impl == "auto":
-        # compiled C kernel first (measured 9x the numpy loop on the
-        # dense sf0.1 co-purchase graph, 100x the vectorized kernel on
-        # a 2M-edge sparse graph — see ckernel.py); hosts without a C
-        # toolchain keep the old numpy density heuristic
-        from pgd_spark.operators.ckernel import available as _c_available
+    if g._census_state is None:
+        edges_pdf = g.edges.toPandas()
+        src = edges_pdf["src"].to_numpy(dtype=np.int64)
+        dst = edges_pdf["dst"].to_numpy(dtype=np.int64)
+        g._census_state = _oriented_state(src, dst)
+        # the driver holds every canonical edge, so the graph sizes are
+        # free here: later num_vertices()/num_edges() calls (macro
+        # closure, CC's shuffle width) then launch no degrees shuffle or
+        # count job
+        g._m = len(src)
+        g._n = len(g._census_state[0])
+    uniq, indptr, indices, v, u, deg = g._census_state
+    if sample is not None:
+        from pgd_spark.operators.approximate import sample_mask
 
-        if _c_available():
-            impl = "c"
-        else:
-            impl = "vec" if 2.0 * m / max(g._n, 1) <= VEC_MAX_AVG_DEG else "loop"
-    # broadcast raw edge arrays; each worker builds + caches the CSR
-    # and the degree-oriented edge view locally (in parallel).  The
-    # parallelized input is just a row-id range -- no edge bytes cross
-    # a shuffle, so repeat passes cost only kernel time.
-    bc = g.spark.sparkContext.broadcast((src, dst))
+        keep = sample_mask(uniq[v], uniq[u], *sample)
+        v, u = v[keep], u[keep]
     par = g.spark.sparkContext.defaultParallelism
-    # one task per core, one wave: every Python task pays a fixed
-    # worker set-up before its first row (~0.3 CPU-s measured, see
-    # tools/udf_task_overhead.py), and the hash permutation in
-    # kernels._oriented_state already gives each contiguous id slice a
-    # uniform mix of light and hub edges, so finer tasks only add
-    # set-up, not balance
-    ids = g.spark.range(0, m, 1, max(min(par, m), 1))
-    out = ids.mapInPandas(
-        make_range_kernel(bc, sample=sample, impl=impl),
-        schema="v long, u long, deg_v long, deg_u long, tri long, cliq long, cyc long",
-    )
+    tri, cliq, cyc = count_edges(v, u, indptr, indices, len(uniq), threads=par)
+    cols = [uniq[v], uniq[u], deg[v], deg[u], tri, cliq, cyc]
+    # Spark keeps a small table as a local relation scanned in up to
+    # defaultParallelism partitions, and splits a large one into a
+    # partition per 10k-row Arrow batch: coalesce to one per core
+    table = pa.table(dict(zip(EDGE_COUNT_COLS, cols)))
+    out = g.spark.createDataFrame(table).coalesce(max(min(par, len(v)), 1))
     if edge_predicate is not None:
         # generic Column predicates evaluate on the kernel OUTPUT --
         # pass `sample` instead when the point is to skip kernel work

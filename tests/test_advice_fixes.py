@@ -4,15 +4,12 @@
    N1/N8/N9/N10 terms) in the large-n regime it exists for;
 2. kcore / hashmin-CC raise on max_iter exhaustion instead of silently
    returning non-converged (wrong) results;
-3. _shared_state waiters fall back to a private build after the wait
-   budget instead of np.load()-ing files that may not exist;
-4. zero-norm embeddings must not rank first in cosine top-k (NaN sorts
+3. zero-norm embeddings must not rank first in cosine top-k (NaN sorts
    above every double in Spark);
-5. ngram_jaccard max_postings is a no-op when no posting list exceeds
+4. ngram_jaccard max_postings is a no-op when no posting list exceeds
    it, and genuinely bounds hot shingles when one does.
 """
 
-import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -89,32 +86,6 @@ def test_pagerank_warns_on_non_convergence(spark):
     g = make_graph(spark, path_graph(8))
     with pytest.warns(RuntimeWarning, match="did not reach tol"):
         pagerank(g, tol=1e-12, max_iter=2)
-
-
-# ------------------------------------------------------ shared-state fallback
-def test_shared_state_falls_back_after_wait_timeout(tmp_path):
-    import pgd_spark.operators.kernels as K
-
-    class FakeBC:
-        value = (
-            np.array([0, 0, 1], dtype=np.int64),
-            np.array([1, 2, 2], dtype=np.int64),
-        )
-
-    token = "testlockstale"
-    import os
-
-    base = os.path.join(
-        "/dev/shm" if os.path.isdir("/dev/shm") else str(tmp_path), f"pgd_csr_{token}"
-    )
-    os.makedirs(base + ".lock", exist_ok=True)  # stale lock, no .done
-    try:
-        state = K._shared_state(token, FakeBC(), wait_secs=0.3)
-        uniq, indptr, indices, ov, ou, deg, adjbm, ekeys_pad = state
-        assert list(uniq) == [0, 1, 2]
-        assert list(deg) == [2, 2, 2]
-    finally:
-        os.rmdir(base + ".lock")
 
 
 # ------------------------------------------------------------ zero-norm guard

@@ -11,9 +11,9 @@ one reused Python worker runs every task back to back, and prints:
   its archive's directory on the first import after the caches were
   invalidated — and the CPU one invalidate-then-import costs there.
 
-This is the measurement behind sizing the broadcast census to one
-task per core (graphlets._edge_counts_broadcast).  Re-check it on a
-new host or Python version:
+This is the measurement behind sizing Python UDF jobs to one task per
+core (README, "Python UDF tasks").  Re-check it on a new host or
+Python version:
 
     python tools/udf_task_overhead.py [--tasks 16]
 """
