@@ -23,8 +23,6 @@ than k string hashes (one rolling hash per token, k affine maps).
 
 from __future__ import annotations
 
-import re
-
 from pyspark.sql import Column, DataFrame, functions as F
 
 _NORM = lambda c: F.lower(F.regexp_replace(F.trim(c), r"\s+", " "))  # noqa: E731
@@ -520,28 +518,12 @@ def dup_clusters(
     included) raises TypeError; map string ids through a vertex map
     (sources.transcripts.vertex_map pattern) first.
     """
-    from ..graph import Graph
+    from ..graph import Graph, check_id_columns
     from ..operators.pregel import connected_components
 
-    integral = ("tinyint", "smallint", "int", "bigint")
-    for frame, col, what in ((pairs, a_col, "pairs"), (pairs, b_col, "pairs")) + (
-        ((docs, id_col, "docs"),) if docs is not None else ()
-    ):
-        # Spark resolves column names case-insensitively — match that
-        # here; a truly absent column gets its own error (ADVICE r6).
-        # decimal(p,0) ids cast to long cleanly only while p <= 18: a
-        # wider decimal can hold values past the int64 range, which the
-        # cast would silently drop
-        dtypes = {k.lower(): v for k, v in frame.dtypes}
-        dt = dtypes.get(col.lower())
-        if dt is None:
-            raise TypeError(f"dup_clusters: column {col!r} not found in {what}")
-        dec = re.fullmatch(r"decimal\((\d+),0\)", dt)
-        if dt not in integral and not (dec and int(dec.group(1)) <= 18):
-            raise TypeError(
-                f"dup_clusters requires integral (int64) doc ids; {what}.{col} "
-                f"is {dt!r} — map ids to int64 first (e.g. a vertex map)"
-            )
+    check_id_columns(pairs, (a_col, b_col), "pairs")
+    if docs is not None:
+        check_id_columns(docs, (id_col,), "docs")
 
     g = Graph.from_edges(pairs, src=a_col, dst=b_col)
     cc = connected_components(g, checkpoint_dir=checkpoint_dir)

@@ -19,14 +19,51 @@ work and is the primary skew mitigation for hub vertices.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame, functions as F
 
 SRC, DST = "src", "dst"
 
+_INTEGRAL = ("tinyint", "smallint", "int", "bigint")
+
+
+def check_id_columns(df: DataFrame, cols, what: str) -> None:
+    """Raise TypeError unless every column in ``cols`` casts to long
+    without loss: integer types and ``decimal(p,0)`` with p <= 18 pass.
+    Anything else would cast to null (strings, wider decimals past the
+    int64 range) or truncate (fractional types), silently dropping or
+    merging edges.  Names resolve case-insensitively, like Spark's."""
+    dtypes = {k.lower(): v for k, v in df.dtypes}
+    for col in cols:
+        dt = dtypes.get(col.lower())
+        if dt is None:
+            raise TypeError(f"column {col!r} not found in {what}")
+        dec = re.fullmatch(r"decimal\((\d+),0\)", dt)
+        if dt not in _INTEGRAL and not (dec and int(dec.group(1)) <= 18):
+            raise TypeError(
+                f"ids must be integral (int64); {what}.{col} is {dt!r} — map "
+                "ids to int64 first (e.g. a vertex map)"
+            )
+
+
+def local_frame(spark, cols: dict) -> DataFrame:
+    """Driver-side numpy columns → one Arrow-backed DataFrame.  Spark
+    keeps a small table as a local relation scanned in up to
+    defaultParallelism partitions, and splits a large one into a
+    partition per 10k-row Arrow batch: coalesce to one per core."""
+    import pyarrow as pa
+
+    table = pa.table(cols)
+    par = spark.sparkContext.defaultParallelism
+    return spark.createDataFrame(table).coalesce(max(min(par, table.num_rows), 1))
+
 
 def normalize_edges(df: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
     """Arbitrary (possibly directed / weighted / dirty) edge rows →
-    canonical undirected simple-edge table [src < dst], long ids."""
+    canonical undirected simple-edge table [src < dst], long ids.
+    The id columns must be integral (:func:`check_id_columns`)."""
+    check_id_columns(df, (src, dst), "edges")
     s = F.col(src).cast("long")
     d = F.col(dst).cast("long")
     return (
@@ -42,9 +79,14 @@ def normalize_edges(df: DataFrame, src: str = "src", dst: str = "dst") -> DataFr
 class Graph:
     """An undirected simple graph backed by a canonical edge DataFrame."""
 
-    def __init__(self, edges: DataFrame, already_canonical: bool = False):
+    def __init__(
+        self, edges: DataFrame, already_canonical: bool = False, owns_edges: bool = False
+    ):
         self.spark = edges.sparkSession
         self.edges = edges if already_canonical else normalize_edges(edges)
+        # a constructor that persisted ``edges`` for this Graph hands
+        # their release to unpersist()
+        self._owns_edges = owns_edges
         self._degrees: DataFrame | None = None
         self._adjacency: DataFrame | None = None
         self._oriented: DataFrame | None = None
@@ -52,6 +94,7 @@ class Graph:
         self._m: int | None = None
         # driver-side census state (kernels._oriented_state), built by
         # the broadcast census on first use and reused by later ones
+        # (connected_components reads its CSR too)
         self._census_state: tuple | None = None
         # file-order lineage, set by readers with track_lineage=True:
         # lineage = [src, dst, first_row]; fa_map = [orig, id] (the
@@ -235,7 +278,10 @@ class Graph:
         return Graph(e), mapping
 
     def unpersist(self) -> None:
-        for df in (self._degrees, self._adjacency, self._oriented):
+        """Release the derived tables, the driver census state, and the
+        edge table when this Graph persisted it."""
+        owned = (self.edges,) if self._owns_edges else ()
+        for df in (self._degrees, self._adjacency, self._oriented) + owned:
             if df is not None:
                 df.unpersist()
         self._census_state = None

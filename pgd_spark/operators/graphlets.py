@@ -83,10 +83,15 @@ def _edge_counts_broadcast(
 
     ``sample`` = (denom, limit, seed) keeps only the edges the
     approximate census's portable hash selects (approximate.sample_mask)
-    before any kernel work."""
-    import numpy as np
-    import pyarrow as pa
+    before any kernel work.
 
+    Without an ``edge_predicate`` the output frame carries the exact
+    macro term sums (:func:`_macro_sums`) as ``_pgd_macro_sums``, so
+    macro_counts over it launches no aggregation.  ``persist()`` returns
+    the same frame, so the tag survives it; any derived frame has none."""
+    import numpy as np
+
+    from pgd_spark.graph import local_frame
     from pgd_spark.operators.kernels import _oriented_state, count_edges
 
     if g._census_state is None:
@@ -108,16 +113,16 @@ def _edge_counts_broadcast(
         v, u = v[keep], u[keep]
     par = g.spark.sparkContext.defaultParallelism
     tri, cliq, cyc = count_edges(v, u, indptr, indices, len(uniq), threads=par)
-    cols = [uniq[v], uniq[u], deg[v], deg[u], tri, cliq, cyc]
-    # Spark keeps a small table as a local relation scanned in up to
-    # defaultParallelism partitions, and splits a large one into a
-    # partition per 10k-row Arrow batch: coalesce to one per core
-    table = pa.table(dict(zip(EDGE_COUNT_COLS, cols)))
-    out = g.spark.createDataFrame(table).coalesce(max(min(par, len(v)), 1))
+    dv, du = deg[v], deg[u]
+    cols = [uniq[v], uniq[u], dv, du, tri, cliq, cyc]
+    out = local_frame(g.spark, dict(zip(EDGE_COUNT_COLS, cols)))
     if edge_predicate is not None:
         # generic Column predicates evaluate on the kernel OUTPUT --
         # pass `sample` instead when the point is to skip kernel work
-        out = out.filter(edge_predicate)
+        return out.filter(edge_predicate)
+    n, m = g._n, g._m
+    if n * n * m < _LONG_SUMS_BOUND:
+        out._pgd_macro_sums = (n, m, _macro_sums(n, m, dv, du, tri, cliq, cyc))
     return out
 
 
@@ -508,6 +513,53 @@ MACRO_KEYS = [
 ]
 
 
+#: n*n*m below this, every macro term sum fits a long exactly (Σ over m
+#: edges of terms < n²/2), and so does Spark's long-regime aggregation
+_LONG_SUMS_BOUND = 1 << 62
+
+
+def _macro_sums(n: int, m: int, dv, du, tri, cliq, cyc) -> dict:
+    """The exact column sums of :func:`_macro_terms` over the census
+    edges, as Python ints, from numpy int64 arrays.
+
+    Every term is a polynomial of degree <= 2 in tri and the 2-star ends
+    a = deg_v-tri-1, b = deg_u-tri-1 (star = a+b; with ts = tri+star,
+    disconn = (n-2) - ts), so the fifteen sums follow from five first
+    and six second moments: one pass each, no per-term array.  Under
+    n*n*m < 2^62 each moment is < m*n² and exact in int64; the algebra
+    runs in Python ints."""
+    import numpy as np
+
+    a = dv - tri - 1
+    b = du - tri - 1
+    k = len(tri)
+    T, A, B = (int(x.sum()) for x in (tri, a, b))
+    TT, AA, BB, AB, TA, TB = (
+        int(np.dot(x, y)) for x, y in ((tri, tri), (a, a), (b, b), (a, b), (tri, a), (tri, b))
+    )
+    S, SS, TS = A + B, AA + 2 * AB + BB, TA + TB  # Σstar, Σstar², Σtri·star
+    U, UU = T + S, TT + 2 * TS + SS  # Σts, Σts²
+    c = n - 2
+    D, DD = k * c - U, k * c * c - 2 * c * U + UU  # Σdisconn, Σdisconn²
+    return {
+        "t_tri": T,
+        "t_star": S,
+        "t_disc": D,
+        "t_cliq": int(cliq.sum()),
+        "t_cyc": int(cyc.sum()),
+        "n1": (UU - U) // 2,
+        "n2": (SS - S) // 2,
+        "n3": (TT - T) // 2,
+        "n4": TS,
+        "n5": AB,
+        "n6": (AA - A + BB - B) // 2,
+        "n7": k * (m - 1) - S - 2 * T,
+        "n8": (DD - D) // 2,
+        "n9": c * S - (TS + SS),
+        "n10": c * T - (TT + TS),
+    }
+
+
 def _macro_terms(c: DataFrame, n: int, m: int, big: str) -> DataFrame:
     """Per-edge closed-form terms N1..N10 + raw kernel sums.
 
@@ -569,22 +621,30 @@ def macro_counts(
     exact Python ints — the disconnected terms overflow int64 on
     10^9-vertex graphs, hence decimal sums for N1/N8/N9/N10.
     """
-    n = g.num_vertices()
-    m = g.num_edges()
     own_counts = counts is None
     c = counts if counts is not None else edge_graphlet_counts(g, strategy)
-    # decimal sums are only needed when Σ over m edges of ~n²-sized
-    # terms can overflow int64; below that bound plain longs keep the
-    # aggregation inside whole-stage codegen (decimal agg is ~3× slower)
-    big = _DEC if (force_decimal or n * n * m >= (1 << 62)) else "long"
-    terms = _macro_terms(c, n, m, big)
-    row = terms.agg(*[F.sum(col).alias(col) for col in terms.columns]).first()
+    # read after the kernel pass: the broadcast census records the
+    # sizes from its driver-side edge copy (no count job)
+    n = g.num_vertices()
+    m = g.num_edges()
+    tag = getattr(c, "_pgd_macro_sums", None)
+    if tag is not None and tag[:2] == (n, m) and not force_decimal:
+        # the broadcast census summed the terms on the driver
+        s = tag[2]
+    else:
+        # decimal sums are only needed when Σ over m edges of ~n²-sized
+        # terms can overflow int64; below that bound plain longs keep
+        # the aggregation inside whole-stage codegen (decimal agg is ~3×
+        # slower)
+        big = _DEC if (force_decimal or n * n * m >= _LONG_SUMS_BOUND) else "long"
+        terms = _macro_terms(c, n, m, big)
+        row = terms.agg(*[F.sum(col).alias(col) for col in terms.columns]).first()
+        s = {k: int(row[k] or 0) for k in terms.columns}
     if own_counts:
         # totals are final — drop any lookup table the distributed
         # kernel persisted for this one pass (callers who passed their
         # own counts frame release it themselves when done)
         release_internal_caches(c)
-    s = {k: int(row[k] or 0) for k in terms.columns}
 
     # closure equations, exact ints (cpp:1449-1472)
     t: dict = {}

@@ -383,11 +383,18 @@ def connected_components(
     inside the block it was reached, and a graph that converges inside
     a block stops at that block's end — at most interval-1 no-op
     rounds past true convergence (cheap: they're chained, not jobs).
+
+    Placement: after a broadcast census the driver already holds the
+    graph's CSR (``g._census_state``), so without a ``checkpoint_dir``
+    the same rounds run there in numpy (:func:`_cc_hashmin_driver`):
+    same labels, same ``max_iter`` contract, no Spark job.
     """
     if algorithm == "two_phase":
         return _cc_two_phase(g, max_iter, checkpoint_dir, log)
     spark = g.spark
     log = log if log is not None else IterationLog()
+    if g._census_state is not None and checkpoint_dir is None:
+        return _cc_hashmin_driver(g, max_iter, log)
 
     # Grouped self-loop-augmented adjacency [v, nbrs ∪ {v}], persisted
     # hash-partitioned on v (r7, mirroring pagerank_prepare): one round
@@ -415,6 +422,40 @@ def connected_components(
             )
         finally:
             adj_plus.unpersist()
+
+
+def _cc_hashmin_driver(g: Graph, max_iter: int, log: IterationLog) -> DataFrame:
+    """Hashmin over the census CSR on the driver, round for round the
+    Spark loop: round 0 is the array_min start (min over N(v) ∪ {v}
+    from identity labels), round r the same min over the previous
+    labels, and the call converges iff a round with index <= max_iter-1
+    changes nothing.  Dense ids are a monotonic relabel of the original
+    ids (``uniq`` is sorted), so min-id labels equal the Spark path's.
+    One log entry in the Spark loop's convention: ``iter`` is the last
+    round's index, ``rounds`` the rounds after round 0."""
+    import numpy as np
+
+    from pgd_spark.graph import local_frame
+
+    t0 = time.time()
+    uniq, indptr, indices = g._census_state[:3]
+    label = np.arange(len(uniq), dtype=np.int64)
+    # every census vertex has an edge, so no CSR row is empty
+    starts = indptr[:-1]
+    it, changed = -1, None
+    while changed != 0 and it < max_iter - 1:
+        it += 1
+        new = np.minimum(label, np.minimum.reduceat(label[indices], starts))
+        changed = int(np.count_nonzero(new != label))
+        label = new
+    if it >= 0:
+        log.add(
+            algo="cc", iter=it, rounds=it, changed=changed,
+            seconds=time.time() - t0, placement="driver",
+        )
+    if changed != 0:
+        _nonconverged("connected_components(hashmin)", max_iter, False)
+    return local_frame(g.spark, {"v": uniq, "component": uniq[label]})
 
 
 def _cc_hashmin_loop(g, adj_plus, max_iter, checkpoint_dir, log, check_interval):

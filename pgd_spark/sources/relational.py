@@ -42,9 +42,12 @@ def copurchase_edges(lineitem: DataFrame, max_partkey: int | None = None) -> Dat
     # shuffle this costs is repaid many times by a 32-way join stage;
     # inputs that already carry enough partitions pass through (a real
     # multi-file table at scale does).  The build side stays narrow —
-    # it is collected for the broadcast anyway.
+    # it is collected for the broadcast anyway.  The partition count
+    # comes from the JVM plan's own RDD; ``li.rdd`` would also wrap it in
+    # a Python row RDD, for nothing
     par = lineitem.sparkSession.sparkContext.defaultParallelism
-    a = (li.repartition(par) if li.rdd.getNumPartitions() < par else li).alias("a")
+    nparts = li._jdf.queryExecution().toRdd().getNumPartitions()
+    a = (li.repartition(par) if nparts < par else li).alias("a")
     b = li.alias("b")
     edges = (
         a.join(b, F.col("a.l_orderkey") == F.col("b.l_orderkey"))
@@ -64,9 +67,10 @@ def copurchase_graph(spark: SparkSession, sf_dir: str, max_partkey: int | None =
     re-reads the edges, and without the persist each action re-ran the
     lineitem self-join + distinct from parquet (measured: the census
     re-derived the edges once per repetition).  The first action —
-    num_edges() in the derivation step — pays the materialization."""
+    num_edges() in the derivation step — pays the materialization.
+    ``Graph.unpersist()`` releases that cache with the derived tables."""
     edges = copurchase_edges(load_table(spark, sf_dir, "lineitem"), max_partkey)
-    return Graph(edges.persist(), already_canonical=True)
+    return Graph(edges.persist(), already_canonical=True, owns_edges=True)
 
 
 def events_session_edges(events: DataFrame) -> DataFrame:

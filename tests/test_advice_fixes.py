@@ -467,3 +467,69 @@ def test_dup_clusters_id_gate_case_and_decimal(spark):
 
     with pytest.raises(TypeError, match="not found"):
         dup_clusters(spark.createDataFrame([(1, 2)], "x long, id_b long"))
+
+
+# ------------------------- id gate, owned edge cache, scan partition count
+@pytest.mark.parametrize(
+    "dtype, ok",
+    [("int", True), ("bigint", True), ("decimal(18,0)", True), ("decimal(19,0)", False),
+     ("decimal(10,2)", False), ("double", False), ("string", False)],
+)
+def test_graph_from_edges_id_gate(spark, dtype, ok):
+    """A wide decimal id past the int64 range casts to null, so its edge
+    would drop without a word: only lossless id types build a Graph."""
+    from pgd_spark.graph import Graph
+
+    df = spark.createDataFrame([(1, 2), (2, 3)], "a long, dst long").select(
+        F.col("a").cast(dtype).alias("Src"), "dst"
+    )
+    if ok:
+        assert Graph.from_edges(df, src="src").num_edges() == 2
+    else:
+        with pytest.raises(TypeError, match=r"edges\.src"):
+            Graph.from_edges(df, src="src")
+
+
+def _write_lineitem(spark, sf_dir, files: int):
+    rows = [(o, p) for o in range(40) for p in range(o % 7, o % 7 + 4)]
+    li = spark.createDataFrame(rows, "l_orderkey long, l_partkey long")
+    li.repartition(files).write.parquet(f"{sf_dir}/lineitem.parquet")
+
+
+def test_copurchase_graph_unpersist_releases_its_edges(spark, tmp_path):
+    from pgd_spark.operators.graphlets import macro_counts
+    from pgd_spark.sources.relational import copurchase_graph
+
+    _write_lineitem(spark, tmp_path, files=1)
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    g = copurchase_graph(spark, str(tmp_path))
+    assert g.num_edges() > 0
+    g.degrees().count()
+    macro_counts(g, strategy="broadcast")
+    assert jsc.getPersistentRDDs().size() > before
+    g.unpersist()
+    assert jsc.getPersistentRDDs().size() == before
+
+
+def test_copurchase_probe_side_spread_reads_no_python_rdd(spark, tmp_path, monkeypatch):
+    """A one-file scan is repartitioned to the default parallelism; an
+    input with enough partitions passes through.  The partition count
+    comes from the JVM plan, never from a Python RDD."""
+    from pgd_spark.sources.relational import copurchase_edges
+
+    def no_rdd(self):
+        raise AssertionError("copurchase_edges built a Python RDD")
+
+    _write_lineitem(spark, tmp_path, files=1)
+    one_file = spark.read.parquet(f"{tmp_path}/lineitem.parquet")
+    monkeypatch.setattr(type(one_file), "rdd", property(no_rdd))
+
+    def plan(li):
+        return copurchase_edges(li)._jdf.queryExecution().optimizedPlan().toString()
+
+    par = spark.sparkContext.defaultParallelism
+    assert f"Repartition {par}, true" in plan(one_file)
+    wide = one_file.repartition(2 * par)
+    assert f"Repartition {par}, true" not in plan(wide)
+    assert copurchase_edges(one_file).count() == copurchase_edges(wide).count()

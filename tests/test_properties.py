@@ -1,11 +1,16 @@
-"""Hypothesis property tests for normalization + census invariants, and
-skew-graph strategy equality (SURVEY §5.6 smoke)."""
+"""Hypothesis property tests for normalization + census invariants,
+skew-graph strategy equality (SURVEY §5.6 smoke), and placement
+equality: the driver tail of a broadcast census (CC, macro sums) equals
+the Spark paths it skips."""
 
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
+from pyspark.sql import functions as F
+
 from pgd_spark.graph import Graph, normalize_edges
 from pgd_spark.operators.graphlets import check_identities, edge_graphlet_counts, macro_counts
+from pgd_spark.operators.pregel import IterationLog, connected_components
 from tests.conftest import make_graph
 
 edge_lists = st.lists(
@@ -55,3 +60,33 @@ def test_skewed_hub_graph_strategy_equality(spark):
     a = sorted(map(tuple, edge_graphlet_counts(g, "broadcast").collect()))
     b = sorted(map(tuple, edge_graphlet_counts(g, "distributed").collect()))
     assert a == b
+
+
+#: random edges over a few id ranges (so several components), plus
+#: up to two planted hubs joined to a random subset of the vertices
+hub_graphs = st.tuples(
+    st.lists(st.tuples(st.integers(0, 60), st.integers(0, 60)), min_size=1, max_size=80),
+    st.lists(st.tuples(st.integers(0, 60), st.sets(st.integers(0, 60), min_size=5)),
+             max_size=2),
+)
+
+
+@settings(max_examples=4, deadline=None, suppress_health_check=list(HealthCheck))
+@given(hub_graphs)
+def test_driver_tail_equals_spark_placement(spark, graph):
+    edges, hubs = graph
+    # spread the endpoints over three id ranges (x // 21 picks one)
+    pairs = [(a + 1000 * (a // 21), b + 1000 * (a // 21)) for a, b in edges]
+    pairs += [(1000 * (h // 21) + h, 1000 * (h // 21) + w) for h, ws in hubs for w in ws]
+    g = make_graph(spark, pairs)
+    if g.num_edges() == 0:
+        return
+    counts = edge_graphlet_counts(g, "broadcast")
+    tagged = macro_counts(g, counts=counts)
+    assert tagged == macro_counts(g, counts=counts.filter(F.lit(True)))
+
+    log = IterationLog()
+    driver = sorted(map(tuple, connected_components(g, log=log).collect()))
+    assert log.entries[-1]["placement"] == "driver"
+    fresh = Graph(g.edges, already_canonical=True)
+    assert driver == sorted(map(tuple, connected_components(fresh).collect()))
