@@ -348,7 +348,7 @@ def ivf_cosine_topk(
     (default) sizes it with one cheap agg over the query batch and
     broadcasts iff the estimate fits the session's
     autoBroadcastJoinThreshold (the same discipline as
-    graphlets._dist_plumbing); large batches fall back to a
+    graphlets._TwoHop); large batches fall back to a
     shuffle-hash join on cid.  Pass True/False to skip the sizing agg
     when the caller already knows the batch shape."""
     if assigned is None or centroids is None:

@@ -148,50 +148,20 @@ class Graph:
             self._degrees = self.symmetric().groupBy("v").agg(F.count("*").alias("degree")).cache()
         return self._degrees
 
-    def adjacency(self, order: str = "id") -> DataFrame:
-        """[v, nbrs: array<long>] — CSR rows; cached per ordering.
-
-        ``order="id"`` (default): neighbors sorted ascending — the
-        engine's canonical form (enables merge/hash intersection
-        JVM-side and searchsorted in the numpy kernels).
-
-        ``order="degree"`` / ``order="kcore"``: neighbors sorted by the
-        metric DESCENDING (ties by id) — parity with the reference's
-        neighbor-ordering strategies (order_vertex_neighbors,
-        cpp:1846-1953; default deg, largest-to-smallest).  Pure
-        scheduling/locality feature there: zero effect on any counts.
-        """
-        if order == "id":
-            if self._adjacency is None:
-                self._adjacency = (
-                    self.symmetric()
-                    .groupBy("v")
-                    .agg(F.array_sort(F.collect_list("w")).alias("nbrs"))
-                    .cache()
-                )
-            return self._adjacency
-        if order == "degree":
-            metric = self.degrees().select("v", F.col("degree").alias("_m"))
-        elif order == "kcore":
-            from pgd_spark.operators.kcore import kcore
-
-            metric = kcore(self).select("v", F.col("core").alias("_m"))
-        else:
-            raise ValueError(f"unknown neighbor order {order!r}")
-        m2 = metric.select(F.col("v").alias("w"), F.col("_m"))
-        return (
-            self.symmetric()
-            .join(m2, "w")
-            .groupBy("v")
-            .agg(
-                F.transform(
-                    F.reverse(
-                        F.array_sort(F.collect_list(F.struct(F.col("_m"), F.col("w"))))
-                    ),
-                    lambda s: s["w"],
-                ).alias("nbrs")
+    def adjacency(self) -> DataFrame:
+        """[v, nbrs: array<long>] — CSR rows, neighbors sorted ascending
+        (enables merge/hash intersection JVM-side and searchsorted in the
+        numpy kernels); cached.  The reference's neighbor orderings
+        (order_vertex_neighbors, cpp:1846-1953) only schedule work and
+        change no count."""
+        if self._adjacency is None:
+            self._adjacency = (
+                self.symmetric()
+                .groupBy("v")
+                .agg(F.array_sort(F.collect_list("w")).alias("nbrs"))
+                .cache()
             )
-        )
+        return self._adjacency
 
     def oriented(self) -> DataFrame:
         """Degree-oriented edges [v, u, deg_v, deg_u] with

@@ -127,44 +127,118 @@ def _edge_counts_broadcast(
 
 
 # -------------------------------------------------------------- distributed
-def _dist_plumbing(g: Graph):
-    """Physical sizing shared by every distributed two-hop join in this
-    module (the census and the corrected-tailed pass): shuffle width,
-    the broadcast-vs-SHUFFLE_HASH chooser for the adjacency lookup
-    side, and the sized edge-key probe side.
+def _hot_threshold(m: int, n: int) -> int:
+    # a healthy multiple of the average degree — hot enough to catch
+    # celebrity vertices, low enough that the cold intersect cost per
+    # row stays bounded (the old 2m/npart default never fired: a
+    # 15k-degree vertex stayed "cold" and one reducer ran 20+ min)
+    return max(256, int(8 * (2.0 * m / n)))
 
-    Broadcast budgets derive from the session's broadcast threshold
-    (the knob admins size to executor memory), charging HashedRelation
-    all-in costs — ~48 B/row overhead + payload — rather than raw
-    payload bytes (ADVICE r2).  The adjacency side (n rows, 2m array
-    entries) broadcasts while it fits an executor; the payoff is
-    structural, not just a cheaper join: with map-side adjacency joins
-    the downstream tables keep a balanced (v,u) partitioning — a
+
+class _TwoHop:
+    """The one distributed two-hop plan, shared by the census and the
+    corrected-tailed pass: physical sizing, the edge-key probe side,
+    the hot-vertex set, the ``ori ⋈ N(v) ⋈ N(u)`` base join and the
+    hot/cold pair-hit split.
+
+    Two physical regimes per lookup side (edge keys, adjacency):
+    BROADCAST while it fits an executor (the pair/wedge streams then
+    never leave their mappers and partial aggs collapse in-pipeline);
+    SHUFFLE_HASH beyond (sort-merge would sort the m-row edge stream
+    for no benefit).  Budgets derive from the session's broadcast
+    threshold (the knob admins size to executor memory), charging
+    HashedRelation all-in costs — ~48 B/row overhead + payload, ~64
+    B/edge for edge keys — rather than raw payload bytes (ADVICE r2).
+    The adjacency side (n rows, 2m array entries) pays off
+    structurally, not just as a cheaper join: with map-side adjacency
+    joins the downstream tables keep a balanced (v,u) partitioning — a
     SHUFFLE_HASH join on u would place EVERY edge of a hub u (each
-    carrying the hub's full array) in ONE partition.  Beyond the
-    budget: SHUFFLE_HASH (sort-merge would sort the m-row edge stream
-    for no benefit).  Edge keys cost ~64 B/edge all-in."""
-    from pgd_spark.session import parse_size_bytes, shuffle_width
+    carrying the hub's full array) in ONE partition."""
 
-    npart = shuffle_width(g.spark)
-    m = g.num_edges()
-    n = max(g.num_vertices(), 1)
-    # the conf may carry a size suffix ('64m') — Spark's size grammar
-    bcast_bytes = max(
-        parse_size_bytes(
-            g.spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "67108864"),
-            default=64 * 1024 * 1024,
-        ),
-        0,
-    )
-    small_adj = 48 * n + 16 * 2 * m <= bcast_bytes
+    def __init__(self, g: Graph, hot_threshold: int | None = None):
+        from pgd_spark.session import parse_size_bytes, shuffle_width
 
-    def _side(df):
-        return F.broadcast(df) if small_adj else df.hint("SHUFFLE_HASH")
+        self.npart = shuffle_width(g.spark)
+        m = g.num_edges()
+        n = max(g.num_vertices(), 1)
+        # the conf may carry a size suffix ('64m') — Spark's size grammar
+        bcast_bytes = max(
+            parse_size_bytes(
+                g.spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "67108864"),
+                default=64 * 1024 * 1024,
+            ),
+            0,
+        )
+        self.small_adj = 48 * n + 16 * 2 * m <= bcast_bytes
+        self.adj = g.adjacency()
+        ekeys = g.edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
+        self.ekeys = F.broadcast(ekeys) if m * 64 <= bcast_bytes else ekeys.hint("SHUFFLE_HASH")
+        thr = _hot_threshold(m, n) if hot_threshold is None else hot_threshold
+        hot = g.degrees().filter(F.col("degree") > thr).select(F.col("v").alias("x"))
+        self.hot = F.broadcast(hot)
 
-    ekeys = g.edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
-    ekeys = F.broadcast(ekeys) if m * 64 <= bcast_bytes else ekeys.hint("SHUFFLE_HASH")
-    return npart, m, n, small_adj, _side, ekeys
+    def _nbrs(self, key: str, arr: str) -> DataFrame:
+        df = self.adj.select(F.col("v").alias(key), F.col("nbrs").alias(arr))
+        return F.broadcast(df) if self.small_adj else df.hint("SHUFFLE_HASH")
+
+    def join(self, ori: DataFrame) -> DataFrame:
+        """``ori ⋈ N(v) ⋈ N(u)``: ori's columns, ``nv``/``nu``, and the
+        wedge sets ``wu`` = N(u)\\{v}\\N(v) (wedge nodes centered at u,
+        marks==2) and ``wv`` = N(v)\\{u}\\N(u) (the marks==1 side
+        scanned by the cycle kernel)."""
+        if self.small_adj:
+            ori = ori.repartition(self.npart, "v", "u")
+        return (
+            ori.join(self._nbrs("_v", "nv"), F.col("v") == F.col("_v"))
+            .drop("_v")
+            .join(self._nbrs("_u", "nu"), F.col("u") == F.col("_u"))
+            .drop("_u")
+            .select(
+                "*",
+                F.array_except(F.array_remove("nu", F.col("v")), "nv").alias("wu"),
+                F.array_except(F.array_remove("nv", F.col("u")), "nu").alias("wv"),
+            )
+        )
+
+    def spread(self, df: DataFrame) -> DataFrame:
+        """Broadcast regime: the rows inherited the balanced (v,u)
+        partitioning.  SHUFFLE_HASH regime: the u-keyed join clustered
+        hub edges — spread them (pays the hub-partition read once, then
+        every explode downstream is balanced)."""
+        return df if self.small_adj else df.repartition(self.npart, "v", "u")
+
+    def pair_hits(self, rows: DataFrame) -> DataFrame:
+        """rows [v, u, x, s] → [v, u, hits] with Σ hits = Σ |N(x) ∩ s|
+        per (v,u): the one operation behind the 4-cycle count (x ∈ W_v,
+        s = W_u) and the tailed count (x ∈ s, s = W_u or W_v, each
+        unordered pair met twice).  x ∉ N(x), and a (x, x) key never
+        matches a canonical src < dst edge key, so x ∈ s adds no hit.
+
+        Each x contributes its own row's hits, so splitting the rows by
+        x's degree keeps the total exact.  COLD x: join x's adjacency,
+        array_intersect with the carried s — array-native intersection,
+        ~10x cheaper per element than exploded rows, and the x-keyed
+        shuffle is balanced because the threshold bounds both the
+        per-row cost AND any one x's total weight.  HOT x (celebrity
+        vertices): explode (w, x) ∈ s × {x} and probe the edge keys —
+        O(|s|) per row on near-uniform keys, immune to hub degree.
+        Routing EVERYTHING through pair enumeration was tried and is
+        balanced but ~10x slower: the pair stream on a 2M-edge skew-1.5
+        graph is 10^10 rows, almost all probe misses that the sorted
+        intersect rejects at array speed."""
+        cold = (
+            rows.join(self.hot, "x", "left_anti")
+            .join(self._nbrs("x", "nx"), "x")
+            .select("v", "u", F.size(F.array_intersect("nx", "s")).cast("long").alias("hits"))
+        )
+        hot = (
+            rows.join(self.hot, "x", "left_semi")
+            .select("v", "u", "x", F.explode("s").alias("w"))
+            .select("v", "u", F.least("w", "x").alias("a"), F.greatest("w", "x").alias("b"))
+            .join(self.ekeys, ["a", "b"])
+            .select("v", "u", F.lit(1).cast("long").alias("hits"))
+        )
+        return cold.unionByName(hot)
 
 
 def _edge_counts_distributed(
@@ -182,23 +256,11 @@ def _edge_counts_distributed(
       set.  Keys are edge keys (near-uniform): no hot reducer.
     * 4-cycles: wedge rows (v,u,x∈W_v) — the SMALLER wedge set under
       degree orientation (|W_v| ≤ |W_u| always; same gather choice as
-      the numpy kernel) — split by the far vertex's degree.  COLD x
-      (deg ≤ hot_degree_threshold): join x's adjacency,
-      array_intersect with the carried wu — array-native intersection,
-      ~10x cheaper per element than exploded rows, and the x-keyed
-      shuffle is balanced because the threshold bounds both the
-      per-row cost AND any one x's total weight.  HOT x (celebrity
-      vertices): explode (w, x) ∈ W_u × {x} and probe the edge keys —
-      O(|wu|) per row on near-uniform keys, immune to hub degree.
-      Routing EVERYTHING through pair enumeration was tried and is
-      balanced but ~10x slower: the pair stream on a 2M-edge skew-1.5
-      graph is 10^10 rows, almost all probe misses that the sorted
-      intersect rejects at array speed.
+      the numpy kernel) — counted by :meth:`_TwoHop.pair_hits` against
+      the carried W_u, split by the far vertex's degree
+      (``hot_degree_threshold``, default :func:`_hot_threshold`).
 
-    Two physical regimes per lookup side (edge keys, adjacency):
-    BROADCAST while it fits an executor (the pair/wedge streams then
-    never leave their mappers and partial aggs collapse in-pipeline);
-    SHUFFLE_HASH beyond (sort-merge would sort the big streams).
+    Lookup sides are sized by :class:`_TwoHop`.
 
     Hub feasibility gate (replaces r2's documented-only limit): the
     BASE adjacency join carries one array row per vertex, so a vertex
@@ -215,8 +277,6 @@ def _edge_counts_distributed(
     (``max_exact_degree``) with an actionable error instead of letting
     a quadratic-runtime job look like an engine row-size bug.
     """
-    from pgd_spark.plans.skew import top_degree_vertices
-
     maxdeg = g.max_degree()
     if maxdeg > max_exact_degree:
         raise ValueError(
@@ -228,36 +288,20 @@ def _edge_counts_distributed(
             "edge_predicate, or raise max_exact_degree deliberately."
         )
 
-    adj = g.adjacency()
     ori = g.oriented()
     if edge_predicate is not None:
         ori = ori.filter(edge_predicate)
-
-    npart, m, n, small_adj, _side, ekeys = _dist_plumbing(g)
-    if small_adj:
-        ori = ori.repartition(npart, "v", "u")
-
+    hop = _TwoHop(g, hot_degree_threshold)
     base = (
-        ori.join(
-            _side(adj.select(F.col("v").alias("_v"), F.col("nbrs").alias("nv"))),
-            ori.v == F.col("_v"),
-        )
-        .drop("_v")
-        .join(
-            _side(adj.select(F.col("v").alias("_u"), F.col("nbrs").alias("nu"))),
-            ori.u == F.col("_u"),
-        )
-        .drop("_u")
+        hop.join(ori)
         .select(
             "v",
             "u",
             "deg_v",
             "deg_u",
             F.array_intersect("nv", "nu").alias("tri_arr"),
-            # W_u = N(u)\{v}\N(v)   (wedge nodes centered at u, marks==2)
-            F.array_except(F.array_remove("nu", F.col("v")), "nv").alias("wu"),
-            # N(v)\{u}\N(u)         (marks==1 side scanned by the cycle kernel)
-            F.array_except(F.array_remove("nv", F.col("u")), "nu").alias("wv"),
+            "wu",
+            "wv",
         )
         .withColumn("tri", F.size("tri_arr").cast("long"))
         # null out arrays no downstream branch reads before persisting:
@@ -277,12 +321,7 @@ def _edge_counts_distributed(
         )
     )
     base = base.persist()
-
-    # broadcast regime: base inherited the balanced (v,u) partitioning.
-    # SHUFFLE_HASH regime: the u-keyed join clustered hub edges — spread
-    # them (pays the hub-partition read once, then every explode below
-    # is balanced).
-    spread = base if small_adj else base.repartition(npart, "v", "u")
+    spread = hop.spread(base)
 
     # 4-cliques: unordered pairs within the triangle-node set that are
     # themselves edges.  tri_arr is sorted (array_intersect of sorted
@@ -292,50 +331,25 @@ def _edge_counts_distributed(
         .select("v", "u", F.explode("tri_arr").alias("a"), F.col("tri_arr"))
         .select("v", "u", "a", F.explode("tri_arr").alias("b"))
         .filter(F.col("a") < F.col("b"))
-        .join(ekeys, ["a", "b"])
+        .join(hop.ekeys, ["a", "b"])
         .groupBy("v", "u")
         .agg(F.count("*").cast("long").alias("cliq"))
     )
 
-    # 4-cycles: hybrid by wedge-vertex temperature (see docstring).
-    # EXPLODE THE Wv SIDE: degree orientation (deg_v ≤ deg_u) makes
-    # |Wv| = deg_v−tri−1 ≤ |Wu| unconditionally, so enumerating x ∈ Wv
-    # and intersecting N(x) with the carried Wu array is the cheaper
-    # gather — the same choice the numpy kernel makes per edge
-    # (kernels.py:96-105); the r2 plan exploded Wu and its intersect
-    # stage alone was half the 5M-edge proof wall time.  The carried
-    # array is now the bigger Wu, but in the broadcast-adjacency regime
-    # wedge rows never cross a shuffle (map-side join), and in the
-    # SHUFFLE_HASH regime only the x-keyed repartition moves them once.
-    # Threshold: a healthy multiple of the average degree — hot enough
-    # to catch celebrity vertices, low enough that the cold intersect
-    # cost per row stays bounded (the old 2m/npart default never fired:
-    # a 15k-degree vertex stayed "cold" and one reducer ran 20+ min).
-    if hot_degree_threshold is None:
-        hot_degree_threshold = max(256, int(8 * (2.0 * m / n)))
-    hot = top_degree_vertices(g, hot_degree_threshold)
+    # 4-cycles: EXPLODE THE Wv SIDE: degree orientation (deg_v ≤ deg_u)
+    # makes |Wv| = deg_v−tri−1 ≤ |Wu| unconditionally, so enumerating
+    # x ∈ Wv and intersecting N(x) with the carried Wu array is the
+    # cheaper gather — the same choice the numpy kernel makes per edge
+    # (kernels.edge_counts_batch); the r2 plan exploded Wu and its
+    # intersect stage alone was half the 5M-edge proof wall time.  The
+    # carried array is now the bigger Wu, but in the broadcast-adjacency
+    # regime wedge rows never cross a shuffle (map-side join), and in
+    # the SHUFFLE_HASH regime only the x-keyed repartition moves them
+    # once.
     wedge_rows = spread.filter((F.size("wu") > 0) & (F.size("wv") > 0)).select(
-        "v", "u", "wu", F.explode("wv").alias("x")
+        "v", "u", F.col("wu").alias("s"), F.explode("wv").alias("x")
     )
-    hot_x = F.broadcast(hot.withColumnRenamed("v", "x"))
-    adj_x = _side(adj.select(F.col("v").alias("x"), F.col("nbrs").alias("nx")))
-    cold_hits = (
-        wedge_rows.join(hot_x, "x", "left_anti")
-        .join(adj_x, "x")
-        .select("v", "u", F.size(F.array_intersect("nx", "wu")).cast("long").alias("hits"))
-    )
-    hot_hits = (
-        wedge_rows.join(hot_x, "x", "left_semi")
-        .select("v", "u", "x", F.explode("wu").alias("w"))
-        .select("v", "u", F.least("w", "x").alias("a"), F.greatest("w", "x").alias("b"))
-        .join(ekeys, ["a", "b"])
-        .select("v", "u", F.lit(1).cast("long").alias("hits"))
-    )
-    cyc = (
-        cold_hits.unionByName(hot_hits)
-        .groupBy("v", "u")
-        .agg(F.sum("hits").cast("long").alias("cyc"))
-    )
+    cyc = hop.pair_hits(wedge_rows).groupBy("v", "u").agg(F.sum("hits").cast("long").alias("cyc"))
 
     out = (
         base.select("v", "u", "deg_v", "deg_u", "tri")
@@ -356,9 +370,19 @@ def release_internal_caches(counts: DataFrame) -> None:
     while building ``counts`` (the distributed strategy persists its
     two-hop base).  Call once the frame's consumers are done; a no-op
     for the broadcast strategy or frames derived by further transforms
-    (best-effort hygiene, never required for correctness)."""
+    (best-effort hygiene, never required for correctness).  Operators
+    that build the counts themselves (micro_counts,
+    vertex_micro_counts, triangle_count_per_vertex) carry the tag onto
+    their output, so it releases the same way."""
     for c in getattr(counts, "_pgd_internal_caches", []):
         c.unpersist()
+
+
+def _carry_caches(out: DataFrame, counts: DataFrame) -> DataFrame:
+    """Tags ``out``, derived from an operator-built ``counts`` frame,
+    with the caches :func:`release_internal_caches` releases for it."""
+    out._pgd_internal_caches = getattr(counts, "_pgd_internal_caches", [])
+    return out
 
 
 # ------------------------------------------------------------------- micro
@@ -382,7 +406,7 @@ def micro_counts(
     is the tail edge (adjacent pairs within W_u plus within W_v — the
     unwired cycle_micro kernel, cpp:1193-1204, from both endpoints).
     """
-    c = counts if counts is not None else edge_graphlet_counts(g, strategy)
+    c = census = counts if counts is not None else edge_graphlet_counts(g, strategy)
     tri, dv, du = F.col("tri"), F.col("deg_v"), F.col("deg_u")
     rv = dv - tri - 1  # 2-star ends at v
     ru = du - tri - 1
@@ -406,89 +430,29 @@ def micro_counts(
         ).alias("star3"),
         (rv * ru - F.col("cyc")).cast("long").alias("path4"),
     )
-    return out
+    return out if counts is not None else _carry_caches(out, census)
 
 
 def _with_tailed_raw(g: Graph, counts: DataFrame) -> DataFrame:
     """Adds ``tailed_raw``: adjacent pairs within W_u + within W_v
     (the corrected per-edge tailed-triangle count; e as tail edge).
 
-    Physical plan mirrors the distributed census (same _dist_plumbing
-    sizing and the same hot/cold wedge-vertex defense as its 4-cycle
-    path): the old version re-derived the base ori ⋈ adjacency ⋈
-    adjacency join with unconditional shuffle joins and joined EVERY
-    exploded wedge vertex against the full adjacency — a celebrity
-    vertex w then funneled all its rows into one reducer, each paying
-    an O(deg(w)) intersect.  Cold w intersect N(w) with the carried
-    side array; hot w (degree past the census threshold) explode the
-    (w, x) pairs and probe the near-uniform edge keys instead."""
-    from pgd_spark.plans.skew import top_degree_vertices
-
-    npart, m, n, small_adj, _side, ekeys = _dist_plumbing(g)
-    adj = g.adjacency()
-    ori = g.oriented().select("v", "u")
-    if small_adj:
-        ori = ori.repartition(npart, "v", "u")
-    base = (
-        ori.join(
-            _side(adj.select(F.col("v").alias("_v"), F.col("nbrs").alias("nv"))),
-            F.col("v") == F.col("_v"),
-        )
-        .drop("_v")
-        .join(
-            _side(adj.select(F.col("v").alias("_u"), F.col("nbrs").alias("nu"))),
-            F.col("u") == F.col("_u"),
-        )
-        .drop("_u")
-        .select(
-            "v",
-            "u",
-            F.array_except(F.array_remove("nu", F.col("v")), "nv").alias("wu"),
-            F.array_except(F.array_remove("nv", F.col("u")), "nu").alias("wv"),
-        )
+    One stream of rows (v, u, x ∈ s, s) over both wedge sets of the
+    census's two-hop plan (:class:`_TwoHop`), counted by its 4-cycles'
+    hot/cold pair-hit split: Σ_x |N(x) ∩ s| meets each adjacent pair
+    in s twice, so the halved sum is the count."""
+    hop = _TwoHop(g)
+    base = hop.spread(hop.join(g.oriented().select("v", "u")).select("v", "u", "wu", "wv"))
+    wu, wv = (
+        base.filter(F.size(w) >= 2).select("v", "u", F.col(w).alias("s"), F.explode(w).alias("x"))
+        for w in ("wu", "wv")
     )
-    base = base if small_adj else base.repartition(npart, "v", "u")
-
-    hot_degree_threshold = max(256, int(8 * (2.0 * m / n)))
-    hot_w = F.broadcast(top_degree_vertices(g, hot_degree_threshold).withColumnRenamed("v", "w"))
-    adj_w = _side(adj.select(F.col("v").alias("w"), F.col("nbrs").alias("nw")))
-
-    def _pairs(side: str):
-        # ordered adjacent pairs within the side set: Σ_w |N(w) ∩ s|
-        # over w ∈ s counts each unordered pair twice → /2.  Each w
-        # contributes its own row's hits, so splitting the w-rows by
-        # temperature keeps the total exact.
-        rows = base.filter(F.size(side) >= 2).select(
-            "v", "u", F.col(side).alias("s"), F.explode(side).alias("w")
-        )
-        cold = (
-            rows.join(hot_w, "w", "left_anti")
-            .join(adj_w, "w")
-            .select("v", "u", F.size(F.array_intersect("nw", "s")).cast("long").alias("hits"))
-        )
-        hot = (
-            rows.join(hot_w, "w", "left_semi")
-            .select("v", "u", "w", F.explode("s").alias("x"))
-            .filter(F.col("x") != F.col("w"))
-            .select("v", "u", F.least("w", "x").alias("a"), F.greatest("w", "x").alias("b"))
-            .join(ekeys, ["a", "b"])
-            .select("v", "u", F.lit(1).cast("long").alias("hits"))
-        )
-        return (
-            cold.unionByName(hot)
-            .groupBy("v", "u")
-            .agg((F.sum("hits") / 2).cast("long").alias("p"))
-        )
-
-    tu = _pairs("wu").withColumnRenamed("p", "tw_u")
-    tv = _pairs("wv").withColumnRenamed("p", "tw_v")
-    return (
-        counts.join(tu, ["v", "u"], "left")
-        .join(tv, ["v", "u"], "left")
-        .fillna(0, subset=["tw_u", "tw_v"])
-        .withColumn("tailed_raw", (F.col("tw_u") + F.col("tw_v")).cast("long"))
-        .drop("tw_u", "tw_v")
+    tailed = (
+        hop.pair_hits(wu.unionByName(wv))
+        .groupBy("v", "u")
+        .agg((F.sum("hits") / 2).cast("long").alias("tailed_raw"))
     )
+    return counts.join(tailed, ["v", "u"], "left").fillna(0, subset=["tailed_raw"])
 
 
 # ------------------------------------------------------------------- macro

@@ -690,7 +690,7 @@ def triangle_count_per_vertex(g: Graph, counts: DataFrame | None = None) -> Data
     """[v, triangles] — per-vertex triangle participation, derived from
     the per-edge kernel: each triangle at vertex a lies on exactly two
     of a's incident edges, so tri(a) = Σ_{e∋a} tri_e / 2."""
-    from pgd_spark.operators.graphlets import edge_graphlet_counts
+    from pgd_spark.operators.graphlets import _carry_caches, edge_graphlet_counts
 
     c = counts if counts is not None else edge_graphlet_counts(g)
     per_end = c.select(F.col("v").alias("x"), "tri").unionAll(c.select(F.col("u").alias("x"), "tri"))
@@ -699,4 +699,5 @@ def triangle_count_per_vertex(g: Graph, counts: DataFrame | None = None) -> Data
         .agg((F.sum("tri") / 2).cast("long").alias("triangles"))
     )
     # vertices with no incident triangle-bearing edges still appear (0)
-    return g.degrees().select("v").join(out, "v", "left").fillna(0, subset=["triangles"])
+    out = g.degrees().select("v").join(out, "v", "left").fillna(0, subset=["triangles"])
+    return out if counts is not None else _carry_caches(out, c)

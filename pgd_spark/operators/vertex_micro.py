@@ -28,7 +28,7 @@ from pgd_spark.graph import Graph
 
 
 def vertex_micro_counts(g: Graph, counts: DataFrame | None = None, strategy: str = "auto") -> DataFrame:
-    from pgd_spark.operators.graphlets import edge_graphlet_counts
+    from pgd_spark.operators.graphlets import _carry_caches, edge_graphlet_counts
 
     c = counts if counts is not None else edge_graphlet_counts(g, strategy)
     tri, dv, du = F.col("tri"), F.col("deg_v"), F.col("deg_u")
@@ -84,4 +84,4 @@ def vertex_micro_counts(g: Graph, counts: DataFrame | None = None, strategy: str
             F.col("path4_mid_end"),
         )
     )
-    return out
+    return out if counts is not None else _carry_caches(out, c)

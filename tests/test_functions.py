@@ -1,5 +1,5 @@
 """Training-data pipeline operators: dedup, similarity, text stats,
-multimodal plumbing, skew helpers."""
+multimodal plumbing."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -320,21 +320,6 @@ def test_real_png_decode(spark):
     assert (r["width"], r["height"], r["channels"], r["format"]) == (37, 21, 3, "png")
     # pure red: PIL-formula luma = floor(0.299*255)/255 = 76/255
     assert abs(r["mean_luma"] - 76 / 255) < 1e-9
-
-
-def test_salted_join_equivalence(spark):
-    from pgd_spark.graph import Graph
-    from pgd_spark.plans.skew import salted_join, top_degree_vertices
-
-    # hub-heavy graph: star of 200 spokes + ring
-    edges = [(0, i) for i in range(1, 200)] + [(i, i + 1) for i in range(1, 199)]
-    g = Graph.from_edges(spark.createDataFrame(edges, "src long, dst long"))
-    big = g.symmetric().withColumnRenamed("v", "key").withColumnRenamed("w", "other")
-    small = g.degrees().withColumnRenamed("v", "key")
-    hot = top_degree_vertices(g, threshold=50).withColumnRenamed("v", "key")
-    plain = big.join(small, "key").select("key", "other", "degree")
-    salted = salted_join(big, small, "key", hot, salt=4).select("key", "other", "degree")
-    assert sorted(map(tuple, plain.collect())) == sorted(map(tuple, salted.collect()))
 
 
 def test_dedup_operators_release_internal_caches(spark, docs):

@@ -104,3 +104,80 @@ def test_corrected_tailed_hub_skew(spark):
     from pgd_spark.operators.graphlets import macro_counts as _mc
 
     assert total_tailed == _mc(g, strategy="distributed")["total_4_tailed_tris"]
+
+
+def _planted_hub_edges():
+    """A degree-48 hub over a ring with chords, plus a pendant path off
+    the spokes: wedge sets on both sides of many edges, with adjacent
+    pairs inside them (tailed triangles) and across them (4-cycles)."""
+    rng = random.Random(11)
+    hub = 48
+    edges = {(0, i) for i in range(1, hub + 1)}
+    edges |= {(i, i + 1) for i in range(1, hub, 2)}
+    edges |= {tuple(sorted(rng.sample(range(1, hub + 1), 2))) for _ in range(30)}
+    edges |= {(i, 1000 + i) for i in range(1, 16)}
+    edges |= {(1000 + i, 1001 + i) for i in range(1, 15)}
+    return sorted(edges)
+
+
+def _micro_rows(frame):
+    return {
+        (r["src"], r["dst"]): (
+            r["triangle"], r["two_star"], r["clique4"], r["chordal_cycle4"],
+            r["tailed_tri4"], r["cycle4"], r["star3"], r["path4"],
+        )
+        for r in frame.collect()
+    }
+
+
+@pytest.mark.parametrize("route", ["hot", "cold"])
+def test_distributed_hub_routing_matches_oracle(spark, monkeypatch, route):
+    """Every wedge vertex of the census's 4-cycle pass AND of the
+    corrected tailed pass takes one route of the shared pair-hit split:
+    threshold 0 makes every vertex hot (edge-key probes), a threshold at
+    the max degree makes every vertex cold (adjacency intersects)."""
+    from pgd_spark.operators import graphlets
+
+    edges = _planted_hub_edges()
+    want = micro(edges, pgd_quirk=False)
+    assert any(r[4] for r in want.values()) and any(r[5] for r in want.values())
+    g = make_graph(spark, edges)
+    thr = 0 if route == "hot" else g.max_degree()
+    monkeypatch.setattr(graphlets, "_hot_threshold", lambda m, n: thr)
+    n_hot = graphlets._TwoHop(g).hot.count()
+    assert n_hot == (g.num_vertices() if route == "hot" else 0)
+    assert _micro_rows(micro_counts(g, strategy="distributed", pgd_quirk=False)) == want
+
+
+def test_derived_operators_release_distributed_census(spark, monkeypatch):
+    """Operators that build the distributed counts themselves carry its
+    persisted two-hop base on their output: release_internal_caches on
+    that output frees it."""
+    from pgd_spark.operators import graphlets
+    from pgd_spark.operators.graphlets import release_internal_caches
+    from pgd_spark.operators.pregel import triangle_count_per_vertex
+    from pgd_spark.operators.vertex_micro import vertex_micro_counts
+
+    def persisted():
+        # ids, not a count: the context cleaner may drop other tests' RDDs
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    g = make_graph(spark, _planted_hub_edges())
+    macro_counts(g, strategy="distributed")  # materializes the Graph's own caches
+    census = graphlets.edge_graphlet_counts
+    monkeypatch.setattr(
+        graphlets, "edge_graphlet_counts", lambda g, strategy="auto": census(g, "distributed")
+    )
+    for op in (
+        micro_counts,
+        lambda g: micro_counts(g, pgd_quirk=False),
+        vertex_micro_counts,
+        triangle_count_per_vertex,
+    ):
+        before = persisted()
+        out = op(g)
+        out.collect()
+        base = persisted() - before
+        assert len(base) == 1
+        release_internal_caches(out)
+        assert not base & persisted()

@@ -1,7 +1,8 @@
 """Hypothesis property tests for normalization + census invariants,
 skew-graph strategy equality (SURVEY §5.6 smoke), and placement
 equality: the driver tail of a broadcast census (CC, macro sums) equals
-the Spark paths it skips."""
+the Spark paths it skips, and corrected micro rows agree across census
+strategies."""
 
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
@@ -9,7 +10,12 @@ from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from pgd_spark.graph import Graph, normalize_edges
-from pgd_spark.operators.graphlets import check_identities, edge_graphlet_counts, macro_counts
+from pgd_spark.operators.graphlets import (
+    check_identities,
+    edge_graphlet_counts,
+    macro_counts,
+    micro_counts,
+)
 from pgd_spark.operators.pregel import IterationLog, connected_components
 from tests.conftest import make_graph
 
@@ -71,14 +77,18 @@ hub_graphs = st.tuples(
 )
 
 
-@settings(max_examples=4, deadline=None, suppress_health_check=list(HealthCheck))
-@given(hub_graphs)
-def test_driver_tail_equals_spark_placement(spark, graph):
+def _hub_graph(spark, graph) -> Graph:
     edges, hubs = graph
     # spread the endpoints over three id ranges (x // 21 picks one)
     pairs = [(a + 1000 * (a // 21), b + 1000 * (a // 21)) for a, b in edges]
     pairs += [(1000 * (h // 21) + h, 1000 * (h // 21) + w) for h, ws in hubs for w in ws]
-    g = make_graph(spark, pairs)
+    return make_graph(spark, pairs)
+
+
+@settings(max_examples=4, deadline=None, suppress_health_check=list(HealthCheck))
+@given(hub_graphs)
+def test_driver_tail_equals_spark_placement(spark, graph):
+    g = _hub_graph(spark, graph)
     if g.num_edges() == 0:
         return
     counts = edge_graphlet_counts(g, "broadcast")
@@ -90,3 +100,25 @@ def test_driver_tail_equals_spark_placement(spark, graph):
     assert log.entries[-1]["placement"] == "driver"
     fresh = Graph(g.edges, already_canonical=True)
     assert driver == sorted(map(tuple, connected_components(fresh).collect()))
+
+
+@settings(max_examples=3, deadline=None, suppress_health_check=list(HealthCheck))
+@given(hub_graphs, st.one_of(st.none(), st.integers(0, 8)))
+def test_corrected_micro_strategy_equality(spark, monkeypatch, graph, hot_threshold):
+    """micro_counts(pgd_quirk=False) rows are equal under the driver
+    census and the Catalyst census, at the default hot-vertex threshold
+    and at drawn ones that split wedge vertices between the hot and
+    cold routes of both two-hop passes."""
+    from pgd_spark.operators import graphlets
+
+    g = _hub_graph(spark, graph)
+    if g.num_edges() == 0:
+        return
+    with monkeypatch.context() as mp:
+        if hot_threshold is not None:
+            mp.setattr(graphlets, "_hot_threshold", lambda m, n: hot_threshold)
+        rows = {
+            s: sorted(map(tuple, micro_counts(g, strategy=s, pgd_quirk=False).collect()))
+            for s in ("broadcast", "distributed")
+        }
+    assert rows["broadcast"] == rows["distributed"]
