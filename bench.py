@@ -44,48 +44,13 @@ def main() -> None:
     timings: dict[str, float] = {}
     extras: dict[str, float] = {}
 
-    def _tree_cpu_secs(root_pid: int) -> float:
-        """Σ utime+stime+cutime+cstime (seconds) of root_pid and every
-        live descendant — the JVM plus its reused python workers.
-        Per-rep deltas separate 'the engine did more work' (CPU moved)
-        from 'the VM gave fewer cycles' (CPU flat while wall grew): the
-        drift diagnostic VERDICT r3 asked for on the census spread.
-
-        cutime/cstime carry the CPU of REAPED children (recursively:
-        wait() folds a child's own cutime into its parent's), so a
-        python worker that exits between samples keeps its accumulated
-        CPU in the totals instead of vanishing — the r5 artifact's
-        negative per-rep CPU (VERDICT r5 task 3).  No double counting:
-        a process is in the live scan XOR in an ancestor's cutime."""
-        import glob as _glob
-
-        tick = os.sysconf("SC_CLK_TCK")
-        procs: dict[int, tuple[int, int]] = {}
-        for stat in _glob.glob("/proc/[0-9]*/stat"):
-            try:
-                with open(stat) as f:
-                    head, tail = f.read().rsplit(")", 1)
-                pid = int(head.split()[0])
-                fields = tail.split()
-                procs[pid] = (
-                    int(fields[1]),
-                    int(fields[11]) + int(fields[12])
-                    + int(fields[13]) + int(fields[14]),
-                )
-            except (OSError, ValueError, IndexError):
-                continue
-        kids: dict[int, list[int]] = {}
-        for pid, (ppid, _) in procs.items():
-            kids.setdefault(ppid, []).append(pid)
-        total, stack, seen = 0, [root_pid], set()
-        while stack:
-            p = stack.pop()
-            if p in seen or p not in procs:
-                continue
-            seen.add(p)
-            total += procs[p][1]
-            stack.extend(kids.get(p, []))
-        return total / tick
+    # Σ own + reaped-children CPU of the JVM and its python workers, per
+    # rep: CPU moving separates "the engine did more work" from "the VM
+    # gave fewer cycles" (CPU flat while wall grew).  Members are keyed
+    # by (pid, start time) and a scan that sees the tree change starts
+    # over, so a reused pid can neither drop a worker nor count a
+    # stranger (perfbench/proctree.py)
+    from perfbench.proctree import tree_cpu_s as _tree_cpu_secs
 
     jvm_pid = int(spark.sparkContext._jvm.java.lang.ProcessHandle.current().pid())
 
@@ -143,9 +108,9 @@ def main() -> None:
             times.append(time.time() - t0)
             if track_cpu:
                 d = round(_tree_cpu_secs(jvm_pid) - c0, 1)
-                # the reaped-children fix above should keep deltas >= 0;
-                # a residual negative (pid-reuse race) is not a
-                # measurement — record the rep untracked, never nonsense
+                # each scan is exact for one instant, so deltas stay
+                # >= 0; a negative would not be a measurement — record
+                # the rep untracked, never nonsense
                 cpus.append(d if d >= 0 else None)
         if track_cpu:
             extras[f"{name}_wall_per_rep"] = [round(t, 1) for t in times]

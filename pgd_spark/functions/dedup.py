@@ -25,6 +25,16 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from .candidates import (
+    INTEGRAL_IDS,
+    bucket_pairs,
+    pair_frame,
+    set_csr,
+    set_overlaps,
+    spark_ge,
+    spark_round,
+)
+
 _NORM = lambda c: F.lower(F.regexp_replace(F.trim(c), r"\s+", " "))  # noqa: E731
 
 #: modulus for the portable hash family: 2^31-1 (Mersenne prime).
@@ -90,8 +100,10 @@ def _spread(df: DataFrame) -> DataFrame:
     shuffle this costs is tiny next to the explode it parallelizes.
     Inputs that already have enough partitions pass through untouched —
     no shuffle is added on a real corpus-scale read."""
+    from ..session import num_partitions
+
     par = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < par:
+    if num_partitions(df) < par:
         return df.repartition(par)
     return df
 
@@ -236,35 +248,39 @@ def minhash_dedup(
     near-dups whose pair list is quadratic; the cap bounds the worst
     case while other bands still recall pairs (None = no cap).
 
-    Physical shape (r7, guide §2.3/§2.4 — same output value-for-value
-    as the r6 plan, which shuffled the shingle table twice and the
-    banded table three times):
+    Placement.  ONE wide aggregation per doc computes the minhashes,
+    the int verify-set array, its size AND the hash-injectivity stats
+    together (the shingle stream crosses exactly one shuffle and is
+    never cached), and one stats job over it yields the exact size of
+    everything after it.  When the verify sets and the signatures
+    (~48 B per doc, 16 B per int or 56 B per string set entry, 8 B per
+    minhash) fit the session's broadcast budget
+    (``spark.sql.autoBroadcastJoinThreshold``) and the ids are
+    integers, the operator collects that table once with Arrow and
+    finishes on the driver in numpy (:mod:`.candidates`): bands, the
+    capped candidate pairs, the exact verify, the threshold and Spark's
+    rounding, returned as a local relation with the Spark plan's rows.
+    Above the budget (or when the candidates alone would outgrow it at
+    16 B per pair, or with broadcasting off) the Spark plan runs:
 
-    * ONE wide aggregation per doc computes the 128 minhashes, the int
-      verify-set array, its size, AND the hash-injectivity stats
-      together — the shingle stream crosses exactly one shuffle and is
-      never cached.
-    * Band buckets are ARRAYS of the band's minhash values (grouping on
-      an array key ≡ the old injective comma-joined string, minus the
-      string building), and candidate pairs come from ONE groupBy
-      (collect ids per bucket, cap-filter, dedup the member arrays,
-      pair-explode) instead of bucket-size-filter join + self-join; the
-      pair dedup rides an explicit-width repartition so the verify
-      stage keeps full parallelism (AQE would coalesce the slim pair
-      rows onto a handful of tasks and serialize the array intersects).
-    * The exact verify intersects INT64 rolling-hash arrays instead of
-      string arrays whenever the per-doc stats prove the rolling hash
-      injective on this corpus (every shingle length-n, every code
-      point < HASH_BASE, HASH_BASE**n < HASH_MOD → a positional
-      encoding with no modular wrap), with an exact distinct-count
-      equality check as the secondary gate and the old string arrays as
-      the final fallback — |A∩B| is the r6 value on every path.  The
-      doc-set side broadcasts when its estimated HashedRelation fits
-      the session broadcast threshold (candidates then never shuffle),
-      else SHUFFLE_HASH.
+    * Band buckets are ARRAYS of the band's minhash values, and
+      candidate pairs come from ONE groupBy (:func:`.candidates.pair_frame`:
+      collect ids per bucket, cap-filter, dedup the member arrays,
+      pair-explode, one explicit-width pair dedup).
+    * The exact verify joins the per-doc sets to the candidates on both
+      ids (SHUFFLE_HASH) and intersects the arrays.
 
-    Executes eagerly and releases its caches before returning (see
-    _materialize_and_release)."""
+    Both placements verify over INT64 rolling-hash sets instead of
+    strings whenever the per-doc stats prove the rolling hash injective
+    on this corpus (every shingle length-n, every code point <
+    HASH_BASE, HASH_BASE**n < HASH_MOD → a positional encoding with no
+    modular wrap), with an exact distinct-count equality check as the
+    secondary gate and string sets as the final fallback — |A∩B| is the
+    same on every path.
+
+    Spark placement executes eagerly and releases its caches before
+    returning (see _materialize_and_release); the driver placement
+    releases them after its collect."""
     rows = num_hashes // bands
     sh = _shingles(df, id_col, text_col, n).withColumn("rh", char_hash("shingle", length=n))
     # largest code point among a shingle's n characters
@@ -284,12 +300,12 @@ def minhash_dedup(
         .cache()
     )
     # ONE stats job fills the cache before the final job: three of its
-    # subtrees (the banded candidate side and both verify broadcast
-    # builds) read per_doc concurrently, and racing an unpopulated cache
+    # subtrees (the banded candidate side and both verify join sides)
+    # read per_doc concurrently, and racing an unpopulated cache
     # recomputes the whole k-min aggregation once per subtree.  A global
     # aggregate scans every partition, so this job caches all of
-    # per_doc while it reads the doc count (for the broadcast sizing
-    # below) and the injectivity stats.
+    # per_doc while it reads the sizes (for the placement gate below)
+    # and the injectivity stats.
     #
     # int-verify proof: when every shingle has length n, every code
     # point is < HASH_BASE, and HASH_BASE**n < HASH_MOD, the rolling
@@ -306,6 +322,20 @@ def minhash_dedup(
     if not use_int:
         d_sh, d_rh = sh.agg(F.countDistinct("shingle"), F.countDistinct("rh")).first()
         use_int = d_sh == d_rh
+    from ..session import broadcast_budget
+
+    # the driver placement holds the verify sets (HashedRelation sizing)
+    # and the signatures
+    budget = broadcast_budget(df.sparkSession)
+    est = 48 * n_docs + (16 if use_int else 56) * n_rows + 8 * num_hashes * n_docs
+    if 0 < est <= budget and isinstance(per_doc.schema["id"].dataType, INTEGRAL_IDS):
+        out = _minhash_on_driver(
+            per_doc, None if use_int else sh, num_hashes, bands, threshold, max_bucket_size,
+            budget,
+        )
+        if out is not None:
+            per_doc.unpersist()
+            return out
     bands_sql = ", ".join(
         "named_struct('band', {}, 'bucket', array({}))".format(
             bi, ", ".join(f"h{bi * rows + r}" for r in range(rows))
@@ -315,73 +345,31 @@ def minhash_dedup(
     banded = per_doc.select("id", F.expr(f"explode(array({bands_sql})) AS bb")).select(
         "id", "bb.band", "bb.bucket"
     )
-    grouped = banded.groupBy("band", "bucket").agg(
-        F.array_sort(F.collect_list("id")).alias("ids")
-    )
-    if max_bucket_size is not None:
-        grouped = grouped.filter(F.size("ids") <= max_bucket_size)
-    # near-dup clusters collide in MOST of their bands, so the same id
-    # array recurs ~bands times; deduping the member ARRAYS first cuts
-    # the pair explosion by that factor (union of cliques ≡ union of
-    # the distinct cliques), the final pair distinct handles overlap
-    # spread the verify: candidate rows are only ~16 bytes, so AQE
-    # coalesces a plain distinct down to a handful of partitions (6 at
-    # sf0.1) — but every row above it fans into an array-intersect far
-    # heavier than its shuffle bytes, serializing the verify on a
-    # near-idle cluster.  Repartitioning by the pair key at an explicit
-    # width (user-specified counts are exempt from AQE coalescing)
-    # keeps the verify at full parallelism, and dropDuplicates on data
-    # already hash-partitioned by its keys adds no second exchange.
-    from ..session import shuffle_width
-
-    npart = shuffle_width(df.sparkSession)
-    cand = (
-        grouped.filter(F.size("ids") >= 2)
-        .select("ids")
-        .distinct()
-        .select(F.posexplode("ids").alias("_i", "id_a"), F.col("ids"))
-        .select(
-            "id_a",
-            F.explode(F.slice("ids", F.col("_i") + 2, F.size("ids"))).alias("id_b"),
-        )
-        .repartition(npart, F.col("id_a"), F.col("id_b"))
-        .dropDuplicates()
-    )
+    cand = pair_frame(banded, ["band", "bucket"], max_bucket_size)
     # exact verify on the candidate set via per-doc set ARRAYS +
-    # array_intersect: two id-keyed joins carry O(candidates) rows, each
-    # holding one bounded doc-set array (shingle count ≤ text length,
-    # which a corpus pipeline chunks) — the exploded (id, shingle)
-    # equi-join variant materialized O(candidates × shingles) join rows
-    # (266M at sf0.1, 18.6 s).  Counts are identical: |set ∩ set| over
-    # the same distinct shingles (see the int-hash proof above).
-    from ..session import parse_size_bytes
-
-    threshold_b = parse_size_bytes(
-        df.sparkSession.conf.get("spark.sql.autoBroadcastJoinThreshold", "67108864"),
-        default=64 * 1024 * 1024,
-    )
-    # both verify-join sides project the cached per_doc table, so each
-    # broadcast build is a 5k-row cache scan, not a recomputation
-    est = 48 * n_docs + (16 if use_int else 56) * n_rows
+    # array_intersect: two id-keyed SHUFFLE_HASH joins carry
+    # O(candidates) rows, each holding one bounded doc-set array
+    # (shingle count ≤ text length, which a corpus pipeline chunks) —
+    # the exploded (id, shingle) equi-join variant materialized
+    # O(candidates × shingles) join rows (266M at sf0.1, 18.6 s).
+    # Counts are identical: |set ∩ set| over the same distinct shingles
+    # (see the int-hash proof above).
     caches = [per_doc]
     if use_int:
         doc_sets = per_doc.select("id", "shs", "sz")
     else:
         # rare path (hash provably or possibly collides): string verify
         # sets, re-aggregated once and cached (both join sides read it)
-        doc_sets = sh.groupBy("id").agg(
-            F.collect_list("shingle").alias("shs"), F.count(F.lit(1)).alias("sz")
-        ).cache()
+        doc_sets = _string_sets(sh).cache()
         doc_sets.count()
         caches.append(doc_sets)
 
     def _ds(alias_id: str, alias_shs: str, alias_sz: str):
-        side = doc_sets.select(
+        return doc_sets.select(
             F.col("id").alias(alias_id),
             F.col("shs").alias(alias_shs),
             F.col("sz").alias(alias_sz),
-        )
-        return F.broadcast(side) if 0 < est <= threshold_b else side.hint("shuffle_hash")
+        ).hint("shuffle_hash")
 
     out = (
         cand.join(_ds("id_a", "sa", "sz_a"), "id_a")
@@ -392,6 +380,76 @@ def minhash_dedup(
         .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
     )
     return _materialize_and_release(out, *caches)
+
+
+def _string_sets(sh: DataFrame) -> DataFrame:
+    """[id, shs, sz]: each doc's shingle STRINGS, the verify sets when
+    the rolling hash may collide on this corpus."""
+    return sh.groupBy("id").agg(
+        F.collect_list("shingle").alias("shs"), F.count(F.lit(1)).alias("sz")
+    )
+
+
+def _minhash_on_driver(
+    per_doc: DataFrame,
+    sh: DataFrame | None,
+    num_hashes: int,
+    bands: int,
+    threshold: float,
+    max_bucket_size: int | None,
+    budget: int,
+) -> DataFrame | None:
+    """minhash_dedup's bands, candidates and exact verify in numpy over
+    one Arrow collect of ``per_doc`` (and of the string sets of ``sh``
+    when the rolling hash may collide).  Same rows as the Spark plan:
+    a null id never pairs (``collect_list`` drops it), a doc's verify
+    set is its distinct shingles, and |A| counts every shingle row of
+    the id, as ``count(1)`` does.  None when the candidates would
+    outgrow the budget (16 B per pair); the Spark plan then runs."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    from ..graph import local_frame
+
+    rows = num_hashes // bands
+    hcols = [f"h{i}" for i in range(num_hashes)]
+    sig = per_doc.select("id", *hcols, *(["shs"] if sh is None else [])).toArrow()
+    sig = sig.filter(pc.is_valid(sig["id"]))
+    ids = sig["id"].to_numpy()
+    order = np.argsort(ids)
+    uid, n = ids[order], len(ids)
+    h = np.column_stack([sig[c].to_numpy() for c in hcols])[order]
+    keys = np.concatenate(
+        [np.column_stack([np.full(n, bi), h[:, bi * rows : (bi + 1) * rows]]) for bi in range(bands)]
+    )
+    pairs = bucket_pairs(keys, np.tile(np.arange(n), bands), max_bucket_size, budget // 16)
+    if pairs is None:
+        return None
+    a, b = pairs
+    sets = sig if sh is None else _string_sets(sh).select("id", "shs").toArrow()
+    sets = sets.filter(pc.is_valid(sets["id"]))
+    shs = sets["shs"].combine_chunks()
+    lens = np.diff(shs.offsets.to_numpy())
+    vals = shs.flatten()
+    if sh is not None:
+        vals = vals.dictionary_encode().indices  # dense ints, equal iff the strings are
+    rank = np.searchsorted(uid, sets["id"].to_numpy())
+    indptr, flat = set_csr(np.repeat(rank, lens), vals.to_numpy(), n)
+    sz = np.zeros(n, dtype=np.int64)
+    sz[rank] = lens
+    inter = set_overlaps(indptr, flat, a, b)
+    jac = inter / (sz[a] + sz[b] - inter)
+    keep = spark_ge(jac, threshold)
+    id_type = sig.schema.field("id").type
+    return local_frame(
+        per_doc.sparkSession,
+        {
+            "id_a": pa.array(uid[a[keep]], type=id_type),
+            "id_b": pa.array(uid[b[keep]], type=id_type),
+            "jaccard": spark_round(jac[keep]),
+        },
+    )
 
 
 def simhash_signatures(

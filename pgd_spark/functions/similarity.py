@@ -27,6 +27,18 @@ from __future__ import annotations
 
 import numpy as np
 from pyspark.sql import Column, DataFrame, Window, functions as F
+from pyspark.sql.types import ArrayType, DoubleType, FloatType
+
+from .candidates import (
+    INTEGRAL_IDS,
+    bucket_pairs,
+    fold_dot,
+    fold_dot_pairs,
+    pair_frame,
+    spark_ge,
+    spark_gt0,
+    spark_round,
+)
 
 
 def _infer_dim(items: DataFrame, vec_col: str) -> int:
@@ -356,22 +368,12 @@ def ivf_cosine_topk(
             items, n_centroids, id_col, vec_col, refine_sweeps=refine_sweeps
         )
     if broadcast_probes is None:
+        from ..session import broadcast_budget
+
         nq, qdim = queries.agg(
             F.count(F.lit(1)), F.coalesce(F.max(F.size(vec_col)), F.lit(0))
         ).first()
-        from ..session import parse_size_bytes
-
-        # the conf may carry a size suffix ('64m', '100MB') when set
-        # outside get_spark — parse Spark's size grammar, never int()
-        threshold = max(
-            parse_size_bytes(
-                queries.sparkSession.conf.get(
-                    "spark.sql.autoBroadcastJoinThreshold", "67108864"
-                ),
-                default=64 * 1024 * 1024,
-            ),
-            0,
-        )
+        threshold = broadcast_budget(queries.sparkSession)
         # per probe row: qvec doubles + id/norm/struct overhead
         broadcast_probes = nq * nprobe * (8 * qdim + 96) <= threshold
     qs = queries.select(
@@ -428,60 +430,52 @@ def embedding_neardup_pairs(
     p = 1 - θ/π — the defaults put ≥99% recall at cosine ≥ 0.9;
     weaker thresholds need fewer bits).
 
-    Scale shape: the bucket join carries ONLY (table, bucket, id) rows
-    — vectors rejoin by id afterward, so the self-join shuffle never
-    moves embeddings.  ``max_bucket`` skips buckets larger than the cap
-    (a degenerate bucket of B items implies B²/2 candidate pairs; other
-    tables still recall its pairs), bounding the worst case on
-    near-constant embedding regions.  Executes eagerly and releases its
-    internal caches (same contract as the text dedup operators).
+    Placement.  When the (id, vector) table fits the session's
+    broadcast budget (``spark.sql.autoBroadcastJoinThreshold``; the
+    scan's own size estimate, the one Catalyst broadcasts on) and
+    its ids are integers and its vectors float or double, the operator
+    collects it once with Arrow — at most budget / (8 + dim × element
+    bytes) rows, so an underestimate cannot pull more than the budget
+    — and finishes on the driver in numpy (:mod:`.candidates`): the
+    same sign buckets, the capped candidate pairs, the exact cosine
+    (dot products and norms folded in index order, as Spark's
+    ``aggregate(zip_with(...))`` does, and NaN ordered as Spark orders
+    it), the threshold and Spark's rounding, returned as a local
+    relation with the Spark plan's rows.  Null ids never pair.  Null,
+    ragged or null-element vectors, repeated ids, candidates past the
+    budget (16 B per pair) and broadcasting off keep the Spark plan:
+
+    * the bucket join carries ONLY (table, bucket, id) rows — vectors
+      rejoin by id afterward, so the self-join shuffle never moves
+      embeddings — and candidates come from one groupBy per bucket
+      (:func:`.candidates.pair_frame`);
+    * the vector re-attach is two plain equi-joins: Catalyst broadcasts
+      the vector side while it fits the threshold and falls back to a
+      shuffle join at corpus scale.
+
+    ``max_bucket`` skips buckets larger than the cap (a degenerate
+    bucket of B items implies B²/2 candidate pairs; other tables still
+    recall its pairs), bounding the worst case on near-constant
+    embedding regions.  The Spark placement executes eagerly and
+    releases its internal caches (same contract as the text dedup
+    operators).
     """
     from .dedup import _materialize_and_release
 
     if dim is None:
         dim = _infer_dim(items, vec_col)
+    out = _neardup_on_driver(items, id_col, vec_col, threshold, bits, tables, seed, dim, max_bucket)
+    if out is not None:
+        return out
     hashed = (
         items.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
         .select("id", _explode_buckets("v", dim, bits, tables, seed))
         .select(F.col("bk.t").alias("t"), F.col("bk.b").alias("b"), "id")
         .cache()
     )
-    # candidate pairs from ONE groupBy per bucket (collect ids, cap
-    # filter, pair-explode the sorted array) instead of size-filter
-    # anti-join + self-join — the r6 plan shuffled hashed three times.
-    # Near-dup groups collide in many tables, so dedup the member
-    # ARRAYS before exploding (union of cliques ≡ union of the distinct
-    # cliques; the final pair distinct handles partial overlap).
     # hashed feeds exactly one subtree, so the cache populates inside
     # the final job — no pre-count needed.
-    grouped = hashed.groupBy("t", "b").agg(F.array_sort(F.collect_list("id")).alias("ids"))
-    if max_bucket is not None:
-        grouped = grouped.filter(F.size("ids") <= max_bucket)
-    # pair dedup rides the SAME exchange that spreads the re-score:
-    # repartition by the pair key at an explicit width (candidate rows
-    # are ~16 bytes but fan into a dim-wide cosine each, so AQE's
-    # byte-based coalescing would run the verify on a handful of
-    # tasks), then dropDuplicates — already hash-partitioned on its
-    # keys at that width, so it adds no second exchange
-    from ..session import shuffle_width
-
-    npart = shuffle_width(items.sparkSession)
-    cand = (
-        grouped.filter(F.size("ids") >= 2)
-        .select("ids")
-        .distinct()
-        .select(F.posexplode("ids").alias("_i", "id_a"), F.col("ids"))
-        .select(
-            "id_a",
-            F.explode(F.slice("ids", F.col("_i") + 2, F.size("ids"))).alias("id_b"),
-        )
-        .repartition(npart, F.col("id_a"), F.col("id_b"))
-        .dropDuplicates()
-    )
-    # vector re-attach: plain equi-joins — the vec side's size estimate
-    # comes straight from the parquet scan, so Catalyst/AQE broadcasts
-    # it while it fits the threshold and falls back to a shuffle join
-    # at corpus scale (no driver-side sizing pass needed)
+    cand = pair_frame(hashed, ["t", "b"], max_bucket)
     vecs = items.select(
         F.col(id_col).alias("id"),
         F.col(vec_col).alias("v"),
@@ -505,3 +499,75 @@ def embedding_neardup_pairs(
         .select("id_a", "id_b", F.round("sim", 6).alias("sim"))
     )
     return _materialize_and_release(out, hashed)
+
+
+def _neardup_on_driver(
+    items: DataFrame,
+    id_col: str,
+    vec_col: str,
+    threshold: float,
+    bits: int,
+    tables: int,
+    seed: int,
+    dim: int,
+    max_bucket: int | None,
+) -> DataFrame | None:
+    """embedding_neardup_pairs in numpy over one bounded Arrow collect
+    of the (id, vector) table, or None when the Spark plan must run
+    (see the operator's placement notes)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    from ..graph import local_frame
+    from ..session import broadcast_budget
+
+    sel = items.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
+    vtype = sel.schema["v"].dataType
+    if not (
+        isinstance(sel.schema["id"].dataType, INTEGRAL_IDS)
+        and isinstance(vtype, ArrayType)
+        and isinstance(vtype.elementType, (FloatType, DoubleType))
+    ):
+        return None
+    budget = broadcast_budget(items.sparkSession)
+    est = int(str(sel._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
+    limit = budget // (8 + dim * (4 if isinstance(vtype.elementType, FloatType) else 8))
+    if not (0 < est <= budget and limit > 0):
+        return None
+    tbl = sel.limit(limit + 1).toArrow()
+    if tbl.num_rows > limit:
+        return None
+    tbl = tbl.filter(pc.is_valid(tbl["id"]))
+    ids = tbl["id"].to_numpy()
+    vecs = tbl["v"].combine_chunks()
+    flat = vecs.flatten()
+    n = len(ids)
+    if vecs.null_count or flat.null_count or len(np.unique(ids)) < n:
+        return None
+    if (np.diff(vecs.offsets.to_numpy()) != dim).any():
+        return None
+    order = np.argsort(ids)
+    uid = ids[order]
+    x = flat.to_numpy().astype(np.float64).reshape(n, dim)[order]
+    planes = np.array([p for t in range(tables) for p in _hyperplanes(dim, bits, t, seed)])
+    bit = spark_gt0(fold_dot(x[:, None, :], planes[None, :, :])).reshape(n, tables, bits)
+    bucket = (bit.astype(np.int64) << np.arange(bits)).sum(axis=2)
+    keys = np.column_stack([np.repeat(np.arange(tables), n), bucket.T.ravel()])
+    pairs = bucket_pairs(keys, np.tile(np.arange(n), tables), max_bucket, budget // 16)
+    if pairs is None:
+        return None
+    a, b = pairs
+    nrm = np.sqrt(fold_dot(x, x))
+    den = nrm[a] * nrm[b]
+    with np.errstate(divide="ignore", invalid="ignore"):
+        sim = np.where(spark_gt0(den), fold_dot_pairs(x, a, b) / den, -1.0)
+    keep = spark_ge(sim, threshold)
+    id_type = tbl.schema.field("id").type
+    return local_frame(
+        items.sparkSession,
+        {
+            "id_a": pa.array(uid[a[keep]], type=id_type),
+            "id_b": pa.array(uid[b[keep]], type=id_type),
+            "sim": spark_round(sim[keep]),
+        },
+    )

@@ -156,19 +156,12 @@ class _TwoHop:
     carrying the hub's full array) in ONE partition."""
 
     def __init__(self, g: Graph, hot_threshold: int | None = None):
-        from pgd_spark.session import parse_size_bytes, shuffle_width
+        from pgd_spark.session import broadcast_budget, shuffle_width
 
         self.npart = shuffle_width(g.spark)
         m = g.num_edges()
         n = max(g.num_vertices(), 1)
-        # the conf may carry a size suffix ('64m') — Spark's size grammar
-        bcast_bytes = max(
-            parse_size_bytes(
-                g.spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "67108864"),
-                default=64 * 1024 * 1024,
-            ),
-            0,
-        )
+        bcast_bytes = broadcast_budget(g.spark)
         self.small_adj = 48 * n + 16 * 2 * m <= bcast_bytes
         self.adj = g.adjacency()
         ekeys = g.edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
@@ -443,12 +436,16 @@ def _with_tailed_raw(g: Graph, counts: DataFrame) -> DataFrame:
     in s twice, so the halved sum is the count."""
     hop = _TwoHop(g)
     base = hop.spread(hop.join(g.oriented().select("v", "u")).select("v", "u", "wu", "wv"))
-    wu, wv = (
-        base.filter(F.size(w) >= 2).select("v", "u", F.col(w).alias("s"), F.explode(w).alias("x"))
-        for w in ("wu", "wv")
+    # both wedge sides leave ONE projection of the join: pair_hits reads
+    # its rows twice (hot and cold x), so a union of per-side streams
+    # would plan the un-persisted two-hop join once per side and branch
+    rows = (
+        base.select("v", "u", F.explode(F.array("wu", "wv")).alias("s"))
+        .filter(F.size("s") >= 2)
+        .select("v", "u", "s", F.explode("s").alias("x"))
     )
     tailed = (
-        hop.pair_hits(wu.unionByName(wv))
+        hop.pair_hits(rows)
         .groupBy("v", "u")
         .agg((F.sum("hits") / 2).cast("long").alias("tailed_raw"))
     )

@@ -249,6 +249,8 @@ def pagerank(
     than a per-iteration check would — it may run up to k-1 extra
     iterations past true convergence (documented overshoot).
     """
+    from pgd_spark.session import num_partitions
+
     spark = g.spark
     n = g.num_vertices()
     if n == 0:
@@ -261,7 +263,7 @@ def pagerank(
         log = log if log is not None else IterationLog()
         # every per-iteration groupBy must land on the adjacency
         # table's width or the join re-exchanges both sides each round
-        with pinned_shuffle(spark, adj.rdd.getNumPartitions()):
+        with pinned_shuffle(spark, num_partitions(adj)):
             return _pagerank_loop(
                 g, adj, own_adj, alpha, tol, max_iter, checkpoint_dir, log,
                 checkpoint_interval, n, deg,

@@ -127,6 +127,27 @@ def parse_size_bytes(size: str | int, default: int) -> int:
         return default
 
 
+def broadcast_budget(spark) -> int:
+    """``spark.sql.autoBroadcastJoinThreshold`` in bytes, read with
+    Spark's size grammar; 0 when broadcasting is off (-1).  The knob
+    admins size to executor memory, and the budget every operator here
+    sizes its broadcast and driver-side tables against."""
+    return max(
+        parse_size_bytes(
+            spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "67108864"),
+            default=64 * 1024 * 1024,
+        ),
+        0,
+    )
+
+
+def num_partitions(df) -> int:
+    """Partition count of ``df``'s physical plan, read from the JVM
+    plan's own RDD: ``DataFrame.rdd`` would first wrap the plan in a
+    Python row RDD, for nothing."""
+    return df._jdf.queryExecution().toRdd().getNumPartitions()
+
+
 def shuffle_width(spark) -> int:
     """``spark.sql.shuffle.partitions`` as a positive int.  A value that
     is not an integer (e.g. ``"auto"``, which some platforms accept)

@@ -42,12 +42,11 @@ def copurchase_edges(lineitem: DataFrame, max_partkey: int | None = None) -> Dat
     # shuffle this costs is repaid many times by a 32-way join stage;
     # inputs that already carry enough partitions pass through (a real
     # multi-file table at scale does).  The build side stays narrow —
-    # it is collected for the broadcast anyway.  The partition count
-    # comes from the JVM plan's own RDD; ``li.rdd`` would also wrap it in
-    # a Python row RDD, for nothing
+    # it is collected for the broadcast anyway.
+    from pgd_spark.session import num_partitions
+
     par = lineitem.sparkSession.sparkContext.defaultParallelism
-    nparts = li._jdf.queryExecution().toRdd().getNumPartitions()
-    a = (li.repartition(par) if nparts < par else li).alias("a")
+    a = (li.repartition(par) if num_partitions(li) < par else li).alias("a")
     b = li.alias("b")
     edges = (
         a.join(b, F.col("a.l_orderkey") == F.col("b.l_orderkey"))

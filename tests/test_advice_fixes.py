@@ -396,9 +396,13 @@ def test_video_real_codec_contract_names_wheels(spark):
 
 
 def test_dedup_uses_reliable_checkpoint_when_dir_set(spark, tmp_path):
-    """With sc.setCheckpointDir configured, dedup results must survive
-    via a reliable checkpoint (executor-loss tolerant) and still release
-    every internal cache; results identical to the local path."""
+    """With sc.setCheckpointDir configured, the Spark placement's dedup
+    results must survive via a reliable checkpoint (executor-loss
+    tolerant) and still release every internal cache; results identical
+    to the local path.  The driver placement (20 docs fit the broadcast
+    budget) returns a local relation with the same rows."""
+    import os
+
     from pgd_spark.functions.dedup import minhash_dedup as minhash_dedup_pairs
 
     docs = spark.createDataFrame(
@@ -406,16 +410,22 @@ def test_dedup_uses_reliable_checkpoint_when_dir_set(spark, tmp_path):
          for i in range(20)],
         "doc_id long, text string",
     )
-    base = minhash_dedup_pairs(docs).collect()
+    on_driver = minhash_dedup_pairs(docs)
+    assert "LocalRelation" in on_driver._jdf.queryExecution().optimizedPlan().toString()
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")  # the Spark placement, where checkpoints apply
     sc = spark.sparkContext
-    assert sc.getCheckpointDir() is None
-    sc.setCheckpointDir(str(tmp_path / "ck"))
     try:
+        base = minhash_dedup_pairs(docs).collect()
+        assert sorted(map(tuple, base)) == sorted(map(tuple, on_driver.collect()))
+        assert sc.getCheckpointDir() is None
+        sc.setCheckpointDir(str(tmp_path / "ck"))
         rel = minhash_dedup_pairs(docs).collect()
         assert sorted(map(tuple, base)) == sorted(map(tuple, rel))
-        import os
         assert os.listdir(str(tmp_path / "ck")), "reliable checkpoint dir unused"
     finally:
+        spark.conf.set(key, old)
         getattr(sc._jsc.sc(), "checkpointDir_$eq")(sc._jvm.scala.Option.apply(None))
     assert sc.getCheckpointDir() is None
 

@@ -181,3 +181,19 @@ def test_derived_operators_release_distributed_census(spark, monkeypatch):
         assert len(base) == 1
         release_internal_caches(out)
         assert not base & persisted()
+
+
+def test_tailed_pass_plans_the_two_hop_join_once_per_branch(spark):
+    """Both wedge sides of the corrected tailed pass leave one projection
+    of the (un-persisted) two-hop join, so its executed plan computes
+    W_u and W_v in one Project per pair-hit branch (hot, cold): two
+    copies of ``ori ⋈ N(v) ⋈ N(u)``, not one per side and branch."""
+    from pgd_spark.operators.graphlets import _with_tailed_raw
+    from pgd_spark.sources.synthetic import random_graph
+
+    g = random_graph(spark, 2000, 10000, seed=5, skew=0.3)
+    out = _with_tailed_raw(g, g.oriented().select("v", "u"))
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    wedges = [ln for ln in plan.splitlines() if "Project [" in ln and "array_except" in ln]
+    assert len(wedges) == 2, wedges
+    assert all(" AS wu#" in ln and " AS wv#" in ln for ln in wedges)

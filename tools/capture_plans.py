@@ -100,7 +100,9 @@ def main() -> None:
     dump("transcript_derive", tg.edges)
 
     # ---- minhash_dedup / emb_neardup / dup_clusters: wrap the eager
-    # materializer to capture the plan of the frame it is about to run
+    # materializer to capture the plan of the frame it is about to run.
+    # Tables that fit the broadcast budget finish on the driver with no
+    # Spark plan to capture: broadcasting off selects the Spark placement
     from pgd_spark.functions import dedup, similarity
 
     pending: list = []
@@ -112,6 +114,8 @@ def main() -> None:
 
     dedup._materialize_and_release = capturing_mat
     similarity_mat = getattr(similarity, "_materialize_and_release", None)
+    bcast = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
         docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
         dedup.minhash_dedup(docs, threshold=0.75)
@@ -122,6 +126,7 @@ def main() -> None:
         )
         dump("emb_neardup", pending.pop())
     finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", bcast)
         dedup._materialize_and_release = orig_mat
         if similarity_mat is not None:
             similarity._materialize_and_release = similarity_mat
