@@ -119,13 +119,19 @@ def bucket_pairs(keys: np.ndarray, members: np.ndarray, cap: int | None, max_pai
 def set_csr(rows: np.ndarray, values: np.ndarray, n: int):
     """(indptr, values) of ``n`` sets from (row, value) entries: each
     row's DISTINCT values, sorted.  Values must lie in [0, 2^31)."""
-    key = np.unique((rows.astype(np.int64) << 31) | values.astype(np.int64))
+    key = rows.astype(np.int64) << 31
+    key |= values
+    key.sort()
+    if len(key):
+        key = key[np.append(True, key[1:] != key[:-1])]
     indptr = np.zeros(n + 1, dtype=np.int64)
     np.cumsum(np.bincount(key >> 31, minlength=n), out=indptr[1:])
     return indptr, key & ((1 << 31) - 1)
 
 
-def set_overlaps(indptr: np.ndarray, values: np.ndarray, a: np.ndarray, b: np.ndarray) -> np.ndarray:
+def set_overlaps(
+    indptr: np.ndarray, values: np.ndarray, a: np.ndarray, b: np.ndarray
+) -> np.ndarray:
     """|set a[i] ∩ set b[i]| for every pair, over a :func:`set_csr`.
 
     Pairs go in chunks of about ``_CHUNK`` gathered values: both rows

@@ -421,7 +421,10 @@ def _minhash_on_driver(
     uid, n = ids[order], len(ids)
     h = np.column_stack([sig[c].to_numpy() for c in hcols])[order]
     keys = np.concatenate(
-        [np.column_stack([np.full(n, bi), h[:, bi * rows : (bi + 1) * rows]]) for bi in range(bands)]
+        [
+            np.column_stack([np.full(n, bi), h[:, bi * rows : (bi + 1) * rows]])
+            for bi in range(bands)
+        ]
     )
     pairs = bucket_pairs(keys, np.tile(np.arange(n), bands), max_bucket_size, budget // 16)
     if pairs is None:
@@ -435,13 +438,14 @@ def _minhash_on_driver(
     if sh is not None:
         vals = vals.dictionary_encode().indices  # dense ints, equal iff the strings are
     rank = np.searchsorted(uid, sets["id"].to_numpy())
+    id_type = sig.schema.field("id").type
     indptr, flat = set_csr(np.repeat(rank, lens), vals.to_numpy(), n)
+    del sig, sets, shs, vals  # the Arrow copy of the sets: CSR holds them now
     sz = np.zeros(n, dtype=np.int64)
     sz[rank] = lens
     inter = set_overlaps(indptr, flat, a, b)
     jac = inter / (sz[a] + sz[b] - inter)
     keep = spark_ge(jac, threshold)
-    id_type = sig.schema.field("id").type
     return local_frame(
         per_doc.sparkSession,
         {

@@ -53,7 +53,8 @@ def _agree(spark, call, driver=True):
 
 
 def _words(rng, n):
-    return ["".join(rng.choice("abcdefghijklmnopqrstuvwxyz") for _ in range(rng.randint(3, 7))) for _ in range(n)]
+    letters = "abcdefghijklmnopqrstuvwxyz"
+    return ["".join(rng.choice(letters) for _ in range(rng.randint(3, 7))) for _ in range(n)]
 
 
 def _corpus(seed: int = 7, n: int = 50):
@@ -107,7 +108,8 @@ def test_minhash_string_sets_placements_agree(spark, monkeypatch):
     cjk = [chr(0x4E10 + i) for i in range(200)]
     rng = random.Random(3)
     base = ["".join(rng.choice(cjk) for _ in range(40)) for _ in range(8)]
-    rows = [(i, t + s1) for i, t in enumerate(base)] + [(10 + i, t + s2) for i, t in enumerate(base)]
+    rows = [(i, t + s1) for i, t in enumerate(base)]
+    rows += [(10 + i, t + s2) for i, t in enumerate(base)]
     rows += [(20 + i, t[:-1] + s1) for i, t in enumerate(base)]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     calls = []
@@ -191,7 +193,8 @@ def _items(kind: str):
     rng = np.random.default_rng(5)
     base = rng.standard_normal((40, 8)).astype(np.float32)
     rows = [(i, v.tolist()) for i, v in enumerate(base)]
-    rows += [(50 + i, (base[i] + 0.05 * rng.standard_normal(8)).astype(np.float32).tolist()) for i in range(0, 40, 4)]
+    near = base + (0.05 * rng.standard_normal((40, 8))).astype(np.float32)
+    rows += [(50 + i, near[i].tolist()) for i in range(0, 40, 4)]
     rows += [(100 + i, base[7].tolist()) for i in range(12)]
     rows.append((None, base[3].tolist()))
     odd = {
@@ -207,14 +210,23 @@ def _items(kind: str):
 
 @pytest.mark.parametrize(
     "kind,driver",
-    [("plain", True), ("nan", True), ("null", False), ("short", False), ("null_element", False), ("repeated_id", False)],
+    [
+        ("plain", True),
+        ("nan", True),
+        ("null", False),
+        ("short", False),
+        ("null_element", False),
+        ("repeated_id", False),
+    ],
 )
 @pytest.mark.parametrize("cap,dim", [(None, 8), (5, None)])
 def test_neardup_placements_agree(spark, tmp_path, kind, driver, cap, dim):
     items = _scan(spark, tmp_path, _items(kind), "vec_id long, embedding array<float>")
     out = _agree(
         spark,
-        lambda: embedding_neardup_pairs(items, threshold=0.6, bits=5, tables=4, dim=dim, max_bucket=cap),
+        lambda: embedding_neardup_pairs(
+            items, threshold=0.6, bits=5, tables=4, dim=dim, max_bucket=cap
+        ),
         driver=driver,
     )
     sims = {(r.id_a, r.id_b): r.sim for r in out.collect()}
@@ -243,7 +255,9 @@ def test_neardup_gate_follows_scan_estimate(spark, tmp_path):
     items = _scan(spark, tmp_path, rows, "vec_id long, embedding array<float>")
     est = _estimate(items)
     assert est >= len(rows) * (8 + 4 * 8)
-    call = lambda df: embedding_neardup_pairs(df, threshold=0.6, bits=6, tables=4, dim=8)  # noqa: E731
+    def call(df):
+        return embedding_neardup_pairs(df, threshold=0.6, bits=6, tables=4, dim=8)
+
     with _budget(spark, est):
         at = call(items)
     with _budget(spark, est - 1):
@@ -252,7 +266,9 @@ def test_neardup_gate_follows_scan_estimate(spark, tmp_path):
     assert _rows(at) == _rows(below)
     # a local relation's estimate counts 4 bytes per array
     local = spark.createDataFrame(
-        pd.DataFrame({"vec_id": [r[0] for r in rows], "embedding": [np.float32(r[1]) for r in rows]})
+        pd.DataFrame(
+            {"vec_id": [r[0] for r in rows], "embedding": [np.float32(r[1]) for r in rows]}
+        )
     )
     assert _on_driver(local)
     small = _estimate(local)
@@ -296,7 +312,9 @@ def test_set_overlaps_against_sets():
     rows = np.concatenate([np.full(len(s), i) for i, s in enumerate(sets)])
     vals = np.concatenate([sorted(s) for s in sets])
     # repeated entries of a row count once, as collect_list duplicates do
-    indptr, flat = candidates.set_csr(np.concatenate([rows, rows[:40]]), np.concatenate([vals, vals[:40]]), 60)
+    indptr, flat = candidates.set_csr(
+        np.concatenate([rows, rows[:40]]), np.concatenate([vals, vals[:40]]), 60
+    )
     a, b = np.triu_indices(60, 1)
     got = candidates.set_overlaps(indptr, flat, a, b)
     assert got.tolist() == [len(sets[i] & sets[j]) for i, j in zip(a, b)]
