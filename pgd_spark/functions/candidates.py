@@ -116,50 +116,81 @@ def bucket_pairs(keys: np.ndarray, members: np.ndarray, cap: int | None, max_pai
     return packed // n, packed % n
 
 
-def set_csr(rows: np.ndarray, values: np.ndarray, n: int):
-    """(indptr, values) of ``n`` sets from (row, value) entries: each
-    row's DISTINCT values, sorted.  Values must lie in [0, 2^31)."""
-    key = rows.astype(np.int64) << 31
-    key |= values
+def set_csr(key: np.ndarray, n: int):
+    """(indptr, values) of ``n`` sets from packed ``row << 31 | value``
+    entries (values in [0, 2^31)): each row's DISTINCT values, sorted.
+    Consumes ``key``: sorts it, and may return it as the values."""
     key.sort()
     if len(key):
-        key = key[np.append(True, key[1:] != key[:-1])]
-    indptr = np.zeros(n + 1, dtype=np.int64)
-    np.cumsum(np.bincount(key >> 31, minlength=n), out=indptr[1:])
-    return indptr, key & ((1 << 31) - 1)
+        dup = key[1:] == key[:-1]
+        if dup.any():
+            key = key[np.append(True, ~dup)]
+        del dup
+    indptr = np.searchsorted(key, np.arange(n + 1, dtype=np.int64) << 31)
+    key &= (1 << 31) - 1
+    return indptr, key
 
 
 def set_overlaps(
-    indptr: np.ndarray, values: np.ndarray, a: np.ndarray, b: np.ndarray
+    indptr: np.ndarray, values: np.ndarray, a: np.ndarray, b: np.ndarray, threads: int = 1
 ) -> np.ndarray:
     """|set a[i] ∩ set b[i]| for every pair, over a :func:`set_csr`.
 
-    Pairs go in chunks of about ``_CHUNK`` gathered values: both rows
-    of each pair are tagged with the pair's index within the chunk,
-    packed into one (pair, value) key and sorted; since a row holds
-    distinct values, a key occurs twice exactly when its value is
-    shared."""
-    from ..operators.kernels import _multi_slice_gather
-
+    Pairs go in chunks of about ``_CHUNK / threads`` gathered b-side
+    values.  For each run of pairs with the same ``a`` (pairs sorted by
+    ``a`` make one run per item), the a-side values are marked in a
+    bitmap over the value range, the run's b-side values are looked up
+    in it, and the marks are cleared again; since a row holds distinct
+    values, each hit is one shared value.  Chunks run on ``threads``
+    threads with a bitmap each (max value + 1 bytes); a single chunk
+    runs on the caller's thread."""
     lens = np.diff(indptr)
-    cost = np.cumsum(lens[a] + lens[b])
-    out = np.empty(len(a), dtype=np.int64)
-    lo = 0
-    while lo < len(a):
+    cost = np.cumsum(lens[b])
+    step = _CHUNK // max(threads, 1)
+    bounds = [0]
+    while bounds[-1] < len(a):
+        lo = bounds[-1]
         done = cost[lo - 1] if lo else 0
-        hi = max(int(np.searchsorted(cost, done + _CHUNK, side="right")), lo + 1)
+        bounds.append(max(int(np.searchsorted(cost, done + step, side="right")), lo + 1))
+    space = int(values.max(initial=-1)) + 1
+    out = np.empty(len(a), dtype=np.int64)
+
+    def run(lo: int, hi: int):
+        mark = np.zeros(space, dtype=bool)
         pa, pb = a[lo:hi], b[lo:hi]
-        tag = np.arange(hi - lo, dtype=np.int64)
-        key = np.concatenate(
-            [
-                (np.repeat(tag, lens[pa]) << 31) | _multi_slice_gather(indptr, values, pa),
-                (np.repeat(tag, lens[pb]) << 31) | _multi_slice_gather(indptr, values, pb),
-            ]
-        )
-        key.sort()
-        out[lo:hi] = np.bincount(key[1:][key[1:] == key[:-1]] >> 31, minlength=hi - lo)
-        lo = hi
+        seg = np.zeros(hi - lo + 1, dtype=np.int64)
+        np.cumsum(lens[pb], out=seg[1:])
+        # the b-side values, gathered: positions are the rows' offsets
+        # in indptr plus a running index
+        got = np.arange(seg[-1], dtype=np.int64)
+        got += np.repeat(indptr[pb] - seg[:-1], lens[pb])
+        got = values[got]
+        runs = np.flatnonzero(np.append(True, pa[1:] != pa[:-1])).tolist() + [hi - lo]
+        hit = np.empty(len(got), dtype=bool)
+        for r0, r1 in zip(runs[:-1], runs[1:]):
+            own = values[indptr[pa[r0]] : indptr[pa[r0] + 1]]
+            mark[own] = True
+            hit[seg[r0] : seg[r1]] = mark[got[seg[r0] : seg[r1]]]
+            mark[own] = False
+        del got
+        nz = seg[1:] > seg[:-1]  # reduceat reads one element for an empty row
+        out[lo:hi] = 0
+        out[lo:hi][nz] = np.add.reduceat(hit, seg[:-1][nz], dtype=np.int64)
+
+    parallel_map(run, bounds[:-1], bounds[1:], threads)
     return out
+
+
+def parallel_map(fn, los, his, threads: int) -> list:
+    """``[fn(lo, hi) ...]`` over the chunk bounds, on up to ``threads``
+    threads; one chunk (or one thread) runs on the caller's thread and
+    starts no pool."""
+    if threads <= 1 or len(los) <= 1:
+        return [fn(lo, hi) for lo, hi in zip(los, his)]
+    from concurrent.futures import ThreadPoolExecutor
+
+    with ThreadPoolExecutor(min(threads, len(los))) as pool:
+        return list(pool.map(fn, los, his))
 
 
 def fold_dot(x: np.ndarray, y: np.ndarray) -> np.ndarray:

@@ -248,20 +248,22 @@ def minhash_dedup(
     near-dups whose pair list is quadratic; the cap bounds the worst
     case while other bands still recall pairs (None = no cap).
 
-    Placement.  ONE wide aggregation per doc computes the minhashes,
-    the int verify-set array, its size AND the hash-injectivity stats
-    together (the shingle stream crosses exactly one shuffle and is
-    never cached), and one stats job over it yields the exact size of
-    everything after it.  When the verify sets and the signatures
-    (~48 B per doc, 16 B per int or 56 B per string set entry, 8 B per
-    minhash) fit the session's broadcast budget
-    (``spark.sql.autoBroadcastJoinThreshold``) and the ids are
-    integers, the operator collects that table once with Arrow and
-    finishes on the driver in numpy (:mod:`.candidates`): bands, the
-    capped candidate pairs, the exact verify, the threshold and Spark's
+    Placement.  Two, chosen by one exact stats job over the
+    normalized texts.  When they fit the session's broadcast budget
+    (``spark.sql.autoBroadcastJoinThreshold``; 48 B per doc,
+    ``_BYTES_PER_CP`` per code point and 8 B per minhash) and the ids
+    are integers, Spark only normalizes: the operator collects ``(id,
+    normalized text)`` once with Arrow and runs everything else on the
+    driver in numpy (:func:`_minhash_on_driver`): shingles, the rolling
+    hash, the k minhashes on ``defaultParallelism`` threads, exact
+    shingle-identity verify sets, bands, the capped candidate pairs
+    (:mod:`.candidates`), the verify, the threshold and Spark's
     rounding, returned as a local relation with the Spark plan's rows.
     Above the budget (or when the candidates alone would outgrow it at
-    16 B per pair, or with broadcasting off) the Spark plan runs:
+    16 B per pair, or with broadcasting off) the Spark plan runs.  ONE
+    wide aggregation per doc computes the minhashes, the int verify-set
+    array, its size AND the hash-injectivity stats together (the
+    shingle stream crosses exactly one shuffle), and:
 
     * Band buckets are ARRAYS of the band's minhash values, and
       candidate pairs come from ONE groupBy (:func:`.candidates.pair_frame`:
@@ -270,21 +272,34 @@ def minhash_dedup(
     * The exact verify joins the per-doc sets to the candidates on both
       ids (SHUFFLE_HASH) and intersects the arrays.
 
-    Both placements verify over INT64 rolling-hash sets instead of
+    The Spark plan verifies over INT64 rolling-hash sets instead of
     strings whenever the per-doc stats prove the rolling hash injective
     on this corpus (every shingle length-n, every code point <
     HASH_BASE, HASH_BASE**n < HASH_MOD → a positional encoding with no
     modular wrap), with an exact distinct-count equality check as the
-    secondary gate and string sets as the final fallback — |A∩B| is the
-    same on every path.
+    secondary gate and string sets as the final fallback; the driver
+    compares the shingles' code points — |A∩B| is the same on every
+    path.
 
-    Spark placement executes eagerly and releases its caches before
-    returning (see _materialize_and_release); the driver placement
-    releases them after its collect."""
+    The Spark placement executes eagerly and releases its caches
+    before returning (see _materialize_and_release); the driver
+    placement caches nothing."""
+    from ..session import broadcast_budget
+
+    budget = broadcast_budget(df.sparkSession)
+    if budget and isinstance(df.schema[id_col].dataType, INTEGRAL_IDS):
+        out = _minhash_on_driver(
+            df, id_col, text_col, n, num_hashes, bands, threshold, max_bucket_size, seed, budget
+        )
+        if out is not None:
+            return out
     rows = num_hashes // bands
     sh = _shingles(df, id_col, text_col, n).withColumn("rh", char_hash("shingle", length=n))
-    # largest code point among a shingle's n characters
+    # largest code point among a shingle's n characters (``greatest``
+    # takes two or more)
     cps = ", ".join(f"ascii(substring(shingle, {i}, 1))" for i in range(1, n + 1))
+    if n > 1:
+        cps = f"greatest({cps})"
     # ONE pass over the shingle stream computes, per doc: the k
     # minhashes, the int verify-set, its size, AND the injectivity-
     # proof stats — the shingle table is never materialized or cached.
@@ -295,7 +310,7 @@ def minhash_dedup(
             F.collect_list("rh").alias("shs"),
             F.count(F.lit(1)).alias("sz"),
             F.sum((F.length("shingle") != n).cast("long")).alias("_bad"),
-            F.expr(f"max(greatest({cps})) AS _mcp"),
+            F.expr(f"max({cps}) AS _mcp"),
         )
         .cache()
     )
@@ -304,8 +319,7 @@ def minhash_dedup(
     # read per_doc concurrently, and racing an unpopulated cache
     # recomputes the whole k-min aggregation once per subtree.  A global
     # aggregate scans every partition, so this job caches all of
-    # per_doc while it reads the sizes (for the placement gate below)
-    # and the injectivity stats.
+    # per_doc while it reads the injectivity stats.
     #
     # int-verify proof: when every shingle has length n, every code
     # point is < HASH_BASE, and HASH_BASE**n < HASH_MOD, the rolling
@@ -314,28 +328,11 @@ def minhash_dedup(
     # over the strings.  Otherwise fall back to the corpus-wide
     # distinct-count equality check (exact; one extra shingle pass),
     # and failing that re-aggregate STRING verify sets (the r6 plan).
-    n_docs, n_rows, bad_len, max_cp = per_doc.agg(
-        F.count(F.lit(1)), F.sum("sz"), F.sum("_bad"), F.max("_mcp")
-    ).first()
-    n_rows = n_rows or 0  # empty corpus → null sums
+    bad_len, max_cp = per_doc.agg(F.sum("_bad"), F.max("_mcp")).first()
     use_int = (bad_len or 0) == 0 and (max_cp or 0) < HASH_BASE and HASH_BASE**n < HASH_MOD
     if not use_int:
         d_sh, d_rh = sh.agg(F.countDistinct("shingle"), F.countDistinct("rh")).first()
         use_int = d_sh == d_rh
-    from ..session import broadcast_budget
-
-    # the driver placement holds the verify sets (HashedRelation sizing)
-    # and the signatures
-    budget = broadcast_budget(df.sparkSession)
-    est = 48 * n_docs + (16 if use_int else 56) * n_rows + 8 * num_hashes * n_docs
-    if 0 < est <= budget and isinstance(per_doc.schema["id"].dataType, INTEGRAL_IDS):
-        out = _minhash_on_driver(
-            per_doc, None if use_int else sh, num_hashes, bands, threshold, max_bucket_size,
-            budget,
-        )
-        if out is not None:
-            per_doc.unpersist()
-            return out
     bands_sql = ", ".join(
         "named_struct('band', {}, 'bucket', array({}))".format(
             bi, ", ".join(f"h{bi * rows + r}" for r in range(rows))
@@ -390,70 +387,209 @@ def _string_sets(sh: DataFrame) -> DataFrame:
     )
 
 
+#: driver bytes per code point of the collected texts, rounded up from
+#: the measured peak of numpy's allocations plus Arrow's pool in
+#: :func:`_minhash_on_driver` (README, "Corpus operators: driver
+#: placement")
+_BYTES_PER_CP = 40
+
+#: code points per driver chunk: a chunk's shingle columns and hash
+#: temporaries stay cache-sized
+_CP_CHUNK = 1 << 16
+
+
 def _minhash_on_driver(
-    per_doc: DataFrame,
-    sh: DataFrame | None,
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    n: int,
     num_hashes: int,
     bands: int,
     threshold: float,
     max_bucket_size: int | None,
+    seed: int,
     budget: int,
 ) -> DataFrame | None:
-    """minhash_dedup's bands, candidates and exact verify in numpy over
-    one Arrow collect of ``per_doc`` (and of the string sets of ``sh``
-    when the rolling hash may collide).  Same rows as the Spark plan:
-    a null id never pairs (``collect_list`` drops it), a doc's verify
-    set is its distinct shingles, and |A| counts every shingle row of
-    the id, as ``count(1)`` does.  None when the candidates would
-    outgrow the budget (16 B per pair); the Spark plan then runs."""
+    """All of minhash_dedup after the normalization, in numpy over one
+    Arrow collect of ``(id, _NORM(text))``: shingles, the rolling hash,
+    the k minhashes and the verify sets (:func:`_text_shingles`), then
+    bands, candidates, the exact verify, the threshold and Spark's
+    rounding.  Spark keeps the normalization, so Java's regex and
+    lower-casing stay exact.
+
+    Same rows as the Spark plan: a null or empty text yields no
+    shingle and a null id never pairs; a repeated id unions its texts'
+    shingles, takes the min of their minhashes and counts each text's
+    distinct shingles in |A|, as ``count(1)`` over the grouped rows
+    does.
+
+    None when the gate fails (one stats job: 48 B per doc,
+    ``_BYTES_PER_CP`` per code point and 8 B per minhash must fit the
+    budget) or when the candidates would outgrow it at 16 B per pair;
+    the Spark plan then runs."""
     import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc
 
     from ..graph import local_frame
 
+    spark = df.sparkSession
+    # the empty-text filter runs on the driver: Catalyst would push it
+    # below the projection and run the normalization twice per row
+    normed = df.select(F.col(id_col).alias("id"), _NORM(F.col(text_col)).alias("_t")).filter(
+        F.col("id").isNotNull()
+    )
+    # the stats job collects one length per doc: a global aggregate
+    # would run as two jobs (its exchange is a query stage of its own)
+    lens = normed.select(F.length("_t").alias("l")).toArrow()["l"]
+    n_docs, n_cps = len(lens), pc.sum(lens).as_py() or 0
+    est = 48 * n_docs + _BYTES_PER_CP * n_cps + 8 * num_hashes * n_docs
+    if not 0 < est <= budget:
+        return None
+    table = normed.toArrow()
+    table = table.filter(pc.greater(pc.utf8_length(table["_t"]), 0)).sort_by("id")
+    id_type = table.schema.field("id").type
+    ids = table["id"].to_numpy()
+    texts = table["_t"].combine_chunks()
+    del table
+    threads = spark.sparkContext.defaultParallelism
+    sig, key = _text_shingles(texts, n, hash_family(num_hashes, seed), threads)
+    del texts
+    indptr, flat = set_csr(key, len(ids))
+    del key
+    sz = np.diff(indptr)
+    new = np.append(True, ids[1:] != ids[:-1])
+    uid = ids[new]
+    nu = len(uid)
+    if nu < len(ids):  # repeated ids: one set, one signature and one |A| per id
+        grp = np.flatnonzero(new)
+        sig = np.minimum.reduceat(sig, grp, axis=1)
+        rank = np.cumsum(new) - 1
+        indptr, flat = set_csr(np.repeat(rank << 31, sz) | flat, nu)
+        sz = np.add.reduceat(sz, grp)
     rows = num_hashes // bands
-    hcols = [f"h{i}" for i in range(num_hashes)]
-    sig = per_doc.select("id", *hcols, *(["shs"] if sh is None else [])).toArrow()
-    sig = sig.filter(pc.is_valid(sig["id"]))
-    ids = sig["id"].to_numpy()
-    order = np.argsort(ids)
-    uid, n = ids[order], len(ids)
-    h = np.column_stack([sig[c].to_numpy() for c in hcols])[order]
     keys = np.concatenate(
         [
-            np.column_stack([np.full(n, bi), h[:, bi * rows : (bi + 1) * rows]])
+            np.column_stack([np.full(nu, bi), sig[bi * rows : (bi + 1) * rows].T])
             for bi in range(bands)
         ]
     )
-    pairs = bucket_pairs(keys, np.tile(np.arange(n), bands), max_bucket_size, budget // 16)
+    del sig
+    pairs = bucket_pairs(keys, np.tile(np.arange(nu), bands), max_bucket_size, budget // 16)
     if pairs is None:
         return None
     a, b = pairs
-    sets = sig if sh is None else _string_sets(sh).select("id", "shs").toArrow()
-    sets = sets.filter(pc.is_valid(sets["id"]))
-    shs = sets["shs"].combine_chunks()
-    lens = np.diff(shs.offsets.to_numpy())
-    vals = shs.flatten()
-    if sh is not None:
-        vals = vals.dictionary_encode().indices  # dense ints, equal iff the strings are
-    rank = np.searchsorted(uid, sets["id"].to_numpy())
-    id_type = sig.schema.field("id").type
-    indptr, flat = set_csr(np.repeat(rank, lens), vals.to_numpy(), n)
-    del sig, sets, shs, vals  # the Arrow copy of the sets: CSR holds them now
-    sz = np.zeros(n, dtype=np.int64)
-    sz[rank] = lens
-    inter = set_overlaps(indptr, flat, a, b)
+    inter = set_overlaps(indptr, flat, a, b, threads)
     jac = inter / (sz[a] + sz[b] - inter)
     keep = spark_ge(jac, threshold)
     return local_frame(
-        per_doc.sparkSession,
+        spark,
         {
             "id_a": pa.array(uid[a[keep]], type=id_type),
             "id_b": pa.array(uid[b[keep]], type=id_type),
             "jaccard": spark_round(jac[keep]),
         },
     )
+
+
+def _text_shingles(texts, n: int, family: list[tuple[int, int]], threads: int):
+    """(sig, key) for a non-null Arrow string array of non-empty texts:
+    ``sig[i, t]`` is minhash i of text t, and ``key`` holds one
+    ``t << 31 | s`` per shingle position for :func:`.candidates.set_csr`,
+    where s identifies the shingle exactly.
+
+    Text t's shingles are its code-point substrings of length n at
+    positions 1..max(L-n+1, 1), as ``sequence``/``substr`` cut them
+    (a text shorter than n is one short shingle); each one's rolling
+    hash is :func:`char_hash`'s left fold ``(acc * HASH_BASE + cp) %
+    HASH_MOD`` and minhash i is ``min((a_i * rh + b_i) % HASH_MOD)``.
+    A shingle is its n code points + 1 (0 past a short text's end) at
+    w bits each, w bounded by the widest UTF-8 lead byte; packings
+    wider than 31 bits are replaced by their dense ranks.
+
+    Texts go in chunks of about ``_CP_CHUNK`` code points on
+    ``threads`` threads (numpy's arithmetic releases the GIL)."""
+    import numpy as np
+    import pyarrow.compute as pc
+
+    from .candidates import parallel_map
+
+    nt = len(texts)
+    lens = pc.utf8_length(texts).to_numpy().astype(np.int64)
+    per_text = np.maximum(lens - n + 1, 1)  # shingle positions per text
+    occ = np.zeros(nt + 1, dtype=np.int64)
+    np.cumsum(per_text, out=occ[1:])
+    cstart = np.zeros(nt + 1, dtype=np.int64)
+    np.cumsum(lens, out=cstart[1:])
+    data = texts.buffers()[2]
+    boff = np.frombuffer(texts.buffers()[1], dtype=np.int32)[texts.offset : texts.offset + nt + 1]
+    top = int(np.frombuffer(data, dtype=np.uint8)[boff[0] : boff[-1]].max(initial=0))
+    w = 8 if top < 0x80 else 12 if top < 0xE0 else 17 if top < 0xF0 else 21
+    g = min(n, 63 // w)  # code points packed into the first word
+    direct = n * w <= 31  # the packing is the identity, and the text rides along
+    word = np.empty(occ[-1], dtype=np.int64)
+    rest = np.empty((n - g, occ[-1]), dtype=np.int32)
+    sig = np.empty((len(family), nt), dtype=np.int64)
+
+    def chunk(t0: int, t1: int):
+        text = str(memoryview(data)[boff[t0] : boff[t1]], "utf-8")
+        cp = np.frombuffer(text.encode("utf-32-le"), dtype="<u4").astype(np.int64) + 1
+        cp = np.append(cp, np.zeros(n, dtype=np.int64))
+        m = per_text[t0:t1]
+        first = occ[t0:t1] - occ[t0]
+        pos = np.arange(occ[t1] - occ[t0]) + np.repeat(cstart[t0:t1] - cstart[t0] - first, m)
+        end = np.repeat(cstart[t0 + 1 : t1 + 1] - cstart[t0], m)
+        rh = np.zeros(len(pos), dtype=np.int64)
+        code = np.zeros(len(pos), dtype=np.int64)
+        for j in range(n):
+            c = np.where(pos + j < end, cp[pos + j], 0)
+            rh = np.where(c > 0, (rh * HASH_BASE + c - 1) % HASH_MOD, rh)
+            if j < g:
+                code = (code << w) | c
+            else:
+                rest[j - g, occ[t0] : occ[t1]] = c
+        if direct:
+            code |= np.repeat(np.arange(t0, t1, dtype=np.int64) << 31, m)
+        word[occ[t0] : occ[t1]] = code
+        for i, (a, b) in enumerate(family):
+            x = rh * a
+            x += b
+            np.remainder(x, HASH_MOD, out=x)
+            sig[i, t0:t1] = np.minimum.reduceat(x, first)
+
+    bounds = np.searchsorted(cstart[:-1], np.arange(0, cstart[-1], _CP_CHUNK))
+    bounds = np.unique(np.append(bounds, nt))
+    parallel_map(chunk, bounds[:-1], bounds[1:], threads)
+    bits = g * w
+    for j in range(n - g):
+        word = _dense_ranks(word)
+        bits = int(word.max(initial=0)).bit_length() + w
+        word <<= w
+        word |= rest[j]
+    if not direct:
+        if bits > 31:
+            word = _dense_ranks(word)
+        word |= np.repeat(np.arange(nt, dtype=np.int64) << 31, per_text)
+    return sig, word
+
+
+def _dense_ranks(x):
+    """Each value's rank among the distinct values of the int64 array
+    ``x``, which it sorts in place: two sorts, and at most three arrays
+    of ``x``'s size alive at once (``np.unique`` holds five)."""
+    import numpy as np
+
+    perm = np.argsort(x)
+    x.sort()
+    new = np.empty(len(x), dtype=bool)
+    new[:1] = True
+    np.not_equal(x[1:], x[:-1], out=new[1:])
+    np.cumsum(new, out=x)
+    del new
+    x -= 1
+    out = np.empty_like(x)
+    out[perm] = x
+    return out
 
 
 def simhash_signatures(

@@ -203,7 +203,8 @@ class Graph:
         return self._m
 
     def max_degree(self) -> int:
-        return self.degrees().agg(F.max("degree")).first()[0]
+        """0 for a graph with no edges (``max`` over no rows is null)."""
+        return self.degrees().agg(F.max("degree")).first()[0] or 0
 
     def density(self) -> float:
         n, m = self.num_vertices(), self.num_edges()

@@ -99,8 +99,9 @@ def test_minhash_placements_agree(spark, cap, id_type):
 
 
 def test_minhash_string_sets_placements_agree(spark, monkeypatch):
-    """Non-ASCII shingles whose rolling hashes collide force the string
-    verify sets, in both placements."""
+    """Non-ASCII shingles whose rolling hashes collide: the Spark
+    placement falls back to string verify sets (built once), the driver
+    placement compares shingles by their code points and builds none."""
     # (0x20000, 0x51F1, 0x4E00) and (0x20001, 0x4E00, 0x4E00) hash alike
     # (0x51F1 = 0x4E00 + HASH_BASE): a positional code past its base
     s1, s2 = "\U00020000凱一", "\U00020001一一"
@@ -116,7 +117,7 @@ def test_minhash_string_sets_placements_agree(spark, monkeypatch):
     real = dedup._string_sets
     monkeypatch.setattr(dedup, "_string_sets", lambda sh: calls.append(1) or real(sh))
     out = _agree(spark, lambda: minhash_dedup(docs, num_hashes=32, bands=8, threshold=0.8))
-    assert len(calls) == 2
+    assert len(calls) == 1
     assert {(0, 20), (1, 21)} <= {(r.id_a, r.id_b) for r in out.collect()}
 
 
@@ -153,16 +154,14 @@ def test_spark_round_matches_spark(spark):
 
 
 def test_minhash_gate_follows_budget(spark):
-    """The driver placement runs exactly while the verify sets and the
-    signatures fit the budget: 48 B per doc, 16 B per int set entry and
-    8 B per minhash."""
-    rows = [(i, t) for i, t in _corpus(n=20) if i is not None and i != 1]
+    """The driver placement runs exactly while the collected texts fit
+    the budget: 48 B per doc, _BYTES_PER_CP per code point of the
+    normalized text and 8 B per minhash."""
+    rows = [(i, t) for i, t in _corpus(n=20) if i is not None]
+    rows.append((500, "  "))  # normalizes to "": counted, then dropped
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    sets = {}
-    for i, t in rows:
-        t = " ".join(t.split())
-        sets.setdefault(i, set()).update(t[j : j + 3] for j in range(max(len(t) - 2, 1)))
-    est = 48 * len(sets) + 16 * sum(map(len, sets.values())) + 8 * 32 * len(sets)
+    cps = sum(len(" ".join(t.split()).lower()) for _, t in rows)
+    est = 48 * len(rows) + dedup._BYTES_PER_CP * cps + 8 * 32 * len(rows)
     call = lambda: minhash_dedup(docs, num_hashes=32, bands=8, threshold=0.5)  # noqa: E731
     with _budget(spark, est):
         at = call()
@@ -170,6 +169,122 @@ def test_minhash_gate_follows_budget(spark):
         below = call()
     assert _on_driver(at) and not _on_driver(below)
     assert _rows(at) == _rows(below)
+
+
+def _edge_texts():
+    """(id, text) rows that probe the shingle semantics: null, empty and
+    blank texts, texts shorter than n, whitespace runs the normalization
+    folds, upper case, non-ASCII and non-BMP code points, a null id,
+    repeated ids (one holding a short and a long text) and
+    near-duplicate groups so that pairs pass the threshold."""
+    base = [
+        "the quick brown fox jumps over the lazy dog",
+        "Ünïcödé  wörds\tand   ÄÖÜ letters here",
+        "emoji \U0001F600 text \U0001F601 with astral \U00020000 chars",
+        "日本語のテキストと中国语的文本混在",
+    ]
+    rows = []
+    for i, t in enumerate(base):
+        rows += [(10 * i, t), (10 * i + 1, t + " x"), (10 * i + 2, t.upper())]
+    rows += [
+        (100, None), (101, ""), (102, "   "), (103, "\n\n"), (104, "a"), (105, "ab"),
+        (106, "ab"), (107, "\U0001F600"), (108, "é\U0001F600"), (109, " ab "),
+        (110, "ab"), (110, base[0]), (111, base[0] + " y"), (1, base[1][:5]),
+        (None, base[0]), (None, None),
+    ]
+    return rows
+
+
+@pytest.mark.parametrize("n", [1, 2, 3, 4, 5])
+def test_minhash_edge_texts_placements_agree(spark, n):
+    """Both placements return the same rows on texts that exercise every
+    shingle packing: ASCII-width direct codes, dense ranks of 63-bit
+    packings (non-BMP, n = 3) and the chained ranks past 63 bits
+    (n = 4, 5)."""
+    docs = spark.createDataFrame(_edge_texts(), "doc_id long, text string")
+    out = _agree(
+        spark, lambda: minhash_dedup(docs, n=n, num_hashes=32, bands=16, threshold=0.3)
+    )
+    assert out.count() > 0
+
+
+def test_minhash_ascii_shingles_placements_agree(spark):
+    """An ASCII corpus with texts shorter than n: the code points pack
+    into the set key directly."""
+    rows = [(i, t) for i, t in _edge_texts() if t is None or t.isascii()]
+    docs = spark.createDataFrame(rows, "doc_id int, text string")
+    out = _agree(spark, lambda: minhash_dedup(docs, n=5, num_hashes=32, bands=16, threshold=0.3))
+    assert out.count() > 0
+
+
+@pytest.mark.parametrize("text", ["ab", "é", "\U0001F600", "a\U0001F600", "\U0001F600ab", "abcd"])
+def test_char_hash_matches_driver_fold(spark, text):
+    """char_hash's unrolled branch (length n) and its fold branch (any
+    other length) equal the driver's rolling hash: a text of length L
+    is one shingle for every n >= L, and the affine map (1, 0) makes
+    the minhash that shingle's hash."""
+    import pyarrow as pa
+
+    df = spark.createDataFrame([(text,)], "s string")
+    got = df.select(
+        dedup.char_hash("s", length=len(text)),
+        dedup.char_hash("s", length=len(text) + 1),
+        dedup.char_hash("s"),
+    ).first()
+    for n in (len(text), len(text) + 2):
+        sig, _ = dedup._text_shingles(pa.array([text]), n, [(1, 0)], 1)
+        assert list(got) == [int(sig[0, 0])] * 3 == [_rolling_hash(text)] * 3
+
+
+@pytest.mark.parametrize("n", [2, 3, 4])
+def test_text_shingles_against_loop(monkeypatch, n):
+    """The driver's shingle kernel against a plain loop, on chunks of a
+    few code points handed to threads under a short switch interval:
+    per text, the minhashes and the number of distinct shingles."""
+    import sys
+
+    import pyarrow as pa
+
+    rng = random.Random(n)
+    alphabet = "abc é日\U0001F600"
+    texts = ["".join(rng.choice(alphabet) for _ in range(rng.randint(1, 12))) for _ in range(80)]
+    family = dedup.hash_family(6, seed=n)
+    monkeypatch.setattr(dedup, "_CP_CHUNK", 7)
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        sig, key = dedup._text_shingles(pa.array(texts), n, family, threads=8)
+    finally:
+        sys.setswitchinterval(old)
+    sizes = np.diff(candidates.set_csr(key, len(texts))[0])
+    for t, text in enumerate(texts):
+        grams = {text[i : i + n] for i in range(max(len(text) - n + 1, 1))}
+        assert sizes[t] == len(grams)
+        hashes = [_rolling_hash(g) for g in grams]
+        want = [min((a * h + b) % dedup.HASH_MOD for h in hashes) for a, b in family]
+        assert sig[:, t].tolist() == want
+
+
+def test_minhash_driver_runs_two_jobs(spark):
+    """The driver placement runs one stats job and one Arrow collect."""
+    docs = spark.createDataFrame(_corpus(), "doc_id long, text string")
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    minhash_dedup(docs, num_hashes=32, bands=8, threshold=0.5)  # warm the session
+    for budget, most in (("64m", 2), (-1, None)):
+        group = f"minhash-jobs-{budget}"
+        sc.setJobGroup(group, group)
+        try:
+            with _budget(spark, budget):
+                out = minhash_dedup(docs, num_hashes=32, bands=8, threshold=0.5)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        jobs = len(tracker.getJobIdsForGroup(group))
+        if most is None:
+            assert not _on_driver(out) and jobs > 2
+        else:
+            assert _on_driver(out) and 1 <= jobs <= most
 
 
 def _scan(spark, tmp_path, rows, schema):
@@ -306,18 +421,23 @@ def test_bucket_pairs_against_loop():
         assert candidates.bucket_pairs(keys, members, cap, len(want) - 1) is None
 
 
-def test_set_overlaps_against_sets():
+def test_set_overlaps_against_sets(monkeypatch):
     rng = np.random.default_rng(2)
     sets = [set(rng.integers(0, 50, rng.integers(1, 30)).tolist()) for _ in range(60)]
     rows = np.concatenate([np.full(len(s), i) for i, s in enumerate(sets)])
     vals = np.concatenate([sorted(s) for s in sets])
     # repeated entries of a row count once, as collect_list duplicates do
     indptr, flat = candidates.set_csr(
-        np.concatenate([rows, rows[:40]]), np.concatenate([vals, vals[:40]]), 60
+        (np.concatenate([rows, rows[:40]]) << 31) | np.concatenate([vals, vals[:40]]), 60
     )
     a, b = np.triu_indices(60, 1)
-    got = candidates.set_overlaps(indptr, flat, a, b)
-    assert got.tolist() == [len(sets[i] & sets[j]) for i, j in zip(a, b)]
+    want = [len(sets[i] & sets[j]) for i, j in zip(a, b)]
+    assert candidates.set_overlaps(indptr, flat, a, b).tolist() == want
+    # shuffled pairs (runs of one a) on threads, in small chunks
+    order = np.random.default_rng(3).permutation(len(a))
+    monkeypatch.setattr(candidates, "_CHUNK", 64)
+    got = candidates.set_overlaps(indptr, flat, a[order], b[order], threads=3)
+    assert got.tolist() == [want[i] for i in order]
 
 
 def test_job_economy_needs_no_python_row_rdd(spark, monkeypatch):
