@@ -144,6 +144,8 @@ def set_overlaps(
     values, each hit is one shared value.  Chunks run on ``threads``
     threads with a bitmap each (max value + 1 bytes); a single chunk
     runs on the caller's thread."""
+    from ..operators.kernels import _multi_slice_gather, parallel_map
+
     lens = np.diff(indptr)
     cost = np.cumsum(lens[b])
     step = _CHUNK // max(threads, 1)
@@ -160,11 +162,7 @@ def set_overlaps(
         pa, pb = a[lo:hi], b[lo:hi]
         seg = np.zeros(hi - lo + 1, dtype=np.int64)
         np.cumsum(lens[pb], out=seg[1:])
-        # the b-side values, gathered: positions are the rows' offsets
-        # in indptr plus a running index
-        got = np.arange(seg[-1], dtype=np.int64)
-        got += np.repeat(indptr[pb] - seg[:-1], lens[pb])
-        got = values[got]
+        got = _multi_slice_gather(indptr, values, pb)
         runs = np.flatnonzero(np.append(True, pa[1:] != pa[:-1])).tolist() + [hi - lo]
         hit = np.empty(len(got), dtype=bool)
         for r0, r1 in zip(runs[:-1], runs[1:]):
@@ -179,18 +177,6 @@ def set_overlaps(
 
     parallel_map(run, bounds[:-1], bounds[1:], threads)
     return out
-
-
-def parallel_map(fn, los, his, threads: int) -> list:
-    """``[fn(lo, hi) ...]`` over the chunk bounds, on up to ``threads``
-    threads; one chunk (or one thread) runs on the caller's thread and
-    starts no pool."""
-    if threads <= 1 or len(los) <= 1:
-        return [fn(lo, hi) for lo, hi in zip(los, his)]
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(min(threads, len(los))) as pool:
-        return list(pool.map(fn, los, his))
 
 
 def fold_dot(x: np.ndarray, y: np.ndarray) -> np.ndarray:

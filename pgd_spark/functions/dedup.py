@@ -423,10 +423,10 @@ def _minhash_on_driver(
     distinct shingles in |A|, as ``count(1)`` over the grouped rows
     does.
 
-    None when the gate fails (one stats job: 48 B per doc,
-    ``_BYTES_PER_CP`` per code point and 8 B per minhash must fit the
-    budget) or when the candidates would outgrow it at 16 B per pair;
-    the Spark plan then runs."""
+    None when the gate fails (one stats job, which reads at most one
+    doc more than fit: 48 B per doc, ``_BYTES_PER_CP`` per code point
+    and 8 B per minhash must fit the budget) or when the candidates
+    would outgrow it at 16 B per pair; the Spark plan then runs."""
     import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc
@@ -439,9 +439,13 @@ def _minhash_on_driver(
     normed = df.select(F.col(id_col).alias("id"), _NORM(F.col(text_col)).alias("_t")).filter(
         F.col("id").isNotNull()
     )
-    # the stats job collects one length per doc: a global aggregate
-    # would run as two jobs (its exchange is a query stage of its own)
-    lens = normed.select(F.length("_t").alias("l")).toArrow()["l"]
+    # the stats job collects one length per doc (a global aggregate
+    # would run as two jobs: its exchange is a query stage of its own),
+    # and at most one doc more than the budget can hold (whose estimate
+    # then exceeds it): each task stops reading there, and the driver
+    # never holds more lengths than that
+    most = budget // (48 + 8 * num_hashes)
+    lens = normed.select(F.length("_t").alias("l")).limit(most + 1).toArrow()["l"]
     n_docs, n_cps = len(lens), pc.sum(lens).as_py() or 0
     est = 48 * n_docs + _BYTES_PER_CP * n_cps + 8 * num_hashes * n_docs
     if not 0 < est <= budget:
@@ -449,6 +453,11 @@ def _minhash_on_driver(
     table = normed.toArrow()
     table = table.filter(pc.greater(pc.utf8_length(table["_t"]), 0)).sort_by("id")
     id_type = table.schema.field("id").type
+    if table.num_rows == 0:  # every text normalized to ""
+        none = pa.array([], type=id_type)
+        return local_frame(
+            spark, {"id_a": none, "id_b": none, "jaccard": pa.array([], type=pa.float64())}
+        )
     ids = table["id"].to_numpy()
     texts = table["_t"].combine_chunks()
     del table
@@ -512,7 +521,7 @@ def _text_shingles(texts, n: int, family: list[tuple[int, int]], threads: int):
     import numpy as np
     import pyarrow.compute as pc
 
-    from .candidates import parallel_map
+    from ..operators.kernels import parallel_map
 
     nt = len(texts)
     lens = pc.utf8_length(texts).to_numpy().astype(np.int64)
@@ -560,15 +569,14 @@ def _text_shingles(texts, n: int, family: list[tuple[int, int]], threads: int):
     bounds = np.searchsorted(cstart[:-1], np.arange(0, cstart[-1], _CP_CHUNK))
     bounds = np.unique(np.append(bounds, nt))
     parallel_map(chunk, bounds[:-1], bounds[1:], threads)
-    bits = g * w
     for j in range(n - g):
         word = _dense_ranks(word)
-        bits = int(word.max(initial=0)).bit_length() + w
         word <<= w
         word |= rest[j]
     if not direct:
-        if bits > 31:
-            word = _dense_ranks(word)
+        # ranks stay below the distinct-shingle count, so each verify
+        # bitmap (max value + 1 bytes) is at most one byte per shingle
+        word = _dense_ranks(word)
         word |= np.repeat(np.arange(nt, dtype=np.int64) << 31, per_text)
     return sig, word
 

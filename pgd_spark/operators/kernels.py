@@ -170,7 +170,17 @@ def count_edges(
         scratch = np.zeros(n, dtype=np.int8)
         return edge_counts_batch_c(v[lo:hi], u[lo:hi], indptr, indices, n, ind=scratch)
 
-    with ThreadPoolExecutor(max(threads, 1)) as pool:
-        parts = list(pool.map(run, bounds[:-1], bounds[1:]))
+    parts = parallel_map(run, bounds[:-1], bounds[1:], threads)
     tri, cliq, cyc = (np.concatenate(cols) for cols in zip(*parts))
     return tri, cliq, cyc
+
+
+def parallel_map(fn, los, his, threads: int) -> list:
+    """``[fn(lo, hi) ...]`` over the chunk bounds, on up to ``threads``
+    driver threads (numpy and the ctypes kernel release the GIL); one
+    chunk (or one thread) runs on the caller's thread and starts no
+    pool."""
+    if threads <= 1 or len(los) <= 1:
+        return [fn(lo, hi) for lo, hi in zip(los, his)]
+    with ThreadPoolExecutor(min(threads, len(los))) as pool:
+        return list(pool.map(fn, los, his))

@@ -126,6 +126,31 @@ def test_minhash_empty_corpus_placements_agree(spark):
     assert _agree(spark, lambda: minhash_dedup(docs), driver=False).count() == 0
 
 
+@pytest.mark.parametrize("texts", [[None], ["  "], [None, "", "   ", None]])
+def test_minhash_blank_corpus_placements_agree(spark, texts):
+    """Integer ids whose texts all normalize to "": the gate counts the
+    docs and passes, the driver finds no text left and returns no rows,
+    like the Spark plan, which drops every row as it cuts shingles."""
+    docs = spark.createDataFrame(list(enumerate(texts, 1)), "doc_id int, text string")
+    assert _agree(spark, lambda: minhash_dedup(docs, num_hashes=32, bands=8)).count() == 0
+
+
+def test_minhash_stats_job_stops_at_budget(spark, monkeypatch):
+    """Above the budget the stats job collects one length more than the
+    budget holds at 48 + 8k bytes per doc, not one per doc."""
+    rows = [(i, f"text number {i}") for i in range(200)]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    collected = []
+    cls = type(docs)
+    real = cls.toArrow
+    monkeypatch.setattr(cls, "toArrow", lambda df: collected.append(real(df)) or collected[-1])
+    per_doc = 48 + 8 * 32
+    with _budget(spark, 10 * per_doc):
+        out = minhash_dedup(docs, num_hashes=32, bands=8, threshold=0.5)
+    assert not _on_driver(out)
+    assert [t.num_rows for t in collected] == [11]
+
+
 def test_minhash_rounds_half_up(spark):
     """Jaccard 125/128 = 0.9765625 sits on a rounding tie: Spark's
     round(x, 6) gives 0.976563, half-to-even would give 0.976562."""
@@ -240,7 +265,8 @@ def test_char_hash_matches_driver_fold(spark, text):
 def test_text_shingles_against_loop(monkeypatch, n):
     """The driver's shingle kernel against a plain loop, on chunks of a
     few code points handed to threads under a short switch interval:
-    per text, the minhashes and the number of distinct shingles."""
+    per text, the minhashes and the number of distinct shingles, and
+    set values bounded by the shingle count."""
     import sys
 
     import pyarrow as pa
@@ -256,6 +282,9 @@ def test_text_shingles_against_loop(monkeypatch, n):
         sig, key = dedup._text_shingles(pa.array(texts), n, family, threads=8)
     finally:
         sys.setswitchinterval(old)
+    # every packing here is wider than 31 bits: the shingles are ranked,
+    # so the verify's bitmaps stay within one byte per shingle position
+    assert int((key & ((1 << 31) - 1)).max()) < len(key)
     sizes = np.diff(candidates.set_csr(key, len(texts))[0])
     for t, text in enumerate(texts):
         grams = {text[i : i + n] for i in range(max(len(text) - n + 1, 1))}
