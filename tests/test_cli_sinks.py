@@ -1,6 +1,8 @@
 """CLI + writer parity: macro name=value file, micro CSV header
 (graphlet_core.cpp:1674-1684), GFD files."""
 
+import os
+
 from pgd_spark.operators.graphlets import macro_counts, micro_counts
 from pgd_spark.sinks import (
     MICRO_HEADER,
@@ -9,6 +11,8 @@ from pgd_spark.sinks import (
     write_micro_stats,
 )
 from tests.conftest import make_graph
+
+DATA = os.path.join(os.path.dirname(__file__), "data")
 
 K4_EDGE = [(1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4), (4, 5)]
 
@@ -54,6 +58,6 @@ def test_cli_main(spark, tmp_path):
     from pgd_spark.cli import main
 
     macro = tmp_path / "k4.macro"
-    rc = main(["-f", "/root/reference/data/4-clique.txt", "--macro", str(macro), "-v"])
+    rc = main(["-f", os.path.join(DATA, "4-clique.txt"), "--macro", str(macro), "-v"])
     assert rc == 0
     assert "total_4_clique = 1" in macro.read_text()

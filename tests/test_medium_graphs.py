@@ -1,6 +1,8 @@
 """Medium reference graphs: strategy agreement + independent
 triangle/cc cross-checks (networkx) on DD21; identities on C250-9."""
 
+import os
+
 import networkx as nx
 import pytest
 
@@ -11,10 +13,13 @@ from pgd_spark.operators.graphlets import (
 )
 from pgd_spark.sources.readers import read_mtx
 
+# rebuilt from the committed goldens (FIXTURES.md §2)
+DATA = os.path.join(os.path.dirname(__file__), "data")
+
 
 @pytest.fixture(scope="module")
 def dd21(spark):
-    return read_mtx(spark, "/root/reference/data/DD21.mtx")
+    return read_mtx(spark, os.path.join(DATA, "DD21.mtx"))
 
 
 def test_dd21_strategies_agree(spark, dd21):
@@ -54,7 +59,7 @@ def test_dd21_vs_networkx(spark, dd21):
 
 
 def test_c250_identities(spark):
-    g = read_mtx(spark, "/root/reference/data/C250-9.mtx")
+    g = read_mtx(spark, os.path.join(DATA, "C250-9.mtx"))
     assert g.num_vertices() == 250 and g.num_edges() == 27984
     t = macro_counts(g, strategy="broadcast")
     assert all(check_identities(t).values())

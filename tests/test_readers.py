@@ -3,28 +3,33 @@ direction/weights ignored, self-loops and duplicate edges dropped,
 1-based and 0-based ids accepted, comments skipped, extra columns
 ignored, headers tolerated."""
 
+import os
+
 import pytest
 
 from pgd_spark.operators.graphlets import macro_counts
 from pgd_spark.sources.readers import read_edge_list, read_graph, read_mtx
 
-REF = "/root/reference/data"
+# PGD's bundled graphs, rebuilt from the goldens (FIXTURES.md §2)
+DATA = os.path.join(os.path.dirname(__file__), "data")
+REF_DATA = "/root/reference/data"
+SAMPLE_GRAPH = "/root/reference/sample_graph.csv"
 
 
 def test_read_4clique_csv(spark):
-    g = read_edge_list(spark, f"{REF}/4-clique.txt")
+    g = read_edge_list(spark, f"{DATA}/4-clique.txt")
     assert g.num_vertices() == 4 and g.num_edges() == 6
     assert macro_counts(g)["total_4_clique"] == 1
 
 
 def test_read_4clique_edges_space_0based(spark):
-    g = read_edge_list(spark, f"{REF}/4-clique.edges")
+    g = read_edge_list(spark, f"{DATA}/4-clique.edges")
     assert g.num_vertices() == 4 and g.num_edges() == 6
     assert macro_counts(g)["total_4_clique"] == 1
 
 
 def test_read_diamond(spark):
-    g = read_graph(spark, f"{REF}/4-chordal-cycle.txt")
+    g = read_graph(spark, f"{DATA}/4-chordal-cycle.txt")
     assert macro_counts(g)["total_4_chordcycle"] == 1
 
 
@@ -47,15 +52,34 @@ def test_weighted_third_column_ignored(spark, tmp_path):
 
 
 def test_read_dd21_mtx(spark):
-    g = read_mtx(spark, f"{REF}/DD21.mtx")
+    g = read_mtx(spark, f"{DATA}/DD21.mtx")
     assert g.num_vertices() == 5748
     assert g.num_edges() == 14267
 
 
+@pytest.mark.skipif(
+    not os.path.exists(SAMPLE_GRAPH),
+    reason=f"{SAMPLE_GRAPH} not present; its rows are recorded nowhere in the repo",
+)
 def test_sample_graph_csv_extra_columns(spark):
     # 10-column micro CSV reused as edge list; header becomes (0,0) self-loop
-    g = read_edge_list(spark, "/root/reference/sample_graph.csv")
+    g = read_edge_list(spark, SAMPLE_GRAPH)
     assert g.num_edges() <= 14267 and g.num_edges() > 14000
+
+
+@pytest.mark.skipif(not os.path.exists(REF_DATA), reason=f"{REF_DATA} not present")
+@pytest.mark.parametrize("fname", [
+    "4-clique.txt", "4-clique.edges", "4-chordal-cycle.txt",
+    "4-clique-and-edge.txt", "DD21.mtx", "C250-9.mtx",
+])
+def test_rebuilt_fixture_matches_reference_file(spark, fname):
+    """Each tests/data fixture holds the same graph as PGD's original."""
+
+    def canon(path):
+        g = read_graph(spark, path)
+        return g.num_vertices(), {(r["src"], r["dst"]) for r in g.edges.collect()}
+
+    assert canon(f"{DATA}/{fname}") == canon(f"{REF_DATA}/{fname}")
 
 
 def test_from_pairs_and_csr(spark):
