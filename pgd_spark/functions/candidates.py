@@ -77,6 +77,17 @@ def pair_frame(keyed: DataFrame, keys: list[str], cap: int | None) -> DataFrame:
     )
 
 
+def pack31(cols: list[np.ndarray]) -> np.ndarray:
+    """The int64 key columns ``cols`` (values in [0, 2^31)) as a matrix
+    of half as many columns, each two adjacent ones packed as ``x << 31
+    | y`` (an odd last one as it is): rows compare equal exactly when
+    the unpacked rows do, and :func:`bucket_pairs` sorts half the keys."""
+    packed = [(cols[j] << 31) | cols[j + 1] for j in range(0, len(cols) - 1, 2)]
+    if len(cols) % 2:
+        packed.append(cols[-1])
+    return np.column_stack(packed)
+
+
 def bucket_pairs(keys: np.ndarray, members: np.ndarray, cap: int | None, max_pairs: int):
     """:func:`pair_frame` in numpy.  Row i of the int64 matrix ``keys``
     names the bucket of ``members[i]`` (a dense item index; each item

@@ -28,6 +28,7 @@ from pyspark.sql import Column, DataFrame, functions as F
 from .candidates import (
     INTEGRAL_IDS,
     bucket_pairs,
+    pack31,
     pair_frame,
     set_csr,
     set_overlaps,
@@ -35,7 +36,23 @@ from .candidates import (
     spark_round,
 )
 
+#: the text normalization: trim (U+0020 only), whitespace runs to one
+#: space, lower case.  Java's ``\s`` is exactly ``[ \t\n\x0B\f\r]``; on
+#: ASCII text :func:`_norm_ascii` computes the same strings in pyarrow
 _NORM = lambda c: F.lower(F.regexp_replace(F.trim(c), r"\s+", " "))  # noqa: E731
+
+
+def _norm_ascii(texts):
+    """``_NORM`` of an ASCII Arrow string array, in pyarrow:
+    ``utf8_trim(characters=" ")``, then ``replace_substring_regex`` of
+    Java's ``\\s`` class spelled out (RE2's ``\\s`` omits ``\\x0B``,
+    Python's adds ``\\x1c``-``\\x1f``), then ``ascii_lower``."""
+    import pyarrow.compute as pc
+
+    texts = pc.utf8_trim(texts, characters=" ")
+    texts = pc.replace_substring_regex(texts, pattern=r"[ \t\n\x0B\f\r]+", replacement=" ")
+    return pc.ascii_lower(texts)
+
 
 #: modulus for the portable hash family: 2^31-1 (Mersenne prime).
 #: a*h+b stays < 2^62 — no int64 overflow in any SQL engine.
@@ -248,16 +265,17 @@ def minhash_dedup(
     near-dups whose pair list is quadratic; the cap bounds the worst
     case while other bands still recall pairs (None = no cap).
 
-    Placement.  Two, chosen by one exact stats job over the
-    normalized texts.  When they fit the session's broadcast budget
-    (``spark.sql.autoBroadcastJoinThreshold``; 48 B per doc,
-    ``_BYTES_PER_CP`` per code point and 8 B per minhash) and the ids
-    are integers, Spark only normalizes: the operator collects ``(id,
-    normalized text)`` once with Arrow and runs everything else on the
-    driver in numpy (:func:`_minhash_on_driver`): shingles, the rolling
-    hash, the k minhashes on ``defaultParallelism`` threads, exact
-    shingle-identity verify sets, bands, the capped candidate pairs
-    (:mod:`.candidates`), the verify, the threshold and Spark's
+    Placement.  Two, chosen by one stats job over the raw texts and
+    the size of the normalized texts.  When they fit the session's
+    broadcast budget (``spark.sql.autoBroadcastJoinThreshold``; 48 B
+    per doc, ``_BYTES_PER_CP`` per code point and 8 B per minhash) and
+    the ids are integers, the operator collects the texts once with
+    Arrow and runs everything on the driver (:func:`_minhash_on_driver`):
+    the normalization of an ASCII corpus in pyarrow (Spark normalizes
+    any other corpus in the collect), then in numpy the shingles, the
+    rolling hash, the k minhashes on ``defaultParallelism`` threads,
+    exact shingle-identity verify sets, bands, the capped candidate
+    pairs (:mod:`.candidates`), the verify, the threshold and Spark's
     rounding, returned as a local relation with the Spark plan's rows.
     Above the budget (or when the candidates alone would outgrow it at
     16 B per pair, or with broadcasting off) the Spark plan runs.  ONE
@@ -410,11 +428,17 @@ def _minhash_on_driver(
     seed: int,
     budget: int,
 ) -> DataFrame | None:
-    """All of minhash_dedup after the normalization, in numpy over one
-    Arrow collect of ``(id, _NORM(text))``: shingles, the rolling hash,
-    the k minhashes and the verify sets (:func:`_text_shingles`), then
-    bands, candidates, the exact verify, the threshold and Spark's
-    rounding.  Spark keeps the normalization, so Java's regex and
+    """All of minhash_dedup in numpy over one Arrow collect of the
+    normalized texts: shingles, the rolling hash, the k minhashes and
+    the verify sets (:func:`_text_shingles`), then bands, candidates,
+    the exact verify, the threshold and Spark's rounding.
+
+    Two Spark jobs.  The stats job reads the raw texts' ``length`` and
+    ``octet_length``, at most one doc more than 48 + 8k B per doc can
+    fit.  When every text is ASCII (the two lengths agree) the collect
+    is the raw ``(id, text)`` and :func:`_norm_ascii` normalizes it on
+    the driver, so the JVM runs no regex and no ICU case mapping; any
+    other corpus collects ``(id, _NORM(text))``, so Java's regex and
     lower-casing stay exact.
 
     Same rows as the Spark plan: a null or empty text yields no
@@ -423,10 +447,11 @@ def _minhash_on_driver(
     distinct shingles in |A|, as ``count(1)`` over the grouped rows
     does.
 
-    None when the gate fails (one stats job, which reads at most one
-    doc more than fit: 48 B per doc, ``_BYTES_PER_CP`` per code point
-    and 8 B per minhash must fit the budget) or when the candidates
-    would outgrow it at 16 B per pair; the Spark plan then runs."""
+    None when the gate fails or when the candidates would outgrow the
+    budget at 16 B per pair; the Spark plan then runs.  The collect
+    runs while 48 + 8k B per doc plus the raw octets fit the budget,
+    and the placement while 48 B per doc, ``_BYTES_PER_CP`` per code
+    point of the normalized texts and 8 B per minhash do."""
     import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc
@@ -434,24 +459,33 @@ def _minhash_on_driver(
     from ..graph import local_frame
 
     spark = df.sparkSession
-    # the empty-text filter runs on the driver: Catalyst would push it
-    # below the projection and run the normalization twice per row
-    normed = df.select(F.col(id_col).alias("id"), _NORM(F.col(text_col)).alias("_t")).filter(
+    raw = df.select(F.col(id_col).alias("id"), F.col(text_col).alias("_t")).filter(
         F.col("id").isNotNull()
     )
-    # the stats job collects one length per doc (a global aggregate
+    # the stats job collects two lengths per doc (a global aggregate
     # would run as two jobs: its exchange is a query stage of its own),
     # and at most one doc more than the budget can hold (whose estimate
     # then exceeds it): each task stops reading there, and the driver
     # never holds more lengths than that
-    most = budget // (48 + 8 * num_hashes)
-    lens = normed.select(F.length("_t").alias("l")).limit(most + 1).toArrow()["l"]
-    n_docs, n_cps = len(lens), pc.sum(lens).as_py() or 0
-    est = 48 * n_docs + _BYTES_PER_CP * n_cps + 8 * num_hashes * n_docs
-    if not 0 < est <= budget:
+    per_doc = 48 + 8 * num_hashes
+    stats = raw.select(F.length("_t").alias("l"), F.octet_length("_t").alias("o"))
+    stats = stats.limit(budget // per_doc + 1).toArrow()
+    n_docs, octets = stats.num_rows, pc.sum(stats["o"]).as_py() or 0
+    if not 0 < per_doc * n_docs + octets <= budget:
         return None
-    table = normed.toArrow()
-    table = table.filter(pc.greater(pc.utf8_length(table["_t"]), 0)).sort_by("id")
+    # every non-null text ASCII: one code point per byte
+    if pc.all(pc.equal(stats["l"], stats["o"])).as_py() is not False:
+        table = raw.toArrow()
+        table = table.set_column(1, "_t", _norm_ascii(table["_t"]))
+    else:
+        table = raw.select("id", _NORM(F.col("_t")).alias("_t")).toArrow()
+    # the empty-text filter runs on the driver: in Spark, Catalyst would
+    # push it below the projection and run the normalization twice per row
+    lens = pc.utf8_length(table["_t"])
+    n_cps = pc.sum(lens).as_py() or 0
+    if per_doc * n_docs + _BYTES_PER_CP * n_cps > budget:
+        return None
+    table = table.filter(pc.greater(lens, 0)).sort_by("id")
     id_type = table.schema.field("id").type
     if table.num_rows == 0:  # every text normalized to ""
         none = pa.array([], type=id_type)
@@ -477,11 +511,10 @@ def _minhash_on_driver(
         indptr, flat = set_csr(np.repeat(rank << 31, sz) | flat, nu)
         sz = np.add.reduceat(sz, grp)
     rows = num_hashes // bands
+    # (band, its minhashes) per doc: minhashes are < 2^31, so two share
+    # one sort key
     keys = np.concatenate(
-        [
-            np.column_stack([np.full(nu, bi), sig[bi * rows : (bi + 1) * rows].T])
-            for bi in range(bands)
-        ]
+        [pack31([np.full(nu, bi), *sig[bi * rows : (bi + 1) * rows]]) for bi in range(bands)]
     )
     del sig
     pairs = bucket_pairs(keys, np.tile(np.arange(nu), bands), max_bucket_size, budget // 16)

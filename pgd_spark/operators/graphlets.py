@@ -95,9 +95,10 @@ def _edge_counts_broadcast(
     from pgd_spark.operators.kernels import _oriented_state, count_edges
 
     if g._census_state is None:
-        edges_pdf = g.edges.toPandas()
-        src = edges_pdf["src"].to_numpy(dtype=np.int64)
-        dst = edges_pdf["dst"].to_numpy(dtype=np.int64)
+        edges = g.edges.select("src", "dst").toArrow()
+        src = edges["src"].to_numpy().astype(np.int64, copy=False)
+        dst = edges["dst"].to_numpy().astype(np.int64, copy=False)
+        del edges
         g._census_state = _oriented_state(src, dst)
         # the driver holds every canonical edge, so the graph sizes are
         # free here: later num_vertices()/num_edges() calls (macro

@@ -62,7 +62,7 @@ def copurchase_edges(lineitem: DataFrame, max_partkey: int | None = None) -> Dat
 
 def copurchase_graph(spark: SparkSession, sf_dir: str, max_partkey: int | None = None) -> Graph:
     """The derived graph PERSISTS its edge table: every consumer of the
-    co-purchase graph (census kernel toPandas, adjacency, degrees, CC)
+    co-purchase graph (census edge collect, adjacency, degrees, CC)
     re-reads the edges, and without the persist each action re-ran the
     lineitem self-join + distinct from parquet (measured: the census
     re-derived the edges once per repetition).  The first action —

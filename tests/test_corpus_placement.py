@@ -8,9 +8,13 @@ import contextlib
 import math
 import random
 
+import string
+
 import numpy as np
 import pandas as pd
 import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from pgd_spark.functions import candidates, dedup
@@ -199,9 +203,10 @@ def test_minhash_gate_follows_budget(spark):
 def _edge_texts():
     """(id, text) rows that probe the shingle semantics: null, empty and
     blank texts, texts shorter than n, whitespace runs the normalization
-    folds, upper case, non-ASCII and non-BMP code points, a null id,
-    repeated ids (one holding a short and a long text) and
-    near-duplicate groups so that pairs pass the threshold."""
+    folds, control characters and non-ASCII spaces it keeps, upper
+    case, non-ASCII and non-BMP code points, a null id, repeated ids
+    (one holding a short and a long text) and near-duplicate groups so
+    that pairs pass the threshold."""
     base = [
         "the quick brown fox jumps over the lazy dog",
         "Ünïcödé  wörds\tand   ÄÖÜ letters here",
@@ -216,30 +221,88 @@ def _edge_texts():
         (106, "ab"), (107, "\U0001F600"), (108, "é\U0001F600"), (109, " ab "),
         (110, "ab"), (110, base[0]), (111, base[0] + " y"), (1, base[1][:5]),
         (None, base[0]), (None, None),
+        # runs of tab, VT, FF and CR, leading and trailing tabs: Java's
+        # \s folds each run to one space, and trim keeps the tabs
+        (200, "\tthe quick\t\tbrown\x0b\x0bfox\x0c\x0cjumps\r\rover the lazy dog\t"),
+        (201, "\t\t" + base[0].upper() + " z\t\t"),
+        (202, "\t A\x0bB\x0cC\rD\nE  F \t"), (203, "a\x1cb\x1fc\x00d a\x1cb\x1fc\x00d"),
+        # non-ASCII spaces, which \s leaves as they are
+        (300, "the quick\u00a0brown fox jumps\u2003over the lazy dog"),
+        (301, "the quick\u00a0brown fox jumps\u2003over the lazy dog z"),
     ]
     return rows
 
 
+def _collected_plans(monkeypatch, df) -> list[str]:
+    """The optimized plans of the frames collected with Arrow from now on."""
+    plans = []
+    cls = type(df)
+    real = cls.toArrow
+
+    def record(frame):
+        plans.append(frame._jdf.queryExecution().optimizedPlan().toString())
+        return real(frame)
+
+    monkeypatch.setattr(cls, "toArrow", record)
+    return plans
+
+
+def _normalizes_in_spark(plan: str) -> bool:
+    return "lower(" in plan or "regexp_replace(" in plan
+
+
 @pytest.mark.parametrize("n", [1, 2, 3, 4, 5])
-def test_minhash_edge_texts_placements_agree(spark, n):
+def test_minhash_edge_texts_placements_agree(spark, monkeypatch, n):
     """Both placements return the same rows on texts that exercise every
     shingle packing: ASCII-width direct codes, dense ranks of 63-bit
     packings (non-BMP, n = 3) and the chained ranks past 63 bits
-    (n = 4, 5)."""
+    (n = 4, 5).  The corpus is not all ASCII, so the driver placement
+    collects Spark's normalization; its stats job reads raw lengths."""
     docs = spark.createDataFrame(_edge_texts(), "doc_id long, text string")
+    plans = _collected_plans(monkeypatch, docs)
     out = _agree(
         spark, lambda: minhash_dedup(docs, n=n, num_hashes=32, bands=16, threshold=0.3)
     )
     assert out.count() > 0
+    assert len(plans) == 2
+    assert not _normalizes_in_spark(plans[0]) and _normalizes_in_spark(plans[1])
 
 
-def test_minhash_ascii_shingles_placements_agree(spark):
+def test_minhash_ascii_shingles_placements_agree(spark, monkeypatch):
     """An ASCII corpus with texts shorter than n: the code points pack
-    into the set key directly."""
+    into the set key directly.  The driver normalizes the texts, so
+    neither Spark job runs the case mapping or the regex."""
     rows = [(i, t) for i, t in _edge_texts() if t is None or t.isascii()]
     docs = spark.createDataFrame(rows, "doc_id int, text string")
-    out = _agree(spark, lambda: minhash_dedup(docs, n=5, num_hashes=32, bands=16, threshold=0.3))
-    assert out.count() > 0
+    plans = _collected_plans(monkeypatch, docs)
+    for n in (1, 3, 5):
+        plans.clear()
+        out = _agree(
+            spark, lambda: minhash_dedup(docs, n=n, num_hashes=32, bands=16, threshold=0.3)
+        )
+        assert out.count() > 0
+        assert len(plans) == 2
+        assert not any(map(_normalizes_in_spark, plans))
+
+
+_SPACES = " \t\n\x0b\x0c\r\x00\x1c\x1d\x1e\x1f"
+
+
+@settings(max_examples=15, deadline=None, suppress_health_check=list(HealthCheck))
+@given(st.lists(st.text(string.ascii_letters + _SPACES, max_size=24), min_size=1, max_size=60))
+def test_ascii_normalization_matches_spark(spark, texts):
+    """The driver's normalization of ASCII text equals Spark's
+    ``_NORM``: trim strips only U+0020, a run of Java's \\s class
+    ``[ \\t\\n\\x0B\\f\\r]`` becomes one space, and \\x00 and
+    \\x1c-\\x1f stay."""
+    import pyarrow as pa
+
+    texts = ["\t A\x0bB\x0cC\rD\nE  F \t", None, *texts]
+    df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)], "i long, t string")
+    want = [r[0] for r in df.orderBy("i").select(dedup._NORM(F.col("t"))).collect()]
+    got = dedup._norm_ascii(pa.array(texts)).to_pylist()
+    assert got == want
+    assert got[:2] == [" a b c d e f ", None]
 
 
 @pytest.mark.parametrize("text", ["ab", "é", "\U0001F600", "a\U0001F600", "\U0001F600ab", "abcd"])
@@ -434,10 +497,23 @@ def test_placements_release_caches(spark, tmp_path):
 
 
 def test_bucket_pairs_against_loop():
-    """The numpy candidate builder against a plain loop over buckets."""
+    """The numpy candidate builder against a plain loop over buckets,
+    on its key matrix as it is and with two minhash-sized columns (up to
+    HASH_MOD - 1) packed into one sort key."""
     rng = np.random.default_rng(9)
     n, tables = 300, 5
-    keys = np.column_stack([np.repeat(np.arange(tables), n), rng.integers(0, 40, n * tables)])
+    top = dedup.HASH_MOD - 1
+    keys = np.column_stack(
+        [
+            np.repeat(np.arange(tables), n),
+            rng.integers(0, 10, n * tables),
+            top - rng.integers(0, 2, n * tables),
+            rng.choice([0, top], n * tables),
+        ]
+    )
+    packed = candidates.pack31(list(keys.T))
+    odd = np.column_stack([keys[:, 0], candidates.pack31(list(keys.T[1:]))])
+    assert packed.shape[1] == 2 and odd.shape[1] == 3
     members = np.tile(np.arange(n), tables)
     for cap in (None, 6, 12):
         want = set()
@@ -445,9 +521,10 @@ def test_bucket_pairs_against_loop():
             ms = sorted(members[(keys == key).all(axis=1)].tolist())
             if 2 <= len(ms) and (cap is None or len(ms) <= cap):
                 want |= {(a, b) for i, a in enumerate(ms) for b in ms[i + 1 :]}
-        a, b = candidates.bucket_pairs(keys, members, cap, 10**9)
-        assert list(zip(a.tolist(), b.tolist())) == sorted(want)
-        assert candidates.bucket_pairs(keys, members, cap, len(want) - 1) is None
+        for k in (keys, packed, odd):
+            a, b = candidates.bucket_pairs(k, members, cap, 10**9)
+            assert list(zip(a.tolist(), b.tolist())) == sorted(want)
+        assert candidates.bucket_pairs(packed, members, cap, len(want) - 1) is None
 
 
 def test_set_overlaps_against_sets(monkeypatch):

@@ -88,14 +88,32 @@ def test_second_census_reuses_the_graph_state(spark, monkeypatch):
     first = sorted(map(tuple, edge_graphlet_counts(g, "broadcast").collect()))
     assert g._census_state is not None
 
-    def no_collect():
+    def no_collect(df):
         raise AssertionError("the census collected the edges again")
 
-    monkeypatch.setattr(g.edges, "toPandas", no_collect)
+    monkeypatch.setattr(type(g.edges), "toArrow", no_collect)
     again = sorted(map(tuple, edge_graphlet_counts(g, "broadcast").collect()))
     assert again == first
     g.unpersist()
     assert g._census_state is None
+
+
+def test_broadcast_census_collects_edges_with_arrow(spark, monkeypatch):
+    """The broadcast census reads its edges with one Arrow collect, and
+    its rows equal the distributed census's."""
+    from pgd_spark.operators.graphlets import edge_graphlet_counts
+
+    pairs = _hub_pairs(seed=6, n=80, m=300, hub_deg=40)
+    spark_rows = edge_graphlet_counts(make_graph(spark, pairs), "distributed").collect()
+    g = make_graph(spark, pairs)
+
+    def no_pandas(df):
+        raise AssertionError("DataFrame.toPandas called")
+
+    monkeypatch.setattr(type(g.edges), "toPandas", no_pandas)
+    got = sorted(map(tuple, edge_graphlet_counts(g, "broadcast").collect()))
+    assert g._census_state is not None
+    assert got == sorted(map(tuple, spark_rows))
 
 
 def test_sampled_census_equal_across_strategies(spark):
