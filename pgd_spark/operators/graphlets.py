@@ -30,6 +30,8 @@ split at cpp:602-611):
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame, functions as F
 
 from pgd_spark.graph import Graph
@@ -39,11 +41,14 @@ EDGE_COUNT_COLS = ["v", "u", "deg_v", "deg_u", "tri", "cliq", "cyc"]
 
 _DEC = "decimal(38,0)"
 
+#: ``auto`` runs the broadcast census up to this many edges
+_BROADCAST_MAX_EDGES = 5_000_000
+
 
 def edge_graphlet_counts(
     g: Graph,
     strategy: str = "auto",
-    broadcast_max_edges: int = 5_000_000,
+    broadcast_max_edges: int = _BROADCAST_MAX_EDGES,
     edge_predicate=None,
     distributed_hot_threshold: int | None = None,
     max_exact_degree: int = 20_000_000,
@@ -58,18 +63,24 @@ def edge_graphlet_counts(
     edges get kernel passes — counts stay relative to the FULL graph
     (used by the edge-sampled approximate census).
     """
-    if strategy == "auto":
-        strategy = "broadcast" if g.num_edges() <= broadcast_max_edges else "distributed"
-    if strategy == "broadcast":
+    if _placement(g, strategy, broadcast_max_edges) == "broadcast":
         return _edge_counts_broadcast(g, edge_predicate)
-    if strategy == "distributed":
-        return _edge_counts_distributed(
-            g,
-            edge_predicate,
-            hot_degree_threshold=distributed_hot_threshold,
-            max_exact_degree=max_exact_degree,
-        )
-    raise ValueError(f"unknown strategy {strategy!r}")
+    return _edge_counts_distributed(
+        g,
+        edge_predicate,
+        hot_degree_threshold=distributed_hot_threshold,
+        max_exact_degree=max_exact_degree,
+    )
+
+
+def _placement(g: Graph, strategy: str, broadcast_max_edges: int = _BROADCAST_MAX_EDGES) -> str:
+    """The census strategy that ``strategy`` names (``auto`` resolved by
+    the graph's edge count)."""
+    if strategy == "auto":
+        return "broadcast" if g.num_edges() <= broadcast_max_edges else "distributed"
+    if strategy not in ("broadcast", "distributed"):
+        raise ValueError(f"unknown strategy {strategy!r}")
+    return strategy
 
 
 # ---------------------------------------------------------------- broadcast
@@ -85,8 +96,8 @@ def _edge_counts_broadcast(
     approximate census's portable hash selects (approximate.sample_mask)
     before any kernel work.
 
-    Without an ``edge_predicate`` the output frame carries the exact
-    macro term sums (:func:`_macro_sums`) as ``_pgd_macro_sums``, so
+    Without an ``edge_predicate`` the output frame carries the census
+    moments (:func:`_driver_moments`) as ``_pgd_macro_moments``, so
     macro_counts over it launches no aggregation.  ``persist()`` returns
     the same frame, so the tag survives it; any derived frame has none."""
     import numpy as np
@@ -123,7 +134,7 @@ def _edge_counts_broadcast(
         return out.filter(edge_predicate)
     n, m = g._n, g._m
     if n * n * m < _LONG_SUMS_BOUND:
-        out._pgd_macro_sums = (n, m, _macro_sums(n, m, dv, du, tri, cliq, cyc))
+        out._pgd_macro_moments = (n, m, _driver_moments(dv, du, tri, cliq, cyc))
     return out
 
 
@@ -475,30 +486,71 @@ MACRO_KEYS = [
 ]
 
 
-#: n*n*m below this, every macro term sum fits a long exactly (Σ over m
-#: edges of terms < n²/2), and so does Spark's long-regime aggregation
+#: n*n*m below this, every census moment fits a long exactly (Σ over m
+#: edges of products < n²), on the driver and in Spark alike
 _LONG_SUMS_BOUND = 1 << 62
 
 
-def _macro_sums(n: int, m: int, dv, du, tri, cliq, cyc) -> dict:
-    """The exact column sums of :func:`_macro_terms` over the census
-    edges, as Python ints, from numpy int64 arrays.
+#: the second moments Σtri², Σa², Σb², Σab, Σtri·a, Σtri·b, as index
+#: pairs into (tri, a, b): one order for both moment sources
+_PAIRS = ((0, 0), (1, 1), (2, 2), (1, 2), (0, 1), (0, 2))
+
+
+def _driver_moments(dv, du, tri, cliq, cyc) -> tuple:
+    """The census moments (see :func:`_macro_sums`) of numpy int64
+    per-edge arrays, as Python ints: one pass each, no per-term array.
+    Under n*n*m < :data:`_LONG_SUMS_BOUND` each sum is exact in int64."""
+    import numpy as np
+
+    x = (tri, dv - tri - 1, du - tri - 1)
+    return (
+        len(tri),
+        *(int(v.sum()) for v in x),
+        *(int(np.dot(x[i], x[j])) for i, j in _PAIRS),
+        int(cliq.sum()),
+        int(cyc.sum()),
+    )
+
+
+def _spark_moments(c: DataFrame, big: str) -> DataFrame:
+    """The census moments of a per-edge counts frame as one Spark
+    ``agg`` row, in :func:`_driver_moments` order.  Every factor is cast
+    to ``big`` (``long``, or ``decimal(38,0)`` past the long bound)
+    before it is multiplied, so nothing divides or rounds in Spark."""
+    tri = F.col("tri")
+    x = [v.cast(big) for v in (tri, F.col("deg_v") - tri - 1, F.col("deg_u") - tri - 1)]
+    return c.agg(
+        F.count(F.lit(1)),
+        *(F.sum(v) for v in x),
+        *(F.sum(x[i] * x[j]) for i, j in _PAIRS),
+        F.sum(F.col("cliq").cast(big)),
+        F.sum(F.col("cyc").cast(big)),
+    )
+
+
+def _moments(c: DataFrame, n: int, m: int) -> tuple:
+    """The census moments of ``c``: the driver's, when the broadcast
+    census tagged them on ``c`` for a graph of these sizes, else one
+    Spark aggregation, in decimal only when longs could overflow."""
+    tag = getattr(c, "_pgd_macro_moments", None)
+    if tag is not None and tag[:2] == (n, m):
+        return tag[2]
+    big = _DEC if n * n * m >= _LONG_SUMS_BOUND else "long"
+    return tuple(int(x or 0) for x in _spark_moments(c, big).first())
+
+
+def _macro_sums(n: int, m: int, moments: tuple) -> dict:
+    """The fifteen macro sums over the census edges — the raw kernel sums
+    Σtri, Σstar, Σdisconn, Σcliq, Σcyc and the per-edge terms N1..N10
+    (cpp:1366-1448) — from the census moments, in Python ints.
 
     Every term is a polynomial of degree <= 2 in tri and the 2-star ends
     a = deg_v-tri-1, b = deg_u-tri-1 (star = a+b; with ts = tri+star,
-    disconn = (n-2) - ts), so the fifteen sums follow from five first
-    and six second moments: one pass each, no per-term array.  Under
-    n*n*m < 2^62 each moment is < m*n² and exact in int64; the algebra
-    runs in Python ints."""
-    import numpy as np
-
-    a = dv - tri - 1
-    b = du - tri - 1
-    k = len(tri)
-    T, A, B = (int(x.sum()) for x in (tri, a, b))
-    TT, AA, BB, AB, TA, TB = (
-        int(np.dot(x, y)) for x, y in ((tri, tri), (a, a), (b, b), (a, b), (tri, a), (tri, b))
-    )
+    disconn = (n-2) - ts), so its sum follows from the edge count k, the
+    first moments Σtri, Σa, Σb, the second moments Σtri², Σa², Σb², Σab,
+    Σtri·a, Σtri·b, and Σcliq, Σcyc.  Both census placements sum these
+    same moments (:func:`_driver_moments`, :func:`_spark_moments`)."""
+    k, T, A, B, TT, AA, BB, AB, TA, TB, cliq, cyc = moments
     S, SS, TS = A + B, AA + 2 * AB + BB, TA + TB  # Σstar, Σstar², Σtri·star
     U, UU = T + S, TT + 2 * TS + SS  # Σts, Σts²
     c = n - 2
@@ -507,8 +559,8 @@ def _macro_sums(n: int, m: int, dv, du, tri, cliq, cyc) -> dict:
         "t_tri": T,
         "t_star": S,
         "t_disc": D,
-        "t_cliq": int(cliq.sum()),
-        "t_cyc": int(cyc.sum()),
+        "t_cliq": cliq,
+        "t_cyc": cyc,
         "n1": (UU - U) // 2,
         "n2": (SS - S) // 2,
         "n3": (TT - T) // 2,
@@ -522,66 +574,74 @@ def _macro_sums(n: int, m: int, dv, du, tri, cliq, cyc) -> dict:
     }
 
 
-def _macro_terms(c: DataFrame, n: int, m: int, big: str) -> DataFrame:
-    """Per-edge closed-form terms N1..N10 + raw kernel sums.
+def _closure(n: int, m: int, sums: dict, scale: float | None = None) -> dict:
+    """The closure equations (cpp:1449-1472): all 17 totals plus
+    total_wedges and global_cc from the :func:`_macro_sums` of a census.
 
-    When ``big`` is decimal, EVERY arithmetic step on the disconnected
-    terms happens in decimal: Spark's ``/`` on long operands promotes
-    to double (53-bit mantissa) BEFORE any outer cast, so e.g.
-    disconn*(disconn-1)/2 would silently round once disconn exceeds
-    ~1.3e8 — exactly the large-n regime the decimal branch exists for.
-    x*(x-1) is always even, so decimal division by 2 (which keeps
-    scale 6) is exact and the cast back to scale 0 loses nothing.
-    """
-    tri, dv, du = F.col("tri"), F.col("deg_v"), F.col("deg_u")
-    star = (dv - tri - 1) + (du - tri - 1)
-    disconn = F.lit(n) - (star + tri) - 2
-    rv, ru = dv - tri - 1, du - tri - 1
-    if big == _DEC:
-        ts_d = (tri + star).cast(_DEC)
-        disc_d = disconn.cast(_DEC)
-        n1 = (ts_d * (ts_d - 1) / 2).cast(_DEC)
-        n8 = (disc_d * (disc_d - 1) / 2).cast(_DEC)
-        n9 = star.cast(_DEC) * disc_d
-        n10 = tri.cast(_DEC) * disc_d
+    Exact (``scale=None``): Python ints and ``//``.  Sampled: every sum
+    is multiplied by ``scale`` (the Horvitz-Thompson weight) and every
+    division rounds half up, ``floor(x/d + 0.5)`` — not Python's
+    half-even ``round``, so the SQL oracle can state it verbatim.  The
+    raw-sum forms chordcycle = n3 - Σcliq and path = n5 - Σcyc equal
+    the reference's n3 - 6·clique and n5 - 4·cycle on every full census,
+    where Σcliq ≡ 0 mod 6 and Σcyc ≡ 0 mod 4."""
+    if scale is None:
+        s = sums
+
+        def div(x, d=1):
+            return x // d
     else:
-        n1 = ((tri + star) * (tri + star - 1) / 2).cast("long")
-        n8 = (disconn * (disconn - 1) / 2).cast("long")
-        n9 = (star * disconn).cast("long")
-        n10 = (tri * disconn).cast("long")
-    return c.select(
-        tri.alias("t_tri"),
-        star.alias("t_star"),
-        disconn.cast(big).alias("t_disc"),
-        F.col("cliq").alias("t_cliq"),
-        F.col("cyc").alias("t_cyc"),
-        n1.alias("n1"),
-        (star * (star - 1) / 2).cast("long").alias("n2"),
-        (tri * (tri - 1) / 2).cast("long").alias("n3"),
-        (tri * star).cast("long").alias("n4"),
-        (rv * ru).cast("long").alias("n5"),
-        ((rv * (rv - 1) / 2) + (ru * (ru - 1) / 2)).cast("long").alias("n6"),
-        (F.lit(m) - dv - du + 1).cast("long").alias("n7"),
-        n8.alias("n8"),
-        n9.alias("n9"),
-        n10.alias("n10"),
+        s = {key: v * scale for key, v in sums.items()}
+
+        def div(x, d=1):
+            return math.floor(x / d + 0.5)
+
+    t: dict = {}
+    t["total_2_1edge"] = m
+    t["total_2_indep"] = n * (n - 1) // 2 - m
+    t["total_3_tris"] = div(s["t_tri"], 3)
+    t["total_2_star"] = div(s["t_star"], 2)
+    t["total_3_1edge"] = div(s["t_disc"])
+    t["total_3_indep"] = n * (n - 1) * (n - 2) // 6 - (
+        t["total_3_tris"] + t["total_2_star"] + t["total_3_1edge"]
     )
+    t["total_wedges"] = 3 * t["total_3_tris"] + t["total_2_star"]
+    t["global_cc"] = (3 * t["total_3_tris"] / t["total_wedges"]) if t["total_wedges"] else 0.0
+    t["total_4_clique"] = div(s["t_cliq"], 6)
+    t["total_4_chordcycle"] = div(s["n3"] - s["t_cliq"])
+    t["total_4_cycle"] = div(s["t_cyc"], 4)
+    t["total_4_path"] = div(s["n5"] - s["t_cyc"])
+    t["total_4_tailed_tris"] = div(s["n4"] - 4 * (s["n3"] - s["t_cliq"]), 2)
+    t["total_3_star"] = div(s["n6"] - t["total_4_tailed_tris"], 3)
+    t["total_4_2edge"] = div(
+        s["n7"]
+        - 6 * t["total_4_clique"]
+        - 4 * t["total_4_cycle"]
+        - 4 * t["total_4_chordcycle"]
+        - 2 * t["total_4_path"]
+        - 2 * t["total_4_tailed_tris"],
+        2,
+    )
+    t["total_4_1edge"] = div(s["n8"] - 2 * t["total_4_2edge"])
+    t["total_4_2star"] = div(s["n9"] - 2 * t["total_4_path"], 2)
+    t["total_4_tri"] = div(s["n10"] - t["total_4_tailed_tris"], 3)
+    four = sum(t[x] for x in MACRO_KEYS[6:-1])  # the other ten 4-node totals
+    t["total_4_indep"] = n * (n - 1) * (n - 2) * (n - 3) // 24 - four
+    return t
 
 
-def macro_counts(
-    g: Graph,
-    strategy: str = "auto",
-    counts: DataFrame | None = None,
-    force_decimal: bool = False,
-) -> dict:
+def macro_counts(g: Graph, strategy: str = "auto", counts: DataFrame | None = None) -> dict:
     """All 17 graphlet totals + wedges/global_cc, exact.
 
-    One pass: per-edge closed-form terms N1..N10 + raw kernel sums are
-    aggregated in a single ``agg`` (Spark's partial aggregation is the
-    analog of the reference's per-thread counters, cpp:1370-1374,
-    1431-1448); the final closure (cpp:1449-1472) runs on the driver in
-    exact Python ints — the disconnected terms overflow int64 on
-    10^9-vertex graphs, hence decimal sums for N1/N8/N9/N10.
+    The census's per-edge counts reduce to twelve moments (edge count,
+    first and second moments of tri and the 2-star ends, Σcliq, Σcyc):
+    summed on the driver by the broadcast census, which tags them on its
+    frame, or else in one Spark ``agg`` (Spark's partial aggregation is
+    the analog of the reference's per-thread counters, cpp:1370-1374,
+    1431-1448).  The fifteen macro sums and the closure (cpp:1449-1472)
+    follow on the driver in exact Python ints.  Past n²·m ≥ 2^62 the
+    Spark moments are summed as ``decimal(38,0)``, the one place the
+    disconnected terms of 10^9-vertex graphs could overflow a long.
     """
     own_counts = counts is None
     c = counts if counts is not None else edge_graphlet_counts(g, strategy)
@@ -589,67 +649,13 @@ def macro_counts(
     # sizes from its driver-side edge copy (no count job)
     n = g.num_vertices()
     m = g.num_edges()
-    tag = getattr(c, "_pgd_macro_sums", None)
-    if tag is not None and tag[:2] == (n, m) and not force_decimal:
-        # the broadcast census summed the terms on the driver
-        s = tag[2]
-    else:
-        # decimal sums are only needed when Σ over m edges of ~n²-sized
-        # terms can overflow int64; below that bound plain longs keep
-        # the aggregation inside whole-stage codegen (decimal agg is ~3×
-        # slower)
-        big = _DEC if (force_decimal or n * n * m >= _LONG_SUMS_BOUND) else "long"
-        terms = _macro_terms(c, n, m, big)
-        row = terms.agg(*[F.sum(col).alias(col) for col in terms.columns]).first()
-        s = {k: int(row[k] or 0) for k in terms.columns}
+    s = _macro_sums(n, m, _moments(c, n, m))
     if own_counts:
         # totals are final — drop any lookup table the distributed
         # kernel persisted for this one pass (callers who passed their
         # own counts frame release it themselves when done)
         release_internal_caches(c)
-
-    # closure equations, exact ints (cpp:1449-1472)
-    t: dict = {}
-    t["total_2_1edge"] = m
-    t["total_2_indep"] = n * (n - 1) // 2 - m
-    t["total_3_tris"] = s["t_tri"] // 3
-    t["total_2_star"] = s["t_star"] // 2
-    t["total_3_1edge"] = s["t_disc"]
-    t["total_3_indep"] = n * (n - 1) * (n - 2) // 6 - (
-        t["total_3_tris"] + t["total_2_star"] + t["total_3_1edge"]
-    )
-    t["total_wedges"] = 3 * t["total_3_tris"] + t["total_2_star"]
-    t["global_cc"] = (3 * t["total_3_tris"] / t["total_wedges"]) if t["total_wedges"] else 0.0
-    t["total_4_clique"] = s["t_cliq"] // 6
-    t["total_4_chordcycle"] = s["n3"] - 6 * t["total_4_clique"]
-    t["total_4_cycle"] = s["t_cyc"] // 4
-    t["total_4_path"] = s["n5"] - 4 * t["total_4_cycle"]
-    t["total_4_tailed_tris"] = (s["n4"] - 4 * t["total_4_chordcycle"]) // 2
-    t["total_3_star"] = (s["n6"] - t["total_4_tailed_tris"]) // 3
-    t["total_4_2edge"] = (
-        s["n7"]
-        - 6 * t["total_4_clique"]
-        - 4 * t["total_4_cycle"]
-        - 4 * t["total_4_chordcycle"]
-        - 2 * t["total_4_path"]
-        - 2 * t["total_4_tailed_tris"]
-    ) // 2
-    t["total_4_1edge"] = s["n8"] - 2 * t["total_4_2edge"]
-    t["total_4_2star"] = (s["n9"] - 2 * t["total_4_path"]) // 2
-    t["total_4_tri"] = (s["n10"] - t["total_4_tailed_tris"]) // 3
-    k4 = [
-        "total_4_clique",
-        "total_4_chordcycle",
-        "total_4_tailed_tris",
-        "total_4_cycle",
-        "total_3_star",
-        "total_4_path",
-        "total_4_1edge",
-        "total_4_2edge",
-        "total_4_2star",
-        "total_4_tri",
-    ]
-    t["total_4_indep"] = n * (n - 1) * (n - 2) * (n - 3) // 24 - sum(t[x] for x in k4)
+    t = _closure(n, m, s)
     t["_nsums"] = {f"n{i}": s[f"n{i}"] for i in range(1, 11)}
     t["_ksums"] = {k: s[k] for k in ("t_tri", "t_star", "t_disc", "t_cliq", "t_cyc")}
     return t

@@ -1,7 +1,7 @@
 """Regression tests for the round-1 review findings (ADVICE.md):
 
-1. decimal macro path must be EXACT (no double promotion inside the
-   N1/N8/N9/N10 terms) in the large-n regime it exists for;
+1. decimal macro path must be EXACT (no long overflow or double
+   rounding in the Spark moments) in the large-n regime it exists for;
 2. kcore / hashmin-CC raise on max_iter exhaustion instead of silently
    returning non-converged (wrong) results;
 3. zero-norm embeddings must not rank first in cosine top-k (NaN sorts
@@ -17,37 +17,48 @@ from tests.conftest import make_graph
 
 
 # ------------------------------------------------------------- decimal macro
-def test_macro_terms_decimal_exact_at_large_n(spark):
-    """disconn ~ 3e9 puts disconn*(disconn-1)/2 at ~4.5e18 — above the
-    53-bit double mantissa, where the old long->double->decimal chain
-    rounded.  The decimal path must reproduce the exact Python int."""
-    from pgd_spark.operators.graphlets import _DEC, _macro_terms
+def test_macro_moments_decimal_exact_at_large_n(spark):
+    """Past the long bound the Spark moments are decimal(38,0) sums of
+    factors cast before they multiply: a 2-star end of 3.1e9 squares
+    past 2^63, where a long product overflows and a double rounds.  The
+    sums, e.g. disconn*(disconn-1)/2 at ~2.4e19 for the first row, must
+    equal the per-edge terms summed in Python ints."""
+    from pgd_spark.operators.graphlets import _LONG_SUMS_BOUND, _macro_sums, _moments
 
-    n, m = 3_000_000_003, 10
-    # one degree-oriented edge row: tri=1, star=2, so
-    # disconn = n - 3 - 2 = 2_999_999_998
-    c = spark.createDataFrame(
-        [(1, 2, 3, 3, 1, 0, 0)],
-        "v long, u long, deg_v long, deg_u long, tri long, cliq long, cyc long",
-    )
-    row = _macro_terms(c, n, m, _DEC).first()
-    tri, star = 1, (3 - 1 - 1) + (3 - 1 - 1)
-    disconn = n - (star + tri) - 2
-    assert int(row["n8"]) == disconn * (disconn - 1) // 2
-    assert int(row["n9"]) == star * disconn
-    assert int(row["n10"]) == tri * disconn
-    ts = tri + star
-    assert int(row["n1"]) == ts * (ts - 1) // 2
-    # sanity: the value really is beyond double precision
-    assert float(disconn * (disconn - 1) // 2) != disconn * (disconn - 1) // 2
+    n, m = 7_000_000_003, 10
+    # degree-oriented edge rows (deg_v, deg_u, tri, cliq, cyc)
+    rows = [(3, 3, 1, 0, 0), (3_100_000_000, 3_100_000_000, 1, 0, 0)]
+    c = spark.createDataFrame(rows, "deg_v long, deg_u long, tri long, cliq long, cyc long")
+    assert n * n * m >= _LONG_SUMS_BOUND
+    moments = _moments(c, n, m)
+    a = 3_100_000_000 - 1 - 1
+    assert moments[5] == 1 + a * a  # Σa², beyond both long and double
+    assert a * a > 2**63 and float(a * a) != a * a
+    s = _macro_sums(n, m, moments)
+    want = dict.fromkeys(["n1", "n8", "n9", "n10"], 0)
+    for dv, du, tri, _, _ in rows:
+        star = (dv - tri - 1) + (du - tri - 1)
+        disconn = n - (star + tri) - 2
+        ts = tri + star
+        want["n1"] += ts * (ts - 1) // 2
+        want["n8"] += disconn * (disconn - 1) // 2
+        want["n9"] += star * disconn
+        want["n10"] += tri * disconn
+    assert {k: s[k] for k in want} == want
+    # sanity: the first row's n8 really is beyond double precision
+    d0 = n - 5
+    assert float(d0 * (d0 - 1) // 2) != d0 * (d0 - 1) // 2
 
 
-def test_macro_counts_decimal_branch_equals_long_branch(spark):
+def test_macro_counts_decimal_branch_equals_long_branch(spark, monkeypatch):
+    from pgd_spark.operators import graphlets
     from pgd_spark.operators.graphlets import MACRO_KEYS, macro_counts
 
-    g = make_graph(spark, [(0, 1), (1, 2), (0, 2), (2, 3), (3, 4), (4, 0), (1, 4)])
-    t_long = macro_counts(g, strategy="broadcast")
-    t_dec = macro_counts(g, strategy="broadcast", force_decimal=True)
+    pairs = [(0, 1), (1, 2), (0, 2), (2, 3), (3, 4), (4, 0), (1, 4)]
+    t_long = macro_counts(make_graph(spark, pairs), strategy="broadcast")
+    # a zero bound puts every graph in the decimal regime
+    monkeypatch.setattr(graphlets, "_LONG_SUMS_BOUND", 0)
+    t_dec = macro_counts(make_graph(spark, pairs), strategy="broadcast")
     for k in MACRO_KEYS:
         assert t_long[k] == t_dec[k], k
 

@@ -54,10 +54,23 @@ def test_gfd_files(spark, tmp_path):
         assert abs(sum(vals) - 1.0) < 1e-9
 
 
-def test_cli_main(spark, tmp_path):
+def test_cli_main(spark, tmp_path, capsys):
     from pgd_spark.cli import main
 
     macro = tmp_path / "k4.macro"
     rc = main(["-f", os.path.join(DATA, "4-clique.txt"), "--macro", str(macro), "-v"])
     assert rc == 0
     assert "total_4_clique = 1" in macro.read_text()
+    assert "identity checks: ALL OK" in capsys.readouterr().out
+
+    # -a approximate writes the sampled totals; they carry no ΣN_i sums,
+    # so -v prints no identity-check line
+    macro = tmp_path / "dd21.macro"
+    argv = ["-f", os.path.join(DATA, "DD21.mtx"), "-a", "approximate", "--fraction", "0.5",
+            "-v", "--macro", str(macro)]
+    assert main(argv) == 0
+    out = capsys.readouterr().out
+    assert "approximate census (fraction≈" in out
+    assert "identity checks" not in out
+    lines = macro.read_text().strip().splitlines()
+    assert len(lines) == 17 and lines[0].startswith("total_2_1edge = ")

@@ -6,6 +6,7 @@ other case."""
 
 import os
 import random
+import re
 
 import networkx as nx
 import pytest
@@ -123,26 +124,26 @@ def _spark_side(counts):
 def _assert_same_totals(a: dict, b: dict):
     assert a["_nsums"] == b["_nsums"]
     assert a["_ksums"] == b["_ksums"]
-    for k in MACRO_KEYS:
+    for k in MACRO_KEYS + ["total_wedges", "global_cc"]:
         assert a[k] == b[k], k
 
 
 def _count_aggregations(monkeypatch):
     calls = []
-    real = graphlets._macro_terms
+    real = graphlets._spark_moments
 
-    def spy(*a, **k):
-        calls.append(a[3])
-        return real(*a, **k)
+    def spy(c, big):
+        calls.append(big)
+        return real(c, big)
 
-    monkeypatch.setattr(graphlets, "_macro_terms", spy)
+    monkeypatch.setattr(graphlets, "_spark_moments", spy)
     return calls
 
 
 def test_tagged_macro_equals_spark_aggregation(spark, monkeypatch):
     g = make_graph(spark, _components_graph(6))
     counts = edge_graphlet_counts(g, "broadcast").persist()
-    assert counts._pgd_macro_sums[:2] == (g.num_vertices(), g.num_edges())
+    assert counts._pgd_macro_moments[:2] == (g.num_vertices(), g.num_edges())
     calls = _count_aggregations(monkeypatch)
     tagged = macro_counts(g, counts=counts)
     assert calls == []  # no Spark aggregation ran
@@ -151,21 +152,58 @@ def test_tagged_macro_equals_spark_aggregation(spark, monkeypatch):
     assert all(graphlets.check_identities(tagged).values())
 
 
-def test_force_decimal_still_aggregates_in_spark(spark, monkeypatch):
+def test_decimal_regime_still_aggregates_in_spark(spark, monkeypatch):
+    """Past the long bound the broadcast census tags nothing and the
+    moments are summed as decimals in Spark: the tag, Spark long and
+    Spark decimal(38,0) give the same totals and sums."""
     g = make_graph(spark, _components_graph(7))
     counts = edge_graphlet_counts(g, "broadcast")
     calls = _count_aggregations(monkeypatch)
-    dec = macro_counts(g, counts=counts, force_decimal=True)
-    assert calls == ["decimal(38,0)"]
-    _assert_same_totals(dec, macro_counts(g, counts=counts))
-    assert len(calls) == 1
+    tagged = macro_counts(g, counts=counts)
+    assert calls == []
+    _assert_same_totals(tagged, macro_counts(g, counts=_spark_side(counts)))
+    assert calls == ["long"]
+    monkeypatch.setattr(graphlets, "_LONG_SUMS_BOUND", 0)
+    dec_counts = edge_graphlet_counts(g, "broadcast")
+    assert not hasattr(dec_counts, "_pgd_macro_moments")
+    dec = macro_counts(g, counts=dec_counts)
+    assert calls == ["long", "decimal(38,0)"]
+    _assert_same_totals(tagged, dec)
+
+
+@pytest.mark.parametrize("bound", [None, 0])
+def test_spark_macro_aggregation_never_divides_or_uses_doubles(spark, monkeypatch, bound):
+    """Spark's ``/`` on longs promotes to double (53-bit mantissa), so
+    the optimized plan of the macro aggregation holds no Divide and no
+    cast to double, in the long and the decimal regime alike."""
+    if bound is not None:
+        monkeypatch.setattr(graphlets, "_LONG_SUMS_BOUND", bound)
+    g = make_graph(spark, _components_graph(11))
+    counts = _spark_side(edge_graphlet_counts(g, "broadcast"))
+    plans = []
+    real = graphlets._spark_moments
+
+    def spy(c, big):
+        out = real(c, big)
+        plans.append((big, out._jdf.queryExecution().optimizedPlan().toJSON()))
+        return out
+
+    monkeypatch.setattr(graphlets, "_spark_moments", spy)
+    macro_counts(g, counts=counts)
+    [(big, plan)] = plans
+    assert big == ("long" if bound is None else "decimal(38,0)")
+    exprs = set(re.findall(r"expressions\.(\w+)", plan))
+    types = set(re.findall(r'"dataType":"([^"]+)"', plan))
+    assert "Multiply" in exprs and "Divide" not in exprs
+    assert "double" not in types
+    assert ("decimal(38,0)" in types) == (bound is not None)
 
 
 def test_predicate_and_distributed_frames_carry_no_tag(spark):
     g = make_graph(spark, _components_graph(8))
     assert not hasattr(edge_graphlet_counts(g, "broadcast", edge_predicate=F.lit(True)),
-                       "_pgd_macro_sums")
-    assert not hasattr(edge_graphlet_counts(g, "distributed"), "_pgd_macro_sums")
+                       "_pgd_macro_moments")
+    assert not hasattr(edge_graphlet_counts(g, "distributed"), "_pgd_macro_moments")
 
 
 def test_sampled_census_tag_equals_spark_aggregation(spark, monkeypatch):
@@ -193,10 +231,10 @@ def test_tag_is_skipped_when_sizes_differ(spark, monkeypatch):
     assert calls == ["long"]
 
 
-
-def test_macro_sums_moments_equal_per_edge_terms():
-    """The moment form of the tag equals the per-edge terms summed in
-    Python ints, up to the long-regime bound."""
+def test_macro_sums_moments_equal_per_edge_terms(spark):
+    """The sums of the census moments equal the per-edge terms summed in
+    Python ints, up to the long-regime bound: the driver's numpy moments
+    and Spark's long and decimal(38,0) moments alike."""
     import numpy as np
 
     rng = np.random.default_rng(7)
@@ -220,4 +258,13 @@ def test_macro_sums_moments_equal_per_edge_terms():
                 ("n8", disc * (disc - 1) // 2), ("n9", star * disc), ("n10", t * disc),
             ):
                 want[key] += val
-        assert graphlets._macro_sums(n, m, dv, du, tri, cliq, cyc) == want
+        driver = graphlets._driver_moments(dv, du, tri, cliq, cyc)
+        assert graphlets._macro_sums(n, m, driver) == want
+        rows = spark.createDataFrame(
+            list(zip(*(a.tolist() for a in (dv, du, tri, cliq, cyc)))),
+            "deg_v long, deg_u long, tri long, cliq long, cyc long",
+        )
+        for big in ("long", "decimal(38,0)"):
+            moments = tuple(int(x) for x in graphlets._spark_moments(rows, big).first())
+            assert moments == driver, big
+            assert graphlets._macro_sums(n, m, moments) == want

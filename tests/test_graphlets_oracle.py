@@ -149,6 +149,11 @@ def test_distributed_hub_routing_matches_oracle(spark, monkeypatch, route):
     assert _micro_rows(micro_counts(g, strategy="distributed", pgd_quirk=False)) == want
 
 
+def _persisted(spark) -> set:
+    # ids, not a count: the context cleaner may drop other tests' RDDs
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
 def test_derived_operators_release_distributed_census(spark, monkeypatch):
     """Operators that build the distributed counts themselves carry its
     persisted two-hop base on their output: release_internal_caches on
@@ -157,10 +162,6 @@ def test_derived_operators_release_distributed_census(spark, monkeypatch):
     from pgd_spark.operators.graphlets import release_internal_caches
     from pgd_spark.operators.pregel import triangle_count_per_vertex
     from pgd_spark.operators.vertex_micro import vertex_micro_counts
-
-    def persisted():
-        # ids, not a count: the context cleaner may drop other tests' RDDs
-        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
 
     g = make_graph(spark, _planted_hub_edges())
     macro_counts(g, strategy="distributed")  # materializes the Graph's own caches
@@ -174,13 +175,27 @@ def test_derived_operators_release_distributed_census(spark, monkeypatch):
         vertex_micro_counts,
         triangle_count_per_vertex,
     ):
-        before = persisted()
+        before = _persisted(spark)
         out = op(g)
         out.collect()
-        base = persisted() - before
+        base = _persisted(spark) - before
         assert len(base) == 1
         release_internal_caches(out)
-        assert not base & persisted()
+        assert not base & _persisted(spark)
+
+
+@pytest.mark.parametrize("strategy", ["broadcast", "distributed"])
+def test_approximate_census_leaves_no_cache(spark, strategy):
+    """The sampled census persists nothing that outlives it: no sample
+    frame, and on the distributed path no two-hop base.  The Graph's
+    own caches are materialized first, by an exact census."""
+    from pgd_spark.operators.approximate import approximate_macro_counts
+
+    g = make_graph(spark, gnp(60, 0.15, 11))
+    macro_counts(g, strategy=strategy)
+    before = _persisted(spark)
+    approximate_macro_counts(g, fraction=0.5, strategy=strategy)
+    assert _persisted(spark) <= before
 
 
 def test_tailed_pass_plans_the_two_hop_join_once_per_branch(spark):

@@ -101,6 +101,30 @@ def test_sampled_census_records_graph_sizes(spark):
     assert t["total_2_1edge"] == g.num_edges()
 
 
+def test_sampled_broadcast_census_runs_only_the_census_jobs(spark):
+    """With strategy="broadcast" the sampled census reads m after its
+    census, which records it, and takes its moments from the census's
+    tag: no count job and no aggregation beside the edge collect."""
+    from pgd_spark.operators.approximate import approximate_macro_counts
+    from pgd_spark.operators.graphlets import edge_graphlet_counts
+
+    sc = spark.sparkContext
+
+    def jobs(op, group):
+        g = make_graph(spark, _hub_graph(seed=6))
+        sc.setJobGroup(group, group)
+        try:
+            op(g)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    census = jobs(lambda g: edge_graphlet_counts(g, "broadcast"), "census-jobs")
+    sampled = jobs(lambda g: approximate_macro_counts(g, 0.5, strategy="broadcast"), "sampled-jobs")
+    assert census >= 1 and sampled == census
+
+
 def test_macro_counts_from_counts_needs_no_degrees(spark):
     from pgd_spark.operators.graphlets import MACRO_KEYS, edge_graphlet_counts, macro_counts
 

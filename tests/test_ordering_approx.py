@@ -5,7 +5,7 @@ import random
 import pytest
 
 from pgd_spark.operators.approximate import approximate_macro_counts
-from pgd_spark.operators.graphlets import macro_counts
+from pgd_spark.operators.graphlets import MACRO_KEYS, macro_counts
 from pgd_spark.operators.ordering import edge_ordering
 from tests.conftest import make_graph
 
@@ -55,3 +55,29 @@ def test_approximate_reasonable_at_half(spark):
             rel = abs(approx[k] - exact[k]) / exact[k]
             assert rel < 0.35, (k, approx[k], exact[k])
     assert approx["total_2_1edge"] == exact["total_2_1edge"]  # m stays exact
+
+
+# every key of approximate_macro_counts (seed 42), in _PINNED_KEYS order,
+# recorded from the estimator before the exact and sampled censuses
+# shared one closure: pins its scaling and half-up rounding order
+_PINNED_KEYS = MACRO_KEYS + ["total_wedges", "global_cc", "_sample_fraction"]
+_PINNED = {
+    ((60, 0.15, 11), 0.3): [250, 1520, 101, 1715, 10767, 21637, 0, 152, 1676, 416, 3137, 10142,
+                            195162, 16152, 62714, 3797, 194287, 2018, 0.15014866204162536, 0.296],
+    ((60, 0.15, 11), 0.7): [250, 1520, 87, 1739, 10760, 21634, 0, 121, 1470, 407, 3326, 10380,
+                            194664, 16218, 63561, 3265, 194223, 2000, 0.1305, 0.668],
+    ((90, 0.08, 12), 0.3): [311, 3694, 80, 1890, 23348, 92162, 2, 84, 1296, 216, 3265, 10519,
+                            798934, 33654, 129996, 5479, 1571745, 2130, 0.11267605633802817,
+                            0.3086816720257235],
+    ((90, 0.08, 12), 0.7): [311, 3694, 60, 1963, 23263, 92194, 1, 51, 995, 235, 3694, 11307,
+                            793582, 33186, 134056, 4087, 1573996, 2143, 0.08399440037330845,
+                            0.7266881028938906],
+}
+
+
+@pytest.mark.parametrize("strategy", ["broadcast", "distributed"])
+@pytest.mark.parametrize("graph, fraction", list(_PINNED))
+def test_approximate_totals_pinned(spark, graph, fraction, strategy):
+    g = make_graph(spark, gnp(*graph))
+    got = approximate_macro_counts(g, fraction=fraction, strategy=strategy)
+    assert got == dict(zip(_PINNED_KEYS, _PINNED[graph, fraction]))
