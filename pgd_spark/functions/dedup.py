@@ -221,27 +221,20 @@ def _minhash_aggs(num_hashes: int, seed: int) -> list[Column]:
     ]
 
 
-def _sig_from_shingles(sh: DataFrame, num_hashes: int, seed: int) -> DataFrame:
-    """[id, sig] from a prepared [id, shingle, rh] table: k affine maps
-    of the one rolling hash, k min-aggregations in one shuffle."""
-    sig = sh.groupBy("id").agg(*_minhash_aggs(num_hashes, seed))
-    cols = ", ".join(f"h{i}" for i in range(num_hashes))
-    return sig.select("id", F.expr(f"array({cols}) AS sig"))
-
-
-def minhash_signatures(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    num_hashes: int = 32,
-    seed: int = 42,
-) -> DataFrame:
-    """[id, sig: array<long>] — k independent minhashes; ONE rolling
-    hash per shingle, then k affine maps (a_i*h+b_i mod 2^31-1) — k
-    aggregations in one shuffle, portable arithmetic throughout."""
-    sh = _shingles(df, id_col, text_col, n).withColumn("rh", char_hash("shingle", length=n))
-    return _sig_from_shingles(sh, num_hashes, seed)
+def _shingle_key(n: int) -> Column:
+    """The exact identity of a ``shingle`` for the verify sets.  For
+    n ≤ 3 its code points + 1 (0 past a short shingle's end), 21 bits
+    each, in one long: 0x10FFFF + 1 < 2^21, so three fit in 63 bits, as
+    one SQL string (one ``F.expr``).  For n ≥ 4 the shingle string."""
+    if n > 3:
+        return F.col("shingle")
+    key = "0L"
+    for i in range(1, n + 1):
+        key = (
+            f"shiftleft({key}, 21) | CASE WHEN length(shingle) >= {i} "
+            f"THEN ascii(substring(shingle, {i}, 1)) + 1 ELSE 0 END"
+        )
+    return F.expr(key)
 
 
 def minhash_dedup(
@@ -279,9 +272,9 @@ def minhash_dedup(
     rounding, returned as a local relation with the Spark plan's rows.
     Above the budget (or when the candidates alone would outgrow it at
     16 B per pair, or with broadcasting off) the Spark plan runs.  ONE
-    wide aggregation per doc computes the minhashes, the int verify-set
-    array, its size AND the hash-injectivity stats together (the
-    shingle stream crosses exactly one shuffle), and:
+    wide aggregation per doc computes the minhashes, the verify-set
+    array and its size together (the shingle stream crosses exactly one
+    shuffle), and:
 
     * Band buckets are ARRAYS of the band's minhash values, and
       candidate pairs come from ONE groupBy (:func:`.candidates.pair_frame`:
@@ -290,14 +283,11 @@ def minhash_dedup(
     * The exact verify joins the per-doc sets to the candidates on both
       ids (SHUFFLE_HASH) and intersects the arrays.
 
-    The Spark plan verifies over INT64 rolling-hash sets instead of
-    strings whenever the per-doc stats prove the rolling hash injective
-    on this corpus (every shingle length-n, every code point <
-    HASH_BASE, HASH_BASE**n < HASH_MOD → a positional encoding with no
-    modular wrap), with an exact distinct-count equality check as the
-    secondary gate and string sets as the final fallback; the driver
-    compares the shingles' code points — |A∩B| is the same on every
-    path.
+    Both placements verify over exact shingle identities, so |A∩B| is
+    the same on both: the Spark plan's set elements are the shingles'
+    code points packed into one long for n ≤ 3 and the shingle strings
+    for larger n (:func:`_shingle_key`); the driver packs or ranks the
+    code points (:func:`_text_shingles`).
 
     The Spark placement executes eagerly and releases its caches
     before returning (see _materialize_and_release); the driver
@@ -313,44 +303,24 @@ def minhash_dedup(
             return out
     rows = num_hashes // bands
     sh = _shingles(df, id_col, text_col, n).withColumn("rh", char_hash("shingle", length=n))
-    # largest code point among a shingle's n characters (``greatest``
-    # takes two or more)
-    cps = ", ".join(f"ascii(substring(shingle, {i}, 1))" for i in range(1, n + 1))
-    if n > 1:
-        cps = f"greatest({cps})"
     # ONE pass over the shingle stream computes, per doc: the k
-    # minhashes, the int verify-set, its size, AND the injectivity-
-    # proof stats — the shingle table is never materialized or cached.
+    # minhashes, the exact verify set and its size — the shingle table
+    # is never materialized or cached.
     per_doc = (
         sh.groupBy("id")
         .agg(
             *_minhash_aggs(num_hashes, seed),
-            F.collect_list("rh").alias("shs"),
+            F.collect_list(_shingle_key(n)).alias("shs"),
             F.count(F.lit(1)).alias("sz"),
-            F.sum((F.length("shingle") != n).cast("long")).alias("_bad"),
-            F.expr(f"max({cps}) AS _mcp"),
         )
         .cache()
     )
-    # ONE stats job fills the cache before the final job: three of its
+    # ONE job fills the cache before the final job: three of its
     # subtrees (the banded candidate side and both verify join sides)
     # read per_doc concurrently, and racing an unpopulated cache
     # recomputes the whole k-min aggregation once per subtree.  A global
-    # aggregate scans every partition, so this job caches all of
-    # per_doc while it reads the injectivity stats.
-    #
-    # int-verify proof: when every shingle has length n, every code
-    # point is < HASH_BASE, and HASH_BASE**n < HASH_MOD, the rolling
-    # hash is a base-HASH_BASE positional encoding with no modular wrap
-    # — injective outright, so |A∩B| over the int arrays equals |A∩B|
-    # over the strings.  Otherwise fall back to the corpus-wide
-    # distinct-count equality check (exact; one extra shingle pass),
-    # and failing that re-aggregate STRING verify sets (the r6 plan).
-    bad_len, max_cp = per_doc.agg(F.sum("_bad"), F.max("_mcp")).first()
-    use_int = (bad_len or 0) == 0 and (max_cp or 0) < HASH_BASE and HASH_BASE**n < HASH_MOD
-    if not use_int:
-        d_sh, d_rh = sh.agg(F.countDistinct("shingle"), F.countDistinct("rh")).first()
-        use_int = d_sh == d_rh
+    # aggregate scans every partition, so this job caches all of per_doc.
+    per_doc.count()
     bands_sql = ", ".join(
         "named_struct('band', {}, 'bucket', array({}))".format(
             bi, ", ".join(f"h{bi * rows + r}" for r in range(rows))
@@ -367,20 +337,8 @@ def minhash_dedup(
     # (shingle count ≤ text length, which a corpus pipeline chunks) —
     # the exploded (id, shingle) equi-join variant materialized
     # O(candidates × shingles) join rows (266M at sf0.1, 18.6 s).
-    # Counts are identical: |set ∩ set| over the same distinct shingles
-    # (see the int-hash proof above).
-    caches = [per_doc]
-    if use_int:
-        doc_sets = per_doc.select("id", "shs", "sz")
-    else:
-        # rare path (hash provably or possibly collides): string verify
-        # sets, re-aggregated once and cached (both join sides read it)
-        doc_sets = _string_sets(sh).cache()
-        doc_sets.count()
-        caches.append(doc_sets)
-
     def _ds(alias_id: str, alias_shs: str, alias_sz: str):
-        return doc_sets.select(
+        return per_doc.select(
             F.col("id").alias(alias_id),
             F.col("shs").alias(alias_shs),
             F.col("sz").alias(alias_sz),
@@ -394,15 +352,7 @@ def minhash_dedup(
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
     )
-    return _materialize_and_release(out, *caches)
-
-
-def _string_sets(sh: DataFrame) -> DataFrame:
-    """[id, shs, sz]: each doc's shingle STRINGS, the verify sets when
-    the rolling hash may collide on this corpus."""
-    return sh.groupBy("id").agg(
-        F.collect_list("shingle").alias("shs"), F.count(F.lit(1)).alias("sz")
-    )
+    return _materialize_and_release(out, per_doc)
 
 
 #: driver bytes per code point of the collected texts, rounded up from

@@ -32,7 +32,7 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 from pgd_spark.graph import Graph
 
@@ -391,6 +391,13 @@ def _carry_caches(out: DataFrame, counts: DataFrame) -> DataFrame:
 
 
 # ------------------------------------------------------------------- micro
+def _pairs(x: Column) -> Column:
+    """C(x, 2) of a non-negative long column in long arithmetic: x(x-1)
+    is even, so halving it is a shift (a double ``Divide`` rounds past
+    2^53)."""
+    return F.shiftright(x * (x - 1), 1)
+
+
 def micro_counts(
     g: Graph,
     strategy: str = "auto",
@@ -425,14 +432,10 @@ def micro_counts(
         tri.alias("triangle"),
         (rv + ru).cast("long").alias("two_star"),
         F.col("cliq").alias("clique4"),
-        ((tri * (tri - 1) / 2).cast("long") - F.col("cliq")).alias("chordal_cycle4"),
+        (_pairs(tri) - F.col("cliq")).alias("chordal_cycle4"),
         tailed.alias("tailed_tri4"),
         F.col("cyc").alias("cycle4"),
-        (
-            (rv * (rv - 1) / 2).cast("long")
-            + (ru * (ru - 1) / 2).cast("long")
-            - tailed
-        ).alias("star3"),
+        (_pairs(rv) + _pairs(ru) - tailed).alias("star3"),
         (rv * ru - F.col("cyc")).cast("long").alias("path4"),
     )
     return out if counts is not None else _carry_caches(out, census)
@@ -459,7 +462,7 @@ def _with_tailed_raw(g: Graph, counts: DataFrame) -> DataFrame:
     tailed = (
         hop.pair_hits(rows)
         .groupBy("v", "u")
-        .agg((F.sum("hits") / 2).cast("long").alias("tailed_raw"))
+        .agg(F.shiftright(F.sum("hits"), 1).alias("tailed_raw"))
     )
     return counts.join(tailed, ["v", "u"], "left").fillna(0, subset=["tailed_raw"])
 

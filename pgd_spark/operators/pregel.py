@@ -698,7 +698,7 @@ def triangle_count_per_vertex(g: Graph, counts: DataFrame | None = None) -> Data
     per_end = c.select(F.col("v").alias("x"), "tri").unionAll(c.select(F.col("u").alias("x"), "tri"))
     out = (
         per_end.groupBy(F.col("x").alias("v"))
-        .agg((F.sum("tri") / 2).cast("long").alias("triangles"))
+        .agg(F.shiftright(F.sum("tri"), 1).alias("triangles"))
     )
     # vertices with no incident triangle-bearing edges still appear (0)
     out = g.degrees().select("v").join(out, "v", "left").fillna(0, subset=["triangles"])

@@ -28,13 +28,13 @@ from pgd_spark.graph import Graph
 
 
 def vertex_micro_counts(g: Graph, counts: DataFrame | None = None, strategy: str = "auto") -> DataFrame:
-    from pgd_spark.operators.graphlets import _carry_caches, edge_graphlet_counts
+    from pgd_spark.operators.graphlets import _carry_caches, _pairs, edge_graphlet_counts
 
     c = counts if counts is not None else edge_graphlet_counts(g, strategy)
     tri, dv, du = F.col("tri"), F.col("deg_v"), F.col("deg_u")
-    chordal = (tri * (tri - 1) / 2).cast("long") - F.col("cliq")
+    tri_pairs = _pairs(tri)
+    chordal = tri_pairs - F.col("cliq")
     path4 = ((dv - tri - 1) * (du - tri - 1)).cast("long") - F.col("cyc")
-    tri_pairs = (tri * (tri - 1) / 2).cast("long")
 
     both = c.select(
         F.col("v").alias("x"),
@@ -54,9 +54,9 @@ def vertex_micro_counts(g: Graph, counts: DataFrame | None = None, strategy: str
         )
     )
     agg = both.groupBy(F.col("x").alias("v")).agg(
-        (F.sum("tri") / 2).cast("long").alias("tri_cont"),
-        (F.sum("cliq") / 3).cast("long").alias("clique4_cont"),
-        (F.sum("cyc") / 2).cast("long").alias("cycle4_cont"),
+        F.shiftright(F.sum("tri"), 1).alias("tri_cont"),
+        F.expr("sum(cliq) div 3 AS clique4_cont"),
+        F.shiftright(F.sum("cyc"), 1).alias("cycle4_cont"),
         F.sum("chordal").alias("chordal_chord"),
         F.sum("path4").alias("path4_mid_end"),
         F.sum("tri_pairs").alias("_tri_pairs"),
@@ -64,6 +64,14 @@ def vertex_micro_counts(g: Graph, counts: DataFrame | None = None, strategy: str
     )
     deg = g.degrees()
     d = F.col("degree")
+    # C(d,3) = C(d,2)·(d-2)/3, and 3 divides C(d,2) or d-2: that factor
+    # is divided first, so every term is an exact long wherever C(d,3)
+    # fits (the product d(d-1)(d-2) overflows past d ≈ 2.1M)
+    triples = F.expr(
+        "CASE WHEN (degree - 2) % 3 = 0"
+        " THEN shiftright(degree * (degree - 1), 1) * ((degree - 2) div 3)"
+        " ELSE (shiftright(degree * (degree - 1), 1) div 3) * (degree - 2) END"
+    )
     out = (
         deg.join(agg, "v", "left")
         .fillna(0)
@@ -72,14 +80,11 @@ def vertex_micro_counts(g: Graph, counts: DataFrame | None = None, strategy: str
             F.col("tri_cont"),
             F.col("clique4_cont"),
             F.col("cycle4_cont"),
-            ((d * (d - 1) / 2).cast("long") - F.col("tri_cont")).alias("star2_center"),
+            (_pairs(d) - F.col("tri_cont")).alias("star2_center"),
             F.col("star2_leaf"),
             (
-                (d * (d - 1) * (d - 2) / 6).cast("long")
-                - F.col("tri_cont") * (d - 2)
-                + F.col("_tri_pairs")
-                - F.col("clique4_cont")
-            ).cast("long").alias("star3_center"),
+                triples - F.col("tri_cont") * (d - 2) + F.col("_tri_pairs") - F.col("clique4_cont")
+            ).alias("star3_center"),
             F.col("chordal_chord"),
             F.col("path4_mid_end"),
         )

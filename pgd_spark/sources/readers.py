@@ -22,21 +22,6 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pgd_spark.graph import Graph, normalize_edges
 
 
-def _sniff_delimiter(path: str) -> str:
-    """First data line decides: comma > tab > space (cpp:196-228)."""
-    with open(path) as f:
-        for line in f:
-            s = line.strip()
-            if not s or s.startswith(("#", "%")):
-                continue
-            if "," in s:
-                return ","
-            if "\t" in s:
-                return "\t"
-            return " "
-    return ","
-
-
 def _attach_lineage(g: Graph, valid: DataFrame, mtx_identity: bool) -> None:
     """Thread file-order lineage through a reader (cpp:393-403 analog).
 

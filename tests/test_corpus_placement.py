@@ -102,10 +102,10 @@ def test_minhash_placements_agree(spark, cap, id_type):
         assert copies <= pairs
 
 
-def test_minhash_string_sets_placements_agree(spark, monkeypatch):
-    """Non-ASCII shingles whose rolling hashes collide: the Spark
-    placement falls back to string verify sets (built once), the driver
-    placement compares shingles by their code points and builds none."""
+def test_minhash_colliding_hashes_placements_agree(spark):
+    """Non-ASCII shingles whose rolling hashes collide: both placements
+    verify over exact shingle identities (packed code points), so the
+    colliding shingles do not count as shared."""
     # (0x20000, 0x51F1, 0x4E00) and (0x20001, 0x4E00, 0x4E00) hash alike
     # (0x51F1 = 0x4E00 + HASH_BASE): a positional code past its base
     s1, s2 = "\U00020000凱一", "\U00020001一一"
@@ -117,11 +117,7 @@ def test_minhash_string_sets_placements_agree(spark, monkeypatch):
     rows += [(10 + i, t + s2) for i, t in enumerate(base)]
     rows += [(20 + i, t[:-1] + s1) for i, t in enumerate(base)]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    calls = []
-    real = dedup._string_sets
-    monkeypatch.setattr(dedup, "_string_sets", lambda sh: calls.append(1) or real(sh))
     out = _agree(spark, lambda: minhash_dedup(docs, num_hashes=32, bands=8, threshold=0.8))
-    assert len(calls) == 1
     assert {(0, 20), (1, 21)} <= {(r.id_a, r.id_b) for r in out.collect()}
 
 
@@ -377,6 +373,30 @@ def test_minhash_driver_runs_two_jobs(spark):
             assert not _on_driver(out) and jobs > 2
         else:
             assert _on_driver(out) and 1 <= jobs <= most
+
+
+def test_minhash_spark_plan_runs_one_job_set(spark):
+    """Above the budget the Spark plan launches the same jobs for every
+    corpus: ASCII and Cyrillic text (code points past the rolling
+    hash's base) and shingles of 3 or 5 characters."""
+    rows = [(i, t) for i, t in _corpus() if i is not None]
+    cyrillic = [(i, t.translate(str.maketrans("aeiou", "аеиоу"))) for i, t in rows]
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    jobs = {}
+    with _budget(spark, -1):
+        for name, corpus, n in (("ascii3", rows, 3), ("cyrillic3", cyrillic, 3), ("ascii5", rows, 5)):
+            docs = spark.createDataFrame(corpus, "doc_id long, text string")
+            minhash_dedup(docs, n=n, num_hashes=32, bands=8, threshold=0.5)  # warm the plan
+            group = f"minhash-spark-jobs-{name}"
+            sc.setJobGroup(group, group)
+            try:
+                minhash_dedup(docs, n=n, num_hashes=32, bands=8, threshold=0.5)
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+                sc.setLocalProperty("spark.job.description", None)
+            jobs[name] = len(tracker.getJobIdsForGroup(group))
+    assert len(set(jobs.values())) == 1, jobs
 
 
 def _scan(spark, tmp_path, rows, schema):

@@ -4,6 +4,8 @@ equality: the driver tail of a broadcast census (CC, macro sums) equals
 the Spark paths it skips, and corrected micro rows agree across census
 strategies."""
 
+import numpy as np
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
@@ -77,12 +79,38 @@ hub_graphs = st.tuples(
 )
 
 
-def _hub_graph(spark, graph) -> Graph:
+def _hub_pairs(graph) -> list[tuple[int, int]]:
     edges, hubs = graph
     # spread the endpoints over three id ranges (x // 21 picks one)
     pairs = [(a + 1000 * (a // 21), b + 1000 * (a // 21)) for a, b in edges]
     pairs += [(1000 * (h // 21) + h, 1000 * (h // 21) + w) for h, ws in hubs for w in ws]
-    return make_graph(spark, pairs)
+    return pairs
+
+
+def _hub_graph(spark, graph) -> Graph:
+    return make_graph(spark, _hub_pairs(graph))
+
+
+@settings(max_examples=40, deadline=None)
+@given(hub_graphs)
+def test_c_kernel_equals_loop_kernel_on_hub_graphs(graph):
+    """The census's kernel axis: the C kernel's per-edge (tri, cliq,
+    cyc) equal the numpy loop's on the oriented state of planted-hub
+    graphs."""
+    from pgd_spark.operators.ckernel import edge_counts_batch_c, get_lib
+    from pgd_spark.operators.kernels import _oriented_state, edge_counts_batch
+
+    if get_lib() is None:
+        pytest.skip("no C toolchain on this host")
+    canon = sorted({(min(a, b), max(a, b)) for a, b in _hub_pairs(graph) if a != b})
+    if not canon:
+        return
+    src, dst = (np.array(col, dtype=np.int64) for col in zip(*canon))
+    uniq, indptr, indices, ov, ou, _ = _oriented_state(src, dst)
+    loop = edge_counts_batch(ov, ou, indptr, indices, len(uniq))
+    c = edge_counts_batch_c(ov, ou, indptr, indices, len(uniq))
+    for want, got in zip(loop, c):
+        assert got.tolist() == want.tolist()
 
 
 @settings(max_examples=4, deadline=None, suppress_health_check=list(HealthCheck))
