@@ -8,9 +8,16 @@ on a real cluster AQE coalesces from a high initial number instead.
 
 from __future__ import annotations
 
+import atexit
+import glob
+import hashlib
+import json
 import os
 import shutil
+import stat
+import subprocess
 import tempfile
+import warnings
 
 from pyspark.sql import SparkSession
 
@@ -74,8 +81,6 @@ def _mem_to_mb(mem: str) -> int:
     MiB convention is the right one).  An unparseable string (e.g. a
     typo'd PGD_SPARK_DRIVER_MEM) warns and falls back to 4096 MiB —
     never a silent wrong broadcast threshold (ADVICE r4)."""
-    import warnings
-
     s = mem.strip().lower()
     if len(s) > 1 and s.endswith("b") and s[-2] in "kmgt":
         s = s[:-1]
@@ -159,6 +164,298 @@ def shuffle_width(spark) -> int:
         return max(spark.sparkContext.defaultParallelism, 1)
 
 
+# -- session start: a per-user class-data archive ----------------------
+#
+# A JDK dynamic AppCDS archive holds the driver JVM's already-parsed
+# classes (Spark's ~290 jars).  The JVM maps it at start instead of
+# loading each class from its jar, which roughly halves get_spark and
+# the first job's class loading.  Only a JVM that get_spark itself
+# launches (local master, JDK >= 13) gets one.  The first such start
+# asks the JVM to write the archive at its exit, to a per-pid temp
+# name; this process's atexit hook waits for that JVM, checks the file
+# and renames it into place.  A truncated archive crashes the JVM that
+# maps it (SIGBUS in FileMapInfo::relocate_pointers_in_core_regions,
+# even with -XX:+VerifySharedSpaces), so no file reaches
+# -XX:SharedArchiveFile unless a JVM that exited 0 wrote it and a child
+# `java -Xshare:on -version` on the same classpath mapped it cleanly.
+# The JVM maps the archive's classes as code, so, as with ckernel's
+# .so, only a file this uid owns and no one else can write is used.
+
+# the CDS tags the JVM logs to stdout (a stale archive's one warning
+# line, and the ~90 KB of warnings a write prints), where they would
+# mix with the caller's output
+_CDS_LOG_OFF = "-Xlog:cds=off,cds+dynamic=off"
+_CDS_WAIT_S = 60
+# one driver JVM per process, so one decision: made when get_spark
+# launches it, kept while get_spark reuses it
+_cds = {"state": "skipped", "archive": None, "reason": "get_spark has launched no driver JVM"}
+_cds_warned: set[str] = set()
+_cds_pending: dict | None = None  # the archive write this process asked for
+
+
+def cds_decision() -> dict:
+    """How the current driver JVM started: ``{"state", "archive", "reason"}``.
+
+    ``state`` is ``"used"`` (it mapped ``archive``), ``"writing"`` (it
+    writes ``archive`` when it exits; later starts map it) or
+    ``"skipped"`` (no archive; ``reason`` says why)."""
+    return dict(_cds)
+
+
+def _cds_skip(reason: str, warn: bool = False) -> tuple[str, dict]:
+    """Record a start without CDS.  ``warn`` marks reasons that hide a
+    problem the user can fix; each warns once per process."""
+    _cds.update(state="skipped", archive=None, reason=reason)
+    if warn and reason not in _cds_warned:
+        _cds_warned.add(reason)
+        warnings.warn(f"pgd_spark: the driver JVM starts without a class-data archive: {reason}", stacklevel=4)
+    return "", {}
+
+
+def _cds_dir() -> str:
+    root = os.environ.get("XDG_CACHE_HOME") or os.path.join(os.path.expanduser("~"), ".cache")
+    return os.path.join(root, "pgd_spark", "cds")
+
+
+def _cds_java() -> tuple[str, str] | None:
+    """The ``java`` that spark-class runs ($JAVA_HOME/bin/java, else the
+    one on PATH), resolved, and its JDK's ``release`` file."""
+    home = os.environ.get("JAVA_HOME")
+    exe = os.path.join(home, "bin", "java") if home else shutil.which("java")
+    if not exe or not os.path.isfile(exe):
+        return None
+    exe = os.path.realpath(exe)
+    try:
+        with open(os.path.join(os.path.dirname(os.path.dirname(exe)), "release")) as f:
+            return exe, f.read()
+    except OSError:
+        return None
+
+
+def _jdk_major(release: str) -> int:
+    for line in release.splitlines():
+        if line.startswith("JAVA_VERSION="):
+            parts = line.split("=", 1)[1].strip('"').split(".")
+            try:
+                return int(parts[1] if parts[0] == "1" else parts[0])
+            except (IndexError, ValueError):
+                return 0
+    return 0
+
+
+def _private(st: os.stat_result) -> bool:
+    return st.st_uid == os.getuid() and not st.st_mode & 0o022
+
+
+def _pid_alive(pid: int) -> bool:
+    try:
+        os.kill(pid, 0)
+    except ProcessLookupError:
+        return False
+    except PermissionError:
+        pass
+    return True
+
+
+def _cds_key(java: str, release: str, spark_home: str, driver_mem: str, conf: dict) -> str:
+    """Everything that decides which classes the driver loads from
+    where: the JDK, Spark's jars (name, size, mtime), pyspark, the
+    compressed-oops mode (off from a 32 GiB heap) and any extra
+    classpath.  A key miss only costs a rewrite; the JVM itself checks
+    an archive's JDK and classpath and ignores one that does not match."""
+    import pyspark
+
+    jars = os.path.join(spark_home, "jars")
+    entries = [
+        (e.name, e.stat().st_size, e.stat().st_mtime_ns)
+        for e in sorted(os.scandir(jars), key=lambda e: e.name)
+    ] if os.path.isdir(jars) else []
+    material = [
+        java,
+        release,
+        entries,
+        pyspark.__version__,
+        _mem_to_mb(driver_mem) >= 32 * 1024,
+        [conf.get(k) for k in ("spark.jars", "spark.jars.packages", "spark.driver.extraClassPath")],
+        [os.environ.get(k) for k in ("HADOOP_CONF_DIR", "YARN_CONF_DIR", "SPARK_DIST_CLASSPATH")],
+    ]
+    return hashlib.sha256(json.dumps(material).encode()).hexdigest()[:24]
+
+
+def _cds_plan(master: str, driver_mem: str, conf: dict, caller_opts: str) -> tuple[str, dict]:
+    """The CDS flags for the driver JVM about to start, and the env
+    vars to swap in for its launch; records the decision."""
+    global _cds_pending
+    from pyspark import SparkContext
+    from pyspark.find_spark_home import _find_spark_home
+
+    if SparkContext._gateway is not None or "PYSPARK_GATEWAY_PORT" in os.environ:
+        return "", {}  # no JVM starts here
+    if _cds_pending is not None:
+        if _cds_pending["proc"].poll() is None:
+            return _cds_skip("this process's previous driver JVM is still writing its archive")
+        _cds_finish()
+    if not master.startswith("local"):
+        return _cds_skip("not a local master")
+    if any(f in caller_opts for f in ("-Xshare", "SharedArchiveFile", "ArchiveClassesAtExit")):
+        return _cds_skip("the caller's spark.driver.extraJavaOptions set class-data sharing")
+    found = _cds_java()
+    if found is None:
+        return _cds_skip("no java with a JDK release file")
+    java, release = found
+    if _jdk_major(release) < 13:
+        return _cds_skip("the JDK is older than 13")
+    spark_home = _find_spark_home()
+    # spark-class puts the conf dir on the classpath, and a JVM with a
+    # non-empty directory there writes no archive: its exit fails with
+    # "Cannot have non-empty directory in paths", exit code 1
+    conf_dir = os.environ.get("SPARK_CONF_DIR") or os.path.join(spark_home, "conf")
+    names = os.listdir(conf_dir) if os.path.isdir(conf_dir) else []
+    if any(not n.endswith(".template") for n in names):
+        return _cds_skip(f"the Spark conf dir {conf_dir} holds a real configuration", warn=True)
+    extra = [conf.get("spark.driver.extraClassPath")] + [
+        os.environ.get(k) for k in ("HADOOP_CONF_DIR", "YARN_CONF_DIR", "SPARK_DIST_CLASSPATH")
+    ]
+    for entry in os.pathsep.join(e for e in extra if e).split(os.pathsep):
+        if entry and os.path.isdir(entry) and os.listdir(entry):
+            return _cds_skip(f"{entry} is a non-empty directory on the driver classpath", warn=True)
+    cache = _cds_dir()
+    if any(c.isspace() or c in "\"'\\" for c in cache):
+        return _cds_skip(f"the cache dir {cache!r} holds a space or quote", warn=True)
+    try:
+        os.makedirs(os.path.join(cache, "conf"), mode=0o700, exist_ok=True)
+        st = os.lstat(cache)
+        if not stat.S_ISDIR(st.st_mode) or st.st_uid != os.getuid():
+            return _cds_skip(f"the cache dir {cache} is not this user's own directory", warn=True)
+        if stat.S_IMODE(st.st_mode) != 0o700:
+            os.chmod(cache, 0o700)
+        if not os.access(cache, os.W_OK):
+            raise PermissionError(f"{cache} is not writable")
+        for tmp in glob.glob(os.path.join(cache, "*.tmp")):
+            pid = tmp.rsplit(".", 2)[-2]
+            # a dead writer's file may be cut short; never promote it
+            if pid.isdigit() and int(pid) != os.getpid() and not _pid_alive(int(pid)):
+                os.unlink(tmp)
+        key = _cds_key(java, release, spark_home, driver_mem, conf)
+    except OSError as e:
+        return _cds_skip(f"the cache dir {cache} is not writable ({e})", warn=True)
+    env = {"SPARK_CONF_DIR": os.path.join(cache, "conf")} if names else {}
+    archive = os.path.join(cache, key + ".jsa")
+    try:
+        st = os.lstat(archive)
+    except FileNotFoundError:
+        st = None
+    if st is not None:
+        if not (stat.S_ISREG(st.st_mode) and _private(st)):
+            return _cds_skip(f"{archive} is not a file that only this user can write", warn=True)
+        _cds.update(state="used", archive=archive, reason="an archive for this JDK and classpath exists")
+        return f"-XX:SharedArchiveFile={archive} {_CDS_LOG_OFF}", env
+    tmp = os.path.join(cache, f"{key}.{os.getpid()}.tmp")
+    if os.path.exists(tmp):
+        os.unlink(tmp)
+    _cds.update(state="writing", archive=archive, reason="no archive for this JDK and classpath yet")
+    _cds_pending = {"java": java, "tmp": tmp, "archive": archive, "cache": cache}
+    return f"-XX:ArchiveClassesAtExit={tmp} {_CDS_LOG_OFF}", env
+
+
+def _cds_launch(builder, env: dict) -> SparkSession:
+    """``builder.getOrCreate()`` with ``env`` in os.environ for the
+    launch only; binds a pending archive write to the JVM it started."""
+    global _cds_pending
+    from pyspark import SparkContext
+
+    saved = {k: os.environ.get(k) for k in env}
+    os.environ.update(env)
+    try:
+        spark = builder.getOrCreate()
+    except BaseException:
+        if _cds_pending is not None and "proc" not in _cds_pending:
+            _cds_pending = None
+        raise
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                os.environ.pop(k, None)
+            else:
+                os.environ[k] = v
+    if _cds_pending is not None and "proc" not in _cds_pending:
+        proc = getattr(SparkContext._gateway, "proc", None)
+        if proc is None:
+            _cds_pending = None
+        else:
+            _cds_pending["proc"] = proc
+            # the child check must map the archive on the classpath it
+            # was written with, or the JVM would just ignore it
+            _cds_pending["classpath"] = spark._jvm.System.getProperty("java.class.path")
+            atexit.unregister(_cds_finish)
+            atexit.register(_cds_finish)
+    return spark
+
+
+def _cds_check(job: dict) -> bool:
+    """A child JVM maps the archive with -Xshare:on (an archive it cannot
+    use fails it) on the writer's classpath; any crash or error fails."""
+    try:
+        return subprocess.run(
+            [job["java"], f"-XX:SharedArchiveFile={job['tmp']}", "-Xshare:on", _CDS_LOG_OFF,
+             "-XX:ErrorFile=/dev/null", "-XX:-CreateCoredumpOnCrash",
+             "-cp", job["classpath"], "-version"],
+            stdin=subprocess.DEVNULL, stdout=subprocess.DEVNULL, stderr=subprocess.DEVNULL,
+            timeout=_CDS_WAIT_S,
+        ).returncode == 0
+    except (OSError, subprocess.TimeoutExpired):
+        return False
+
+
+def _cds_finish() -> None:
+    """Let the archive-writing JVM exit and promote its file.  The JVM
+    writes at its own exit, so stop the session, close the gateway's
+    stdin (the JVM exits on EOF) and wait, bounded; then check the file
+    and rename it into place.  Registered with atexit, so no JVM
+    outlives this process while it writes."""
+    global _cds_pending
+    job, _cds_pending = _cds_pending, None
+    if job is None:
+        return
+    proc, tmp = job["proc"], job["tmp"]
+    if proc.poll() is None:
+        from pyspark import SparkContext
+
+        try:
+            if SparkContext._active_spark_context is not None:
+                SparkContext._active_spark_context.stop()
+        except Exception:
+            pass
+        try:
+            proc.stdin.close()
+        except (AttributeError, OSError):
+            pass
+        try:
+            proc.wait(timeout=_CDS_WAIT_S)
+        except subprocess.TimeoutExpired:
+            proc.kill()
+            proc.wait()
+    try:
+        if proc.returncode == 0 and os.path.isfile(tmp) and _cds_check(job):
+            os.chmod(tmp, 0o400)
+            os.replace(tmp, job["archive"])
+            # one archive per user: drop other keys' archives
+            for old in glob.glob(os.path.join(job["cache"], "*.jsa")):
+                if old != job["archive"]:
+                    os.unlink(old)
+            return
+        if os.path.exists(tmp):
+            os.unlink(tmp)
+    except OSError:
+        return
+    _cds_skip(
+        f"the JVM that was to write {job['archive']} exited with code {proc.returncode}"
+        if proc.returncode
+        else f"the archive the JVM wrote to {tmp} is missing or failed its check",
+        warn=True,
+    )
+
+
 def get_spark(
     app_name: str = "pgd_spark",
     master: str | None = None,
@@ -186,6 +483,12 @@ def get_spark(
     jvm_opts = f"-Xms{driver_mem}"
     if os.environ.get("PGD_SPARK_PRETOUCH") == "1":
         jvm_opts += " -XX:+AlwaysPreTouch"
+    # one option string: ours first, the caller's last, so the caller
+    # wins a conflict without dropping the heap pin or the CDS flags
+    conf = dict(extra_conf or {})
+    caller_opts = conf.pop("spark.driver.extraJavaOptions", "")
+    cds_opts, cds_env = _cds_plan(master, driver_mem, conf, caller_opts)
+    jvm_opts = " ".join(o for o in (jvm_opts, cds_opts, caller_opts) if o)
     builder = (
         SparkSession.builder.master(master)
         .appName(app_name)
@@ -214,11 +517,8 @@ def get_spark(
             ),
         )
     )
-    if jvm_opts:
-        builder = builder.config("spark.driver.extraJavaOptions", jvm_opts)
-    if not master.startswith("local") and "spark.executor.extraJavaOptions" not in (
-        extra_conf or {}
-    ):
+    builder = builder.config("spark.driver.extraJavaOptions", jvm_opts)
+    if not master.startswith("local") and "spark.executor.extraJavaOptions" not in conf:
         # Cluster masters: executor JVMs need the same fixed/pre-faulted
         # heap as the driver, or every sort/agg-heavy stage pays the
         # lazy page-fault storm per executor — measured on a standalone
@@ -228,7 +528,7 @@ def get_spark(
         # 33 s end-to-end).  -Xms is pinned to spark.executor.memory so
         # the committed heap never shrinks/re-faults mid-job; pretouch
         # follows the same PGD_SPARK_PRETOUCH opt-in as the driver.
-        exec_mem = (extra_conf or {}).get("spark.executor.memory") or os.environ.get(
+        exec_mem = conf.get("spark.executor.memory") or os.environ.get(
             "PGD_SPARK_EXECUTOR_MEM"
         )
         if exec_mem:
@@ -247,9 +547,9 @@ def get_spark(
         builder = builder.config("spark.local.dir", shm)
     except OSError:
         pass
-    for k, v in (extra_conf or {}).items():
+    for k, v in conf.items():
         builder = builder.config(k, v)
-    spark = builder.getOrCreate()
+    spark = _cds_launch(builder, cds_env)
     spark.sparkContext.setLogLevel("WARN")
     _ship_package(spark)
     return spark
